@@ -141,6 +141,17 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** `s` as a quoted JSON string: backslashes and quotes escaped, control
+    * characters (newlines in error messages) turned into spaces.
+    */
+  private[graft] def jsonString(s: String): String =
+    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
+      .replaceAll("[\\x00-\\x1f]", " ") + "\""
+
+  /** The line that announces where the full artifact was written. */
+  private[graft] def artifactFileLine(path: java.nio.file.Path): String =
+    s"""{"metric":"artifact_file","path":${jsonString(path.toAbsolutePath.toString)}}"""
+
   /** Three timed passes over `queries` -> the two JSON artifact lines.
     * Pass 1 (cold) includes per-plan Janino whole-stage-codegen compilation
     * and .cache() materialization — comparable with BASELINE.md / round-1
@@ -176,9 +187,7 @@ object Bench {
     val errors = (coldErrs ++ w1Errs ++ w2Errs).distinct
     def js(m: Map[String, Double]) =
       m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    def jsErr(es: Seq[String]) =
-      es.map(e => "\"" + e.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replaceAll("[\\n\\r\\t]", " ") + "\"").mkString("[", ",", "]")
+    def jsErr(es: Seq[String]) = es.map(jsonString).mkString("[", ",", "]")
     val coldTotal = cold.values.filter(_ >= 0).sum
     val warmTotal = warm.values.filter(_ >= 0).sum
     val bridgeGreen = warm.filter { case (k, v) => bridge63(k) && v >= 0 }
@@ -282,7 +291,7 @@ object Bench {
           java.nio.file.Files.write(out,
             lines.mkString("", "\n", "\n").getBytes(
               java.nio.charset.StandardCharsets.UTF_8))
-          println(s"""{"metric":"artifact_file","path":"${out.toAbsolutePath}"}""")
+          println(artifactFileLine(out))
         } catch { case e: Exception =>
           println(s"""{"metric":"artifact_file","error":"${e.getClass.getSimpleName}"}""")
         }

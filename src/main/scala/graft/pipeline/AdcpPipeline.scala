@@ -5,56 +5,75 @@ import org.apache.spark.sql.functions._
 
 /** Pipeline entry points mirroring the reference's three public
   * compositions (process_adcp.py:2046-2083). Each stage is a lazy
-  * `DataFrame => DataFrame`; one Catalyst plan per entry point, actions
-  * only at the driver-side solves (heading calibration, shear-correction
-  * vectors, regrid ladder, bias coefficient) and the final sink.
+  * `DataFrame => DataFrame`; actions run at the driver-side solves (heading
+  * calibration, shear-correction vectors, regrid ladder, bias coefficient),
+  * at the stage barriers and at the final sink.
+  *
+  * A BARRIER is an eager local checkpoint (`localCheckpoint(eager = true)`):
+  * it materializes a stage's output once and replaces its lineage with a
+  * plan leaf. It bounds two costs. Recomputation: a stage that references
+  * an earlier array column more than once would otherwise re-run it, which
+  * grows exponentially with chain depth (measured: 4,800 pings took 392 s
+  * fully collapsed vs 19 s with barriers). Plan size: a persisted frame
+  * keeps its whole upstream plan, so every later `withColumn`, join,
+  * explain string and adaptive re-plan would work on a plan the size of
+  * the whole mission; after a checkpoint it works on one stage's plan.
+  *
+  * The trade-off, the same one `Dedup.connectedComponents` makes: a local
+  * checkpoint lives in executor block storage only, so losing an executor
+  * fails the run instead of recomputing the lost partitions. At cluster
+  * scale a reliable checkpoint or an intermediate write is the durable
+  * form of the same cut.
   */
 object AdcpPipeline {
 
-  // every persist the pipeline creates internally (stage barriers, the DAC
-  // glider) is registered here so entry-point callers can release them once
-  // the final sink has materialized — the cache discipline the Axes
-  // scaladoc asks of callers, extended to the pipeline's own barriers
-  private val trackedPersists =
-    new scala.collection.mutable.ArrayBuffer[DataFrame]()
+  // the checkpoint RDDs behind every barrier the pipeline creates (stage
+  // barriers, the DAC glider, the referenced grid), so entry-point callers
+  // can free their blocks after their last action. The RDDs themselves are
+  // tracked: unpersisting a checkpointed Dataset leaves its LogicalRDD's
+  // blocks in place
+  private val trackedCheckpoints =
+    new scala.collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[_]]()
 
-  private def trackPersist(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    trackedPersists.synchronized { trackedPersists += p }
+  private def barrier(df: DataFrame): DataFrame = {
+    val p = df.localCheckpoint(eager = true)
+    val rdds = p.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }
+    trackedCheckpoints.synchronized { trackedCheckpoints ++= rdds }
     p
   }
 
-  /** Unpersist every cache the pipeline created (stage barriers, DAC
-    * glider). Call after the final output has been materialized/written;
-    * long-lived sessions otherwise accumulate cached RDDs across runs.
+  /** Free the blocks of every barrier the pipeline created. The outputs
+    * of the runs before the call can no longer be evaluated afterwards
+    * (an action on them fails: their checkpoint blocks are gone), so
+    * call it after the caller's last action on those outputs, or after
+    * caching or writing what it still needs. Long-lived sessions otherwise
+    * accumulate checkpoint blocks across runs.
     *
-    * Session-wide by design (like `spark.catalog.clearCache` scoped to
-    * this pipeline's caches): with concurrent pipeline runs in one JVM it
-    * releases the barriers of ALL in-flight runs, so serialize runs or
-    * call it only at a quiescent point.
+    * Process-wide by design: with concurrent pipeline runs in one JVM it
+    * frees the barriers of ALL in-flight runs, so serialize runs or call
+    * it only at a quiescent point.
     */
-  def releaseCaches(): Unit = trackedPersists.synchronized {
-    trackedPersists.foreach(_.unpersist())
-    trackedPersists.clear()
+  def releaseCaches(): Unit = trackedCheckpoints.synchronized {
+    trackedCheckpoints.foreach(_.unpersist(blocking = true))
+    trackedCheckpoints.clear()
   }
 
   /** shear_from_adcp (:2046-2057): glider-aligned, QC'd, regridded,
     * 3-beam-solved, ENU-rotated shear per ping.
     *
-    * Stage BARRIERS matter as much as the stages: `withColumn` chains
-    * collapse into a single projection at the API level, and every stage
-    * that references an earlier array column more than once doubles its
-    * recomputation — exponential in chain depth (measured: 4,800 pings took
-    * 392 s fully collapsed vs 19 s with barriers). Each multi-reference
-    * stage therefore ends at a persisted boundary; at cluster scale these
-    * are the natural checkpoint/intermediate-write points.
+    * Each multi-reference stage ends at a barrier (see [[AdcpPipeline]]):
+    * `withColumn` chains collapse into a single projection at the API
+    * level, so without the cut every stage that reads an earlier array
+    * column more than once would re-run it. The call therefore runs the
+    * barrier jobs itself; the returned shear is lazy from the last barrier.
     */
   def shearFromAdcp(
       adcpRaw: DataFrame, gliderRaw: DataFrame, opts0: Options,
       cellSize: Double, blankingDistance: Double,
       solveHeading: Boolean = true,
       missionCols: Seq[String] = Nil): (DataFrame, DataFrame) = {
-    def barrier(df: DataFrame): DataFrame = trackPersist(df)
     // resolve declination/geomag targets through the provider seam (no-op
     // without a configured provider — opts0.geomag defaults to None);
     // with mission keys every mission gets its own field target
@@ -123,16 +142,18 @@ object AdcpPipeline {
       btRaw: Option[DataFrame], spark: SparkSession,
       missionCols: Seq[String] = Nil): (DataFrame, GridOutput.Axes) = {
     // the DAC-augmented glider feeds ~10 downstream scans (axes + every
-    // gridded variable + profile datetimes); persist it or each scan
-    // re-runs the dead-reckoning windows and interp joins
-    val glider = trackPersist(GliderStages.getDac(adcp0, glider0, missionCols))
+    // gridded variable + profile datetimes); a barrier keeps each scan
+    // from re-running the dead-reckoning windows and interp joins
+    val glider = barrier(GliderStages.getDac(adcp0, glider0, missionCols))
     val adcp = btRaw match {
       case Some(bt) => GliderStages.bottomTrack(opts)(adcp0, bt, missionCols)
       case None => adcp0
     }
     val ax = GridOutput.axes(glider, opts, missionCols)
     val grid0 = GridOutput.gridData(adcp, glider, ax)
-    val referenced = GridOutput.referenceShear(grid0, ax, opts.yRes)
+    // calcBias reads the referenced grid twice (coefficient statistics,
+    // final columns): the barrier runs its three shuffles and windows once
+    val referenced = barrier(GridOutput.referenceShear(grid0, ax, opts.yRes))
     val biased = GridOutput.calcBias(referenced, ax, spark)
     (GridOutput.makeDataset(biased, ax), ax)
   }

@@ -88,10 +88,14 @@ object PipelineBench {
       f""","velocity_seconds":${(System.nanoTime() - t1) / 1e9}%.2f,"grid_cells_with_E":$nE"""
     } else ""
     // release every pipeline cache and prove nothing stays cached — the
-    // discipline long-lived sessions need (Axes scaladoc)
+    // discipline long-lived sessions need (Axes scaladoc). The barriers'
+    // checkpoint blocks are invisible to the cache manager, so the count is
+    // of persistent RDDs (at least 1 while a cache entry stays registered):
+    // a leaked barrier shows here
     AdcpPipeline.releaseCaches()
     glider.unpersist(); adcpRaw.unpersist()
-    val cachedAfter = if (spark.sharedState.cacheManager.isEmpty) 0 else 1
+    val cachedAfter = math.max(spark.sparkContext.getPersistentRDDs.size,
+      if (spark.sharedState.cacheManager.isEmpty) 0 else 1)
     val missionJson = if (multi) s""","missions":$nMissions""" else ""
     println(f"""{"mode":"$mode"$missionJson,"pings":$nPings,"finite_shear_cells":$cells,"seconds":$secs%.2f,"pings_per_sec":${nPings / secs}%.0f$fullJson,"peak_heap_mb":$peakHeapMb,"cached_rdds_after_release":$cachedAfter}""")
     spark.stop()

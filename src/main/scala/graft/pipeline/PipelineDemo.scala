@@ -35,7 +35,8 @@ object PipelineDemo {
     axes.release()
     AdcpPipeline.releaseCaches()
     shear.unpersist()
-    val clean = spark.sharedState.cacheManager.isEmpty
+    val clean = spark.sharedState.cacheManager.isEmpty &&
+      spark.sparkContext.getPersistentRDDs.isEmpty
     println(f"""{"pings":$nPings,"mean_sh_e":$meanShE%.6f,"grid_cells_with_E":$finiteE,"profiles":${axes.nProfiles},"depth_bins":${axes.nY},"caches_released":$clean}""")
     spark.stop()
   }

@@ -98,6 +98,14 @@ class BenchSpec extends AnyFunSuite {
     assert((JsonMethods.parse(compact) \ "n_errors").extract[Int] == 0)
   }
 
+  test("the artifact_file line stays valid JSON for a path with a quote") {
+    val path = java.nio.file.Paths.get("bench \"out\" \\ dir", "artifact.jsonl")
+    implicit val fmts: Formats = DefaultFormats
+    val j = JsonMethods.parse(Bench.artifactFileLine(path))
+    assert((j \ "metric").extract[String] == "artifact_file")
+    assert((j \ "path").extract[String] == path.toAbsolutePath.toString)
+  }
+
   test("per-query lines: one short JSONL line each, consistent with the full maps") {
     // the r19 driver-parseability contract (two rounds of PERF per_query
     // were lost to tail truncation of the 12 KB full line): every query
