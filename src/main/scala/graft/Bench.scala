@@ -53,7 +53,7 @@ object Bench {
   }
 
   /** The query-id-prefixed temp dirs currently under the bench-private
-    * root (`graft.tmpdir`, set by [[main]]; [[graft.queries.Common.tempDir]]
+    * root (`graft.tmpdir`, set by [[GraftSession.run]]; [[graft.queries.Common.tempDir]]
     * routes every query's index-lifecycle dirs there) — falling back to
     * java.io.tmpdir for embedded callers that didn't set the property.
     * The private root is what makes the sweep safe: a CONCURRENT process
@@ -69,10 +69,10 @@ object Bench {
       .toSet
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory)
       Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
+    f.delete(): Unit
   }
 
   /** The round-1 63-query set (the keys of BENCH_r01.json), frozen as the
@@ -139,6 +139,16 @@ object Bench {
       .agg(org.apache.spark.sql.functions.sum("id").as("s"))
       .selectExpr("sum(s)").collect()
     (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Sum of the JVM heap pools' peak usage in MB, which the rehearsal
+    * mains report with their results.
+    */
+  private[graft] def peakHeapMb: Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getType == java.lang.management.MemoryType.HEAP)
+      .map(_.getPeakUsage.getUsed).sum / (1024 * 1024)
   }
 
   /** `s` as a quoted JSON string: backslashes and quotes escaped, control
@@ -223,83 +233,47 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // bench-private temp root: queries' index dirs land here (via
-    // Common.tempDir) so the per-query sweep owns everything it deletes
-    System.setProperty("graft.tmpdir", java.nio.file.Files
-      .createTempDirectory("graft_bench_").toString)
-    // try/finally: a failing query must not leak the whole private root —
-    // the residue class the root exists to eliminate
-    try {
-      // AQE partition-coalescing floor (r18, guide §2.2/§2.6): the default
-      // minPartitionSize (1m) makes parallelism-first coalescing merge a
-      // small-but-CPU-DENSE shuffle (token explode + hashing, window
-      // gradient chains — kilobytes per row, milliseconds per row) down
-      // to 3-4 tasks on a 32-core host; 64k keeps those stages wide.
-      // Scale-invariant by construction: the floor binds only when a
-      // shuffle's total bytes are of order partitions x 1 MB — at
-      // production shuffle sizes it is a no-op (coalescing still merges
-      // toward the advisory target). Env-overridable for cluster tuning.
-      val minPart = sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", minPart)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      // stop in a finally: a render() failure must not let the outer
-      // tmp-root delete race a still-running session's spill/cache dirs
-      // (delete errors would also mask the original exception)
+    GraftSession.run() { spark =>
+      // Optional exclusion for outsized-SF rehearsal runs (e.g. the
+      // probe-all oracle-identity queries q90/q94 are quadratic in
+      // corpus size BY DESIGN and have a separate scale path in
+      // SemDedupBench). Never silent: the dropped set is announced on
+      // its own artifact line, and the driver's per-round runs don't
+      // set the variable, so the contract artifact is always full.
+      val excluded = sys.env.get("SPARK_GRAFT_BENCH_EXCLUDE")
+        .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+        .getOrElse(Set.empty[String])
+      // A typo'd name would be ANNOUNCED as excluded while the query
+      // actually runs — the artifact would misstate what was measured.
+      // Fail loudly instead.
+      val unknown = excluded -- SparkEntry.queries.map(_._1).toSet
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_BENCH_EXCLUDE names unknown queries: " +
+          s"${unknown.toSeq.sorted.mkString(",")}")
+      if (excluded.nonEmpty)
+        println(s"""{"metric":"bench_excluded","queries":[""" +
+          excluded.toSeq.sorted.map("\"" + _ + "\"").mkString(",") +
+          """],"reason":"SPARK_GRAFT_BENCH_EXCLUDE set by caller"}""")
+      val qs = SparkEntry.queries.filter {
+        case (k, _) => !excluded(k)
+      }
+      val lines = render(qs, spark, sfDir)
+      // belt-and-braces against stdout tail truncation: the FULL artifact
+      // also lands in a file (best-effort — a read-only cwd must not fail
+      // the bench). Announced BEFORE the lines so the compact totals line
+      // stays the final stdout line (tail-parsing consumers rely on it).
       try {
-        spark.sparkContext.setLogLevel("WARN")
-        // warm the session (task scheduling, codegen compiler, parquet
-        // footers) so the first timed query doesn't absorb ~3s of
-        // one-time startup cost
-        spark.range(1000).selectExpr("sum(id)").count()
-        // Optional exclusion for outsized-SF rehearsal runs (e.g. the
-        // probe-all oracle-identity queries q90/q94 are quadratic in
-        // corpus size BY DESIGN and have a separate scale path in
-        // SemDedupBench). Never silent: the dropped set is announced on
-        // its own artifact line, and the driver's per-round runs don't
-        // set the variable, so the contract artifact is always full.
-        val excluded = sys.env.get("SPARK_GRAFT_BENCH_EXCLUDE")
-          .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-          .getOrElse(Set.empty[String])
-        // A typo'd name would be ANNOUNCED as excluded while the query
-        // actually runs — the artifact would misstate what was measured.
-        // Fail loudly instead.
-        val unknown = excluded -- SparkEntry.queries.map(_._1).toSet
-        require(unknown.isEmpty,
-          s"SPARK_GRAFT_BENCH_EXCLUDE names unknown queries: " +
-            s"${unknown.toSeq.sorted.mkString(",")}")
-        if (excluded.nonEmpty)
-          println(s"""{"metric":"bench_excluded","queries":[""" +
-            excluded.toSeq.sorted.map("\"" + _ + "\"").mkString(",") +
-            """],"reason":"SPARK_GRAFT_BENCH_EXCLUDE set by caller"}""")
-        val qs = SparkEntry.queries.filter {
-          case (k, _) => !excluded(k)
-        }
-        val lines = render(qs, spark, sfDir)
-        // belt-and-braces against stdout tail truncation: the FULL artifact
-        // also lands in a file (best-effort — a read-only cwd must not fail
-        // the bench). Announced BEFORE the lines so the compact totals line
-        // stays the final stdout line (tail-parsing consumers rely on it).
-        try {
-          val out = java.nio.file.Paths.get(sys.env.getOrElse(
-            "SPARK_GRAFT_BENCH_ARTIFACT", "plans/bench_artifact.jsonl"))
-          Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
-          java.nio.file.Files.write(out,
-            lines.mkString("", "\n", "\n").getBytes(
-              java.nio.charset.StandardCharsets.UTF_8))
-          println(artifactFileLine(out))
-        } catch { case e: Exception =>
-          println(s"""{"metric":"artifact_file","error":"${e.getClass.getSimpleName}"}""")
-        }
-        lines.foreach(println)
-      } finally spark.stop()
-    } finally {
-      deleteRecursively(new java.io.File(System.getProperty("graft.tmpdir")))
-      System.clearProperty("graft.tmpdir")
+        val out = java.nio.file.Paths.get(sys.env.getOrElse(
+          "SPARK_GRAFT_BENCH_ARTIFACT", "plans/bench_artifact.jsonl"))
+        Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
+        java.nio.file.Files.write(out,
+          lines.mkString("", "\n", "\n").getBytes(
+            java.nio.charset.StandardCharsets.UTF_8))
+        println(artifactFileLine(out))
+      } catch { case e: Exception =>
+        println(s"""{"metric":"artifact_file","error":"${e.getClass.getSimpleName}"}""")
+      }
+      lines.foreach(println)
     }
   }
 }

@@ -60,17 +60,25 @@ object PlanAudit {
     "q55_ann_bruteforce", "q56b_ann_ivf")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val violations = GraftSession.run() { spark =>
+      if (args.nonEmpty) { args.foreach(detail(spark, dir, _)); Nil }
+      else audit(spark, dir)
+    }
+    if (violations.nonEmpty) {
+      System.err.println(s"\nPLAN AUDIT VIOLATIONS (${violations.size}):")
+      violations.foreach(v => System.err.println(s"  $v"))
+      sys.exit(1)
+    }
+    if (args.isEmpty)
+      println(s"\nplan audit clean across ${SparkEntry.queries.size} queries")
+  }
+
+  /** Audits every query, prints the headline details, returns violations. */
+  private def audit(spark: SparkSession, dir: String): Seq[String] = {
     val headline = Seq("q01_scan_filter_project", "q13_join_broadcast",
       "q04_grid2d_mean", "q10_interp_join", "q51_dedup_minhash_lsh",
       "q55_ann_bruteforce", "q47_quality_filter", "q48_dedup_corpus")
-    if (args.nonEmpty) { args.foreach(detail(spark, dir, _)); spark.stop(); return }
 
     // table name -> column count, from the parquet footers themselves
     val tables = Seq("region", "nation", "customer", "supplier", "part",
@@ -110,13 +118,7 @@ object PlanAudit {
       else violations.drop(nBefore).foreach(v => println(s"audit $name: VIOLATION — $v"))
     }
     headline.foreach(detail(spark, dir, _))
-    spark.stop()
-    if (violations.nonEmpty) {
-      System.err.println(s"\nPLAN AUDIT VIOLATIONS (${violations.size}):")
-      violations.foreach(v => System.err.println(s"  $v"))
-      sys.exit(1)
-    }
-    println(s"\nplan audit clean across ${SparkEntry.queries.size} queries")
+    violations.toSeq
   }
 
   /** True iff the plan string contains a WindowGroupLimit node in Partial

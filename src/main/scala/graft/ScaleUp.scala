@@ -177,11 +177,12 @@ object ScaleUp {
     val mode = if (args.length > 2) args(2) else "neardup"
     require(Set("neardup", "unique")(mode), s"unknown mode $mode")
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    GraftSession.run(Map("spark.sql.shuffle.partitions" -> "64"))(
+      build(_, factor, outDir, mode, srcDir))
+  }
+
+  private def build(spark: org.apache.spark.sql.SparkSession, factor: Int,
+      outDir: String, mode: String, srcDir: String): Unit = {
     def tbl(n: String) = graft.queries.Common.table(spark, srcDir, n)
     // The replication input: a driver-SF source table is a single ~10 MB
     // parquet file = ONE scan partition, and the crossJoin(broadcast)
@@ -236,6 +237,5 @@ object ScaleUp {
     Seq("region", "nation", "supplier").foreach(n => write(tbl(n), n, 1))
 
     println(s"wrote ${factor}x all-tables ($mode) from $srcDir to $outDir")
-    spark.stop()
   }
 }

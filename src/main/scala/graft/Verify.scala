@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,67 +8,41 @@ object Verify {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // private temp root for the queries' index-lifecycle dirs (the Bench
-    // discipline): a full run builds ~30 temp indexes that otherwise
-    // accumulate in the shared tmpdir forever
-    System.setProperty("graft.tmpdir", java.nio.file.Files
-      .createTempDirectory("graft_verify_").toString)
-    // try/finally: a failing query must not leak the private root
-    try {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // stop in a finally: a failure below must not let the outer tmp-root
-    // delete race a still-running session's spill/cache dirs
-    try {
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // the Bench.pass cache-scope hygiene: dead persisted blocks from a
-      // hundred prior queries otherwise squeeze the storage-heavy ones
-      graft.operators.Dedup.releaseCaches()
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // Restrict the oracle dump to the queries that actually ran: some
-    // oracles (q74/q77/q79) embed driver-computed literal tables stashed
-    // by their query entry — dumping them for a query that did NOT run
-    // this invocation would silently emit a structurally different
-    // fallback form.
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    } finally spark.stop()
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(System.getProperty("graft.tmpdir")))
-      System.clearProperty("graft.tmpdir")
+    GraftSession.run() { spark =>
+      new java.io.File(outDir).mkdirs()
+      SparkEntry.queries
+        .filter { case (name, _) => only.forall(_.contains(name)) }
+        .foreach { case (name, fn) =>
+          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          catch { case e: Throwable =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          }
+          // the Bench.pass cache-scope hygiene: dead persisted blocks from a
+          // hundred prior queries otherwise squeeze the storage-heavy ones
+          graft.operators.Dedup.releaseCaches()
+        }
+      // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+      // — a tab or CR in builder-authored SQL would otherwise make the
+      // driver's json.load fail and silently zero the round's correctness.
+      def q(s: String): String = "\"" + s.flatMap {
+        case '"'  => "\\\""
+        case '\\' => "\\\\"
+        case '\n' => "\\n"
+        case '\r' => "\\r"
+        case '\t' => "\\t"
+        case c if c < ' ' => f"\\u${c.toInt}%04x"
+        case c => c.toString
+      } + "\""
+      // Restrict the oracle dump to the queries that actually ran: some
+      // oracles (q74/q77/q79) embed driver-computed literal tables stashed
+      // by their query entry — dumping them for a query that did NOT run
+      // this invocation would silently emit a structurally different
+      // fallback form.
+      val json = SparkEntry.oracleSql
+        .filter { case (k, _) => only.forall(_.contains(k)) }
+        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     }
   }
 }

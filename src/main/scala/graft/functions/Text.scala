@@ -48,7 +48,7 @@ object Text {
   /** 48-bit integer from the leading 12 hex chars of md5 — the one digest
     * per string everything else derives from. Routed through the native
     * [[graft.plans.NativeHash48]] expression (registered by
-    * `queries/Common.table` and `TestSpark`); `hash48Builtin` keeps the
+    * [[graft.plans.Natives.ensure]]); `hash48Builtin` keeps the
     * composed-builtins form for environments without the registration.
     */
   def hash48(s: Column): Column =

@@ -36,16 +36,14 @@ object AnnBench {
     val n = if (args.length > 0) args(0).toLong else 100000L
     val dim = if (args.length > 1) args(1).toInt else 64
     val nProbe = if (args.length > 2) args(2).toInt else 8
+    graft.GraftSession.run()(bench(_, n, dim, nProbe))
+  }
+
+  private def bench(spark: SparkSession, n: Long, dim: Int,
+      nProbe: Int): Unit = {
     val k = 10
     val nQueries = 50
     val nCells = math.max(4, math.sqrt(n.toDouble).toInt)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-ann-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val base = synth(spark, n, dim, nClusters = 200)
       .repartition(32).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -241,6 +239,5 @@ object AnnBench {
       s""""ivfpq_probe5_files_read":$ipqFiles5,"ivfpq_probe5_bytes_read":$ipqBytes5,""" +
       s""""ivfpq_files_total":$ipqFilesTotal,"ivfpq_bytes_total":$ipqBytesTotal,""" +
       s""""ivfpq_recall_at_$k":${math.round(ipqRecall * 1000) / 1000.0}}""")
-    spark.stop()
   }
 }

@@ -42,14 +42,11 @@ object CompactionBench {
   def main(args: Array[String]): Unit = {
     val nBase = if (args.length > 0) args(0).toLong else 200000L
     val nAppends = if (args.length > 1) args(1).toInt else 30
+    graft.GraftSession.run()(bench(_, nBase, nAppends))
+  }
+
+  private def bench(spark: SparkSession, nBase: Long, nAppends: Int): Unit = {
     val perBatch = math.max(1L, nBase / 100)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-compaction-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     // ---- BM25 inverted index ----
     locally {
@@ -144,7 +141,5 @@ object CompactionBench {
       queries.unpersist()
       line("ivf", nBase, nAppends, filesBefore, filesAfter, tBefore, tAfter, tc)
     }
-
-    spark.stop()
   }
 }

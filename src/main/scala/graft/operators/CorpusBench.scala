@@ -88,13 +88,6 @@ object CorpusBench {
       .select(col("id").as("doc_id"), col("text"))
   }
 
-  private def peakHeapMb: Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(_.getType == java.lang.management.MemoryType.HEAP)
-      .map(_.getPeakUsage.getUsed).sum / (1024 * 1024)
-  }
-
   /** Usage: `runMain graft.operators.CorpusBench [nDocs]
     * [normal|boiler|retrieval|spans|bpe|lshindex]`.
     * Boiler mode additionally measures LSH bucket pressure: the pre-cap
@@ -110,15 +103,11 @@ object CorpusBench {
     // corpus (overridable for experiments)
     val shufflePartitions = sys.env.getOrElse("GRAFT_BENCH_PARTITIONS",
       math.max(32L, n / 10000L).toString)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-corpus-bench")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.NativeHash48.register(spark)
+    graft.GraftSession.run(Map("spark.sql.shuffle.partitions" ->
+      shufflePartitions))(bench(_, n, mode))
+  }
 
+  private def bench(spark: SparkSession, n: Long, mode: String): Unit = {
     // materialize the input first so the timed section measures the
     // pipeline, not the synthesis
     val docs = (if (mode == "boiler") synthBoiler(spark, n) else synth(spark, n))
@@ -233,8 +222,8 @@ object CorpusBench {
         s""""batch_queries":$nQ,"batch_hits":$batchHits,""" +
         s""""batch_serve_sec":${math.round(batchSecs * 100) / 100.0},""" +
         s""""batch_q_per_s":${math.round(nQ / batchSecs)},""" +
-        s""""peak_heap_mb":$peakHeapMb}""")
-      spark.stop(); return
+        s""""peak_heap_mb":${graft.Bench.peakHeapMb}}""")
+      return
     }
 
     // spans mode: the round-10 content operators at corpus scale —
@@ -287,8 +276,8 @@ object CorpusBench {
         s""""n_stripped_empty":$nEmpty,"n_dup_expected":$nDup,""" +
         s""""dsir_sec":${math.round(dsirSecs * 10) / 10.0},""" +
         s""""lm_sec":${math.round(lmSecs * 10) / 10.0},""" +
-        s""""peak_heap_mb":$peakHeapMb}""")
-      spark.stop(); return
+        s""""peak_heap_mb":${graft.Bench.peakHeapMb}}""")
+      return
     }
 
     // bpe mode: tokenizer training + corpus encode at scale. The
@@ -327,8 +316,8 @@ object CorpusBench {
         s""""encode_docs_per_s":${math.round(nDocs / encodeSecs)},""" +
         s""""n_tokens":$nTok,"n_pieces":$nPieces,""" +
         s""""pieces_per_token_milli":${math.round(1000.0 * nPieces / nTok)},""" +
-        s""""peak_heap_mb":$peakHeapMb}""")
-      spark.stop(); return
+        s""""peak_heap_mb":${graft.Bench.peakHeapMb}}""")
+      return
     }
 
     // lshindex mode: the incremental-dedup ingest loop at scale — persist
@@ -372,8 +361,8 @@ object CorpusBench {
         s""""probe_sec":${math.round(probeSecs * 10) / 10.0},""" +
         s""""probe_docs_per_s":${math.round(nBatch / probeSecs)},""" +
         s""""append_sec":${math.round(appendSecs * 10) / 10.0},""" +
-        s""""peak_heap_mb":$peakHeapMb}""")
-      spark.stop(); return
+        s""""peak_heap_mb":${graft.Bench.peakHeapMb}}""")
+      return
     }
 
     // mix mode: the trainingMix composition + within-shard shuffle at
@@ -400,8 +389,8 @@ object CorpusBench {
         s""""max_shard":${r.getLong(3)},""" +
         s""""mix_sec":${math.round(secs * 10) / 10.0},""" +
         s""""mix_docs_per_s":${math.round(nDocs / secs)},""" +
-        s""""peak_heap_mb":$peakHeapMb}""")
-      spark.stop(); return
+        s""""peak_heap_mb":${graft.Bench.peakHeapMb}}""")
+      return
     }
 
     val t0 = System.nanoTime()
@@ -429,10 +418,8 @@ object CorpusBench {
       // a valid (if extreme) outcome, reported as 0 survivors
       val worstCapped = if (survivedRow.isNullAt(0)) 0L else survivedRow.getLong(0)
       banded.unpersist()
-      if (worstCapped > cap) {
-        System.err.println(s"CAP FAILED: post-cap bucket $worstCapped > $cap")
-        spark.stop(); sys.exit(1)
-      }
+      require(worstCapped <= cap,
+        s"CAP FAILED: post-cap bucket $worstCapped > $cap")
       s""","worst_bucket_precap":$worst,"worst_bucket_capped":$worstCapped,"cap":$cap"""
     } else ""
 
@@ -441,7 +428,6 @@ object CorpusBench {
     val cachedAfter = spark.sparkContext.getPersistentRDDs.size
     println(s"""{"metric":"corpus_preprocess","mode":"$mode","n_docs":$nDocs,"kept":$kept,""" +
       s""""sec":${math.round(secs * 10) / 10.0},"docs_per_s":${math.round(nDocs / secs)},""" +
-      s""""peak_heap_mb":$peakHeapMb,"cached_rdds_after_release":$cachedAfter$bucketStats}""")
-    spark.stop()
+      s""""peak_heap_mb":${graft.Bench.peakHeapMb},"cached_rdds_after_release":$cachedAfter$bucketStats}""")
   }
 }

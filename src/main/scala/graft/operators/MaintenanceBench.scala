@@ -64,34 +64,27 @@ object MaintenanceBench {
 
   private def r3(d: Double): Double = math.round(d * 1000) / 1000.0
 
-  // every index dir of a run roots under ONE per-run directory, deleted
-  // at exit — an 'all' run at 1M otherwise leaves ~18 full index copies
-  // (tens of GB) in the shared tmpdir, the residue class the r14 bench
-  // sweep existed to fix
-  private lazy val tmpRoot: java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_mnt_")
-
+  // every index dir of a run roots under the session's private temp root,
+  // deleted at exit — an 'all' run at 1M otherwise leaves ~18 full index
+  // copies (tens of GB) in the shared tmpdir
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(tmpRoot, prefix).toString
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
-  }
+    graft.queries.Common.tempDir(prefix)
 
   private val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   /** FAIR-pool allocation for the liveserve modes: the serve loop's probe
-    * jobs get a guaranteed minShare of the 32 slots (and 8x the weight in
+    * jobs get a guaranteed minShare of 8 slots (and 8x the weight in
     * excess allocation), so a retrain's wide stages can no longer queue a
     * whole probe behind them — the r16 liveserve_ivf during-window spike
     * (2.6-20.3 s vs a 1.9-2.1 s floor) was exactly that FIFO contention.
     * FAIR does not preempt RUNNING tasks, so the residual during-window
     * tail is bounded by the retrain's longest single task, not its stages.
+    * Written before the session (and its temp root) exists, so it is
+    * deleted at JVM exit.
     */
   private def fairPoolsFile(): String = {
-    val f = java.nio.file.Files.createTempFile(tmpRoot, "fair_pools", ".xml")
+    val f = java.nio.file.Files.createTempFile("fair_pools", ".xml")
+    f.toFile.deleteOnExit()
     java.nio.file.Files.writeString(f,
       """<?xml version="1.0"?>
         |<allocations>
@@ -115,26 +108,17 @@ object MaintenanceBench {
     val mode = if (args.length > 1) args(1) else "verbs"
     require(Set("verbs", "composed", "all", "liveserve", "liveserve3",
       "streamingest")(mode), s"unknown mode $mode")
-    val live = mode.startsWith("liveserve")
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-maintenance-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    if (live) builder
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.scheduler.allocation.file", fairPoolsFile())
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
+    val fair =
+      if (mode.startsWith("liveserve"))
+        Map("spark.scheduler.mode" -> "FAIR",
+          "spark.scheduler.allocation.file" -> fairPoolsFile())
+      else Map.empty[String, String]
+    graft.GraftSession.run(fair) { spark =>
       if (mode == "verbs" || mode == "all") verbs(spark, nBase)
       if (mode == "composed" || mode == "all") composed(spark, nBase)
       if (mode == "liveserve") liveServe(spark, nBase)
       if (mode == "liveserve3") liveServe3(spark, nBase)
       if (mode == "streamingest") streamIngest(spark, nBase)
-    } finally {
-      spark.stop()
-      deleteRecursively(tmpRoot.toFile)
     }
   }
 
@@ -155,7 +139,6 @@ object MaintenanceBench {
     */
   private def streamIngest(spark: SparkSession, nBase: Long): Unit = {
     import graft.streaming.StreamingOps
-    graft.plans.NativeHash48.register(spark)
     val nBatches = 4
     val nPer = math.max(250L, nBase / 64)
 
@@ -602,9 +585,6 @@ object MaintenanceBench {
   }
 
   private def liveServe(spark: SparkSession, nBase: Long): Unit = {
-    // the LSH shingle pipeline resolves graft_hash48 from the session
-    // registry; other modes register it via Retrieval.buildIndex
-    graft.plans.NativeHash48.register(spark)
     // builds + retrains run in the low-priority maint pool; ServeLoop
     // pins its own thread to the serve pool
     spark.sparkContext.setLocalProperty("spark.scheduler.pool", "maint")
@@ -709,7 +689,6 @@ object MaintenanceBench {
   private def liveServe3(spark: SparkSession, nBase: Long): Unit = {
     import graft.streaming.StreamingOps
     import spark.implicits._
-    graft.plans.NativeHash48.register(spark)
     spark.sparkContext.setLocalProperty("spark.scheduler.pool", "maint")
     val root = tmp("ls3")
     val idx = s"$root/index"; val corpusOut = s"$root/corpus"

@@ -315,7 +315,7 @@ object Retrieval {
   def buildIndex(docs: DataFrame, dir: String, nBuckets: Int = 0,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     require(nBuckets >= 0, s"nBuckets $nBuckets must be >= 0")
-    graft.plans.NativeHash48.register(docs.sparkSession)
+    graft.plans.Natives.ensure(docs.sparkSession)
     // persist the tokenize pass and the postings aggregate — the
     // appendToIndex discipline (r18): unpinned, the corpus was
     // re-tokenized by every consumer (postings write, doclens write, df
@@ -399,7 +399,7 @@ object Retrieval {
     */
   def appendToIndex(spark: SparkSession, dir: String, newDocs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    graft.plans.NativeHash48.register(spark)
+    graft.plans.Natives.ensure(spark)
     val statsOld = readStats(spark, dir)
     // one metadata row read ONCE: separate head() jobs would rescan. The
     // epoch is captured HERE — before this batch's postings/doclens land —
@@ -679,7 +679,7 @@ object Retrieval {
     */
   def mergeIndexes(spark: SparkSession, into: String, from: String,
       requireDisjoint: Boolean = true): Unit = {
-    graft.plans.NativeHash48.register(spark)
+    graft.plans.Natives.ensure(spark)
     val statsInto = readStats(spark, into)
     val statsFrom = readStats(spark, from)
     val metaInto = statsInto.select(col("n_buckets"), col("n_docs"),
@@ -857,7 +857,7 @@ object Retrieval {
       queries: DataFrame, k: Int, k1: Double = 1.2, b: Double = 0.75,
       qidCol: String = "q_id", termsCol: String = "terms",
       scope: Dedup.CacheScope = Dedup.sessionScope): DataFrame = {
-    graft.plans.NativeHash48.register(spark)
+    graft.plans.Natives.ensure(spark)
     val statsAll = readStats(spark, dir)
     // totals ride the same one-row head (r18) so the serve plan can carry
     // them as literals instead of a crossJoin(broadcast(limit(1))) subtree

@@ -24,34 +24,24 @@ import org.apache.spark.sql.functions._
   */
 object SemDedupBench {
 
-  private def peakHeapMb: Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(_.getType == java.lang.management.MemoryType.HEAP)
-      .map(_.getPeakUsage.getUsed).sum / (1024 * 1024)
-  }
-
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 100000L
     val dim = if (args.length > 1) args(1).toInt else 64
     val k = if (args.length > 2) args(2).toInt
       else math.max(128L, n / 500L).toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-semdedup-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.NativeHash48.register(spark)
+    graft.GraftSession.run()(
+      bench(_, n, dim, k, incremental = args.contains("incremental")))
+  }
 
+  private def bench(spark: SparkSession, n: Long, dim: Int, k: Int,
+      incremental: Boolean): Unit = {
     // incremental mode: the ingestVectors serve loop at scale — index 90%,
     // probe a 10% daily batch + planted exact copies of indexed vectors
     // against the persisted IVF index, append the survivors. A planted
     // copy's top-probe cell IS its original's assigned cell (identical
     // argmax over the frozen centroids), so every planted row must drop;
     // any survivor crashes the bench.
-    if (args.contains("incremental")) {
+    if (incremental) {
       val nIdx = n * 9 / 10
       val clean = AnnBench.synth(spark, n, dim, nClusters = 200)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -86,11 +76,8 @@ object SemDedupBench {
       val appendSecs = (System.nanoTime() - t2) / 1e9
       probeScope.release()
       survivors.unpersist(); batch.unpersist(); clean.unpersist(blocking = true)
-      if (plantedSurvived > 0) {
-        System.err.println(
-          s"PLANTED COPIES SURVIVED THE INDEX PROBE: $plantedSurvived of $nPlanted")
-        spark.stop(); sys.exit(1)
-      }
+      require(plantedSurvived == 0,
+        s"PLANTED COPIES SURVIVED THE INDEX PROBE: $plantedSurvived of $nPlanted")
       println(s"""{"metric":"vecindex_incremental","n_vecs":$n,"dim":$dim,""" +
         s""""n_indexed":$nIdx,"n_batch":$nBatch,"n_survivors":$nSurv,""" +
         s""""planted":$nPlanted,"planted_dropped":$nPlanted,""" +
@@ -98,8 +85,8 @@ object SemDedupBench {
         s""""probe_sec":${math.round(probeSecs * 10) / 10.0},""" +
         s""""probe_vecs_per_s":${math.round(nBatch / probeSecs)},""" +
         s""""append_sec":${math.round(appendSecs * 10) / 10.0},""" +
-        s""""peak_heap_mb":$peakHeapMb}""")
-      spark.stop(); return
+        s""""peak_heap_mb":${graft.Bench.peakHeapMb}}""")
+      return
     }
 
     val clean = AnnBench.synth(spark, n, dim, nClusters = 200)
@@ -121,16 +108,12 @@ object SemDedupBench {
     val plantedSurvived = kept.where(col("id") >= n).count()
     kept.unpersist()
     corpus.unpersist(blocking = true)
-    if (plantedSurvived > 0) {
-      System.err.println(
-        s"PLANTED DUPS SURVIVED: $plantedSurvived of $nPlanted")
-      spark.stop(); sys.exit(1)
-    }
+    require(plantedSurvived == 0,
+      s"PLANTED DUPS SURVIVED: $plantedSurvived of $nPlanted")
     println(s"""{"metric":"semantic_dedup","n_vecs":$total,"dim":$dim,"k":$k,""" +
       s""""sec":${math.round(secs * 10) / 10.0},"vecs_per_s":${math.round(total / secs)},""" +
       s""""kept":$nKept,"dropped":${total - nKept},"planted":$nPlanted,""" +
       s""""planted_dropped":${nPlanted - plantedSurvived},""" +
-      s""""peak_heap_mb":$peakHeapMb}""")
-    spark.stop()
+      s""""peak_heap_mb":${graft.Bench.peakHeapMb}}""")
   }
 }

@@ -544,9 +544,14 @@ object Similarity {
     * before the caller's persist) silently re-executed the whole
     * batch-preparation subtree once per probe, ~1.7x on the vector
     * ingest path (streamingest A/B). On a materialized cache the probe
-    * reads the cached RDD's partition count with no job.
+    * reads the cached RDD's partition count with no job. An unpersisted
+    * frame fails the `require`, so a new call site cannot silently bring
+    * the double execution back.
     */
-  private def spreadForScoring(qExplodedCached: DataFrame): DataFrame = {
+  private[graft] def spreadForScoring(qExplodedCached: DataFrame): DataFrame = {
+    require(qExplodedCached.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "spreadForScoring needs a persisted, materialized frame: probing an " +
+        "unpersisted plan's partitions re-executes its whole subtree")
     val par = qExplodedCached.sparkSession.sparkContext.defaultParallelism
     if (qExplodedCached.rdd.getNumPartitions < par)
       qExplodedCached.repartition(par, col("q_id"), col("cell"))

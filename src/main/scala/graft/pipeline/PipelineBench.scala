@@ -23,28 +23,18 @@ import org.apache.spark.sql.functions._
   */
 object PipelineBench {
 
-  private def peakHeapMb: Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(_.getType == java.lang.management.MemoryType.HEAP)
-      .map(_.getPeakUsage.getUsed).sum / (1024 * 1024)
-  }
-
   def main(args: Array[String]): Unit = {
     val profiles = if (args.nonEmpty) args(0).toInt else 100
     val mode = if (args.length > 1) args(1) else "shear"
     val nMissions = if (args.length > 2) args(2).toInt else 8
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-pipeline-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // WARN visible on purpose: a single-partition WindowExec in the
-    // multi-mission run would surface here as a planner warning
-    spark.sparkContext.setLogLevel("WARN")
+    // WARN logging (the session default) is load-bearing here: a
+    // single-partition WindowExec in the multi-mission run would surface
+    // as a planner warning
+    graft.GraftSession.run()(bench(_, profiles, mode, nMissions))
+  }
 
+  private def bench(spark: SparkSession, profiles: Int, mode: String,
+      nMissions: Int): Unit = {
     val multi = mode == "multi"
     // fail helpfully instead of grinding to an OOM: the 10x fleet shape
     // (600 profiles x 8 missions = 960k pings) measured 72.6 GB peak heap
@@ -97,7 +87,6 @@ object PipelineBench {
     val cachedAfter = math.max(spark.sparkContext.getPersistentRDDs.size,
       if (spark.sharedState.cacheManager.isEmpty) 0 else 1)
     val missionJson = if (multi) s""","missions":$nMissions""" else ""
-    println(f"""{"mode":"$mode"$missionJson,"pings":$nPings,"finite_shear_cells":$cells,"seconds":$secs%.2f,"pings_per_sec":${nPings / secs}%.0f$fullJson,"peak_heap_mb":$peakHeapMb,"cached_rdds_after_release":$cachedAfter}""")
-    spark.stop()
+    println(f"""{"mode":"$mode"$missionJson,"pings":$nPings,"finite_shear_cells":$cells,"seconds":$secs%.2f,"pings_per_sec":${nPings / secs}%.0f$fullJson,"peak_heap_mb":${graft.Bench.peakHeapMb},"cached_rdds_after_release":$cachedAfter}""")
   }
 }

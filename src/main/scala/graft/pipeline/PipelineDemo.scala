@@ -8,16 +8,9 @@ import org.apache.spark.sql.functions._
   * prints a one-line summary. `sbt "runMain graft.pipeline.PipelineDemo"`.
   */
 object PipelineDemo {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def main(args: Array[String]): Unit = graft.GraftSession.run()(demo)
 
+  private def demo(spark: SparkSession): Unit = {
     val (adcp, glider) = AdcpPipeline.shearFromAdcp(
       Fixture.adcp(spark), Fixture.glider(spark), Fixture.opts,
       Fixture.cellSize, Fixture.blankingDistance)
@@ -38,6 +31,5 @@ object PipelineDemo {
     val clean = spark.sharedState.cacheManager.isEmpty &&
       spark.sparkContext.getPersistentRDDs.isEmpty
     println(f"""{"pings":$nPings,"mean_sh_e":$meanShE%.6f,"grid_cells_with_E":$finiteE,"profiles":${axes.nProfiles},"depth_bins":${axes.nY},"caches_released":$clean}""")
-    spark.stop()
   }
 }

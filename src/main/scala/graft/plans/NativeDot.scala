@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -67,16 +67,9 @@ object NativeDot {
       returnNullable = false)
   }
 
-  val info = new ExpressionInfo(classOf[NativeDot.type].getName, "graft_dot")
-
-  /** Per-session registration; idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", builder, "built-in")
-
   /** Column-API form of the native dot. */
   def dotCol(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+    Natives.ensure(spark)
     org.apache.spark.sql.functions.call_function("graft_dot", a, b)
   }
 

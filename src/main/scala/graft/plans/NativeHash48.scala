@@ -40,12 +40,8 @@ object NativeHash48 {
       returnNullable = false)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hash48", builder, "built-in")
-
   def hash48Col(spark: SparkSession, s: Column): Column = {
-    register(spark)
+    Natives.ensure(spark)
     org.apache.spark.sql.functions.call_function("graft_hash48", s)
   }
 }

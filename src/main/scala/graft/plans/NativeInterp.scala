@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -15,9 +14,8 @@ import org.apache.spark.sql.types._
   * skipping the UDF path's per-row Row<->Scala conversion and encoder
   * round-trip entirely.
   *
-  * Registered as SQL function `graft_interp(xs, ys, targets)` both
-  * per-session ([[NativeInterp.register]]) and via
-  * [[GraftExtensions]] (`spark.sql.extensions=graft.plans.GraftExtensions`).
+  * Registered as SQL function `graft_interp(xs, ys, targets)` through
+  * [[Natives]].
   */
 object NativeInterp {
 
@@ -91,34 +89,10 @@ object NativeInterp {
       returnNullable = true)
   }
 
-  val info = new ExpressionInfo(classOf[NativeInterp.type].getName, "graft_interp")
-
-  /** Per-session registration; idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_interp", builder, "built-in")
-
   /** Column-API form. */
   def interpCol(spark: SparkSession, xs: Column, ys: Column, targets: Column): Column = {
-    register(spark)
+    Natives.ensure(spark)
     import org.apache.spark.sql.functions.call_function
     call_function("graft_interp", xs, ys, targets)
-  }
-}
-
-/** `SparkSessionExtensions` hook: makes graft_interp available in every
-  * session of a cluster via spark.sql.extensions (SURVEY.md §7.3 —
-  * the only piece of the engine that touches the extension API; everything
-  * else is plain Column algebra by design).
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("graft_interp"), NativeInterp.info,
-      NativeInterp.builder))
-    e.injectFunction((FunctionIdentifier("graft_hash48"),
-      new ExpressionInfo(NativeHash48.getClass.getName, "graft_hash48"),
-      NativeHash48.builder))
-    e.injectFunction((FunctionIdentifier("graft_top_cells"),
-      NativeTopCells.info, NativeTopCells.builder))
   }
 }

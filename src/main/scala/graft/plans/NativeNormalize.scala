@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types.StringType
@@ -65,7 +64,7 @@ object NativeNormalize {
       java.text.Normalizer.Form.NFC))
   }
 
-  private def builder(method: String)(args: Seq[Expression]): Expression = {
+  private[plans] def builder(method: String)(args: Seq[Expression]): Expression = {
     require(args.length == 1, s"graft_$method(s) takes 1 argument")
     StaticInvoke(
       classOf[NativeNormalize.type],
@@ -76,17 +75,4 @@ object NativeNormalize {
       propagateNull = true,
       returnNullable = false)
   }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", builder("nfc"), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_strip_accents", builder("stripAccents"), "built-in")
-  }
-
-  def nfcCol(s: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_nfc", s)
-
-  def stripAccentsCol(s: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_strip_accents", s)
 }

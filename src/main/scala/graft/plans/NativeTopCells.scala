@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -126,20 +126,12 @@ object NativeTopCells {
       returnNullable = false)
   }
 
-  val info = new ExpressionInfo(classOf[NativeTopCells.type].getName,
-    "graft_top_cells")
-
-  /** Per-session registration; idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_top_cells", builder, "built-in")
-
   /** Column-API form: top-`p` cells of `v[off..off+dsub)` against the
     * driver-held centroid matrix, descending by `dot - bias`.
     */
   def topCellsCol(spark: SparkSession, v: Column, off: Int,
       cents: Seq[Seq[Double]], bias: Seq[Double], p: Int): Column = {
-    register(spark)
+    Natives.ensure(spark)
     import org.apache.spark.sql.functions.{call_function, lit, typedlit}
     call_function("graft_top_cells", v, lit(off),
       typedlit(cents.map(_.toArray).toArray), typedlit(bias.toArray), lit(p))

@@ -59,9 +59,7 @@ object Common {
     // (dynamic SQLConf); harmless for micros data, where the column
     // arrives as TIMESTAMP_NTZ instead — [[tsUs]] adapts to either.
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    graft.plans.NativeHash48.register(s)
-    graft.plans.NativeInterp.register(s)
-    graft.plans.NativeNormalize.register(s)
+    graft.plans.Natives.ensure(s)
     val path = s"$dir/$name.parquet"
     schemaCache.get(path) match {
       case Some(sch) => s.read.schema(sch).parquet(path)

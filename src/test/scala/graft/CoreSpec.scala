@@ -15,9 +15,7 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.plans.NativeHash48.register(s)
-    graft.plans.NativeInterp.register(s)
-    graft.plans.NativeNormalize.register(s)
+    graft.plans.Natives.ensure(s)
     s
   }
 }

@@ -33,7 +33,7 @@ class NativeInterpSpec extends AnyFunSuite {
   }
 
   test("registered SQL function works through the parser") {
-    NativeInterp.register(spark)
+    graft.plans.Natives.ensure(spark)
     val out = spark.sql(
       """SELECT graft_interp(array(0D, 10D), array(0D, 100D), array(5D)) AS v""")
       .collect().head.getSeq[Double](0)
@@ -41,7 +41,7 @@ class NativeInterpSpec extends AnyFunSuite {
   }
 
   test("null input arrays propagate null") {
-    NativeInterp.register(spark)
+    graft.plans.Natives.ensure(spark)
     val out = spark.sql(
       "SELECT graft_interp(CAST(NULL AS ARRAY<DOUBLE>), array(0D), array(1D)) AS v")
       .collect().head
@@ -54,7 +54,7 @@ class NativeHash48Spec extends AnyFunSuite {
   import spark.implicits._
 
   test("native hash48 is bit-identical to the composed-builtins form") {
-    graft.plans.NativeHash48.register(spark)
+    graft.plans.Natives.ensure(spark)
     val strs = Seq("", "a", "spark graft", "the quick brown fox",
       "0:some shingle text", "é中文 mixed unicode")
     val got = strs.toDF("s").select(

@@ -84,7 +84,7 @@ class NativeTopCellsSpec extends AnyFunSuite {
   }
 
   test("null vector propagates null; SQL registration parses") {
-    NativeTopCells.register(spark)
+    graft.plans.Natives.ensure(spark)
     val out = spark.sql(
       """SELECT graft_top_cells(CAST(NULL AS ARRAY<DOUBLE>), 0,
         |array(array(1D)), array(0D), 1) AS v""".stripMargin)

@@ -18,7 +18,7 @@ class PropertySpec extends AnyFunSuite {
   private def rng = new scala.util.Random(42)
 
   test("interp is exact at knots and linear between them (50 random cases)") {
-    NativeInterp.register(spark)
+    graft.plans.Natives.ensure(spark)
     val r = rng
     val cases = (1 to 50).map { _ =>
       val n = 2 + r.nextInt(10)

@@ -426,6 +426,16 @@ class IvfSpec extends AnyFunSuite {
       s"scan read $filesRead files, expected $expectedFiles " +
       s"(probed ${probedCells.size} cells, ${nonEmpty.size} non-empty)")
   }
+
+  test("spreadForScoring refuses an unpersisted frame") {
+    val df = spark.range(8).selectExpr("id AS q_id", "CAST(id % 2 AS INT) AS cell")
+    intercept[IllegalArgumentException](Similarity.spreadForScoring(df))
+    val cached = df.persist()
+    try {
+      cached.count()
+      assert(Similarity.spreadForScoring(cached).count() == 8)
+    } finally cached.unpersist()
+  }
 }
 
 class IvfPqSpec extends AnyFunSuite {
