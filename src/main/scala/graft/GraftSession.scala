@@ -19,6 +19,10 @@ import org.apache.spark.sql.SparkSession
   *  - a 2,000-entry code-generation cache: with Spark's 100-entry default
   *    a pass over the query mix evicts its own generated classes, so every
   *    repeated pass compiles them again;
+  *  - no codegen stage id in generated class names: adaptive execution
+  *    numbers the stages of one plan differently from run to run, and the
+  *    id is part of the cached source, so with it a repeated pipeline run
+  *    misses the cache and compiles its classes again;
   *  - the [[graft.plans.Natives]] functions and one warm-up job (task
   *    scheduling, codegen compiler), so the first timed query does not
   *    absorb the session's one-time startup cost;
@@ -50,6 +54,7 @@ object GraftSession {
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
           sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
       extraConf.foreach { case (k, v) => builder.config(k, v) }
       val spark = builder.getOrCreate()
       try {

@@ -22,18 +22,6 @@ object Verify {
           // hundred prior queries otherwise squeeze the storage-heavy ones
           graft.operators.Dedup.releaseCaches()
         }
-      // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-      // — a tab or CR in builder-authored SQL would otherwise make the
-      // driver's json.load fail and silently zero the round's correctness.
-      def q(s: String): String = "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
       // Restrict the oracle dump to the queries that actually ran: some
       // oracles (q74/q77/q79) embed driver-computed literal tables stashed
       // by their query entry — dumping them for a query that did NOT run
@@ -41,7 +29,8 @@ object Verify {
       // fallback form.
       val json = SparkEntry.oracleSql
         .filter { case (k, _) => only.forall(_.contains(k)) }
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+        .map { case (k, v) => s"${Bench.jsonString(k)}: ${Bench.jsonString(v)}" }
+        .mkString("{", ",", "}")
       Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     }
   }

@@ -887,8 +887,7 @@ object Dedup {
         shingles.write.mode("overwrite").parquet(next)
         IndexFiles.ensureReadable(shingles, next)
         // publish-order gate (see above): bands must cut over first
-        scala.concurrent.Await.result(bandsPublished.future,
-          scala.concurrent.duration.Duration.Inf)
+        Par.awaitGate(bandsPublished.future, "deleteFromLshIndex", "shingles")
       }
     } {
       try {

@@ -1,7 +1,8 @@
 package graft.operators
 
+import java.util.concurrent.TimeoutException
 import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import scala.concurrent.duration.{Duration, DurationInt, FiniteDuration}
 import scala.util.control.NonFatal
 
 /** Driver-thread overlap of two independent Spark actions (guide §2.6:
@@ -56,5 +57,41 @@ private[graft] object Par {
       case (Left(eb), _) => throw eb
       case (_, Left(ea)) => throw ea
     }
+  }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** How often [[awaitGate]] reports that it is still waiting. */
+  val GateSlice: FiniteDuration = 30.seconds
+
+  /** How long [[awaitGate]] waits in all before it gives up. */
+  val GateBound: FiniteDuration = 60.minutes
+
+  /** Wait for a publish-order gate (the other table of a verb has cut
+    * over) while holding `table`'s lease. Waits in slices of `slice`,
+    * logging a WARN per slice with the verb, the table and the time waited
+    * so far, and throws a `TimeoutException` after `bound`, so a gate that
+    * never opens ends the verb (its lease is released by the caller's
+    * `finally`) instead of holding the lease forever. A failed gate
+    * rethrows its failure.
+    */
+  def awaitGate(gate: Future[_], verb: String, table: String,
+      slice: FiniteDuration = GateSlice, bound: FiniteDuration = GateBound,
+      warn: String => Unit = log.warn(_)): Unit = {
+    val t0 = System.nanoTime()
+    def waited = Duration.fromNanos(System.nanoTime() - t0)
+    while (!gate.isCompleted) {
+      if (waited >= bound)
+        throw new TimeoutException(s"$verb: the publish gate of table " +
+          s"$table did not open within $bound")
+      try Await.ready(gate, slice.min(bound - waited))
+      catch {
+        case _: TimeoutException =>
+          warn(s"$verb: table $table still waits for its publish gate " +
+            s"after ${waited.toMillis} ms")
+      }
+    }
+    Await.result(gate, Duration.Zero)
+    ()
   }
 }

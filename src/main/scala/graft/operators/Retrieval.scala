@@ -614,8 +614,7 @@ object Retrieval {
         // land the schema so the table stays readable
         IndexFiles.ensureReadable(postings, next)
         // publish-order gate (see above): doclens must cut over first
-        scala.concurrent.Await.result(doclensPublished.future,
-          scala.concurrent.duration.Duration.Inf)
+        Par.awaitGate(doclensPublished.future, "deleteFromIndex", "postings")
       }
     } {
       try {

@@ -81,7 +81,7 @@ object AdcpPipeline {
       GliderStages.deriveGlider(gliderRaw), opts0, missionCols)
     val glider = geo.glider; val opts = geo.opts
     var adcp = AdcpStages.align(adcpRaw, glider, missionCols)
-    // the alignment window collapses a single-mission dataset to one
+    // the alignment sweep collapses a single-mission dataset to one
     // partition; fan back out so the (embarrassingly parallel) elementwise
     // beam math uses every core — at cluster scale this is the exchange
     // that spreads a mission's pings across executors
@@ -90,11 +90,18 @@ object AdcpPipeline {
     // correct_heading is gated (:451-460): when disabled the compass
     // heading stays raw and declination is NOT added. With mission keys
     // each mission's compass solves against its own field target
-    // (reference cardinality: one solve per mission, :315-339)
+    // (reference cardinality: one solve per mission, :315-339). The solves
+    // read the magnetometer from the raw pings: the alignment keeps every
+    // ping and leaves mag_* alone, and the sweep under it is opaque to
+    // column pruning, so a solve over the aligned frame would run the
+    // alignment again for each of its actions
     adcp = if (!opts.correctAdcpHeading) adcp
            else if (solveHeading && missionCols.nonEmpty)
-             HeadingCorrection.perMission(opts, geo.targets, missionCols)(adcp)
-           else if (solveHeading) HeadingCorrection(opts)(adcp)
+             HeadingCorrection.applyPerMission(opts,
+               HeadingCorrection.solvePerMission(adcpRaw, geo.targets,
+                 missionCols, opts.geomagTargetMilligauss), missionCols)(adcp)
+           else if (solveHeading) HeadingCorrection.correctedHeading(opts,
+             HeadingCorrection.solve(adcpRaw, opts.geomagTargetMilligauss))(adcp)
            else HeadingCorrection.correctedHeading(opts,
              HeadingCorrection.Calibration(
                Array(1, 0, 0, 0, 1, 0, 0, 0, 1), Array(0, 0, 0), 0.0))(adcp)

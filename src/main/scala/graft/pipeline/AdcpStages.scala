@@ -8,7 +8,7 @@ import graft.core.InterpJoin
 /** The reference's elementwise + regrid ADCP stages (SURVEY.md §2.6-2.7) as
   * lazily-composed `DataFrame => DataFrame` functions over the per-ping
   * wide form. Every stage is a narrow map (no shuffle) except `align`
-  * (one interp-join window) and the correlation aggregate in `regrid`.
+  * (one interp-join sort and sweep) and the correlation aggregate in `regrid`.
   */
 object AdcpStages {
 

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -20,6 +21,12 @@ import org.apache.spark.sql.functions._
   *     key, shear + velocity keyed by mission (per-mission heading solves,
   *     mission-partitioned windows — no whole-dataset single-partition
   *     window anywhere), plus JVM peak-heap and a cache-release check.
+  *
+  * Every mode also reports, for shear_from_adcp and (when it runs)
+  * velocity_from_shear, the Spark jobs and the generated classes compiled
+  * (code-cache misses, Spark's `CodegenMetrics`) by the call together with
+  * the count that forces it: `shear_jobs`, `shear_classes`,
+  * `velocity_jobs`, `velocity_classes`.
   */
 object PipelineBench {
 
@@ -63,19 +70,40 @@ object PipelineBench {
             Fixture.adcp(spark, profiles).cache())
     val nPings = adcpRaw.count(); glider.count() // materialize inputs first
 
+    // Spark jobs run and generated classes compiled (code-cache misses) by
+    // a call and the action that forces it
+    val jobs = new java.util.concurrent.atomic.AtomicLong()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
+    def cost[T](name: String)(body: => T): (T, String) = {
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
+      val (j0, c0) = (jobs.get, CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+      val r = body
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
+      (r, s""","${name}_jobs":${jobs.get - j0},"${name}_classes":""" +
+        (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0))
+    }
+
     val t0 = System.nanoTime()
-    val (adcp, gliderOut) = AdcpPipeline.shearFromAdcp(adcpRaw, glider,
-      Fixture.opts, Fixture.cellSize, Fixture.blankingDistance,
-      solveHeading = true, missionCols = missionCols)
-    val cells = adcp.select(explode(col("sh_e"))).where(col("col").isNotNull).count()
+    val ((adcp, gliderOut, cells), shearCost) = cost("shear") {
+      val (adcp, gliderOut) = AdcpPipeline.shearFromAdcp(adcpRaw, glider,
+        Fixture.opts, Fixture.cellSize, Fixture.blankingDistance,
+        solveHeading = true, missionCols = missionCols)
+      (adcp, gliderOut,
+        adcp.select(explode(col("sh_e"))).where(col("col").isNotNull).count())
+    }
     val secs = (System.nanoTime() - t0) / 1e9
     val fullJson = if (mode == "full" || multi) {
       val t1 = System.nanoTime()
-      val (ds, axes) = AdcpPipeline.velocityFromShear(adcp, gliderOut,
-        Fixture.opts, None, spark, missionCols = missionCols)
-      val nE = ds.where(col("ADCP_E").isNotNull && !isnan(col("ADCP_E"))).count()
+      val ((nE, axes), velocityCost) = cost("velocity") {
+        val (ds, axes) = AdcpPipeline.velocityFromShear(adcp, gliderOut,
+          Fixture.opts, None, spark, missionCols = missionCols)
+        (ds.where(col("ADCP_E").isNotNull && !isnan(col("ADCP_E"))).count(), axes)
+      }
       axes.release()
-      f""","velocity_seconds":${(System.nanoTime() - t1) / 1e9}%.2f,"grid_cells_with_E":$nE"""
+      f""","velocity_seconds":${(System.nanoTime() - t1) / 1e9}%.2f,"grid_cells_with_E":$nE$velocityCost"""
     } else ""
     // release every pipeline cache and prove nothing stays cached — the
     // discipline long-lived sessions need (Axes scaladoc). The barriers'
@@ -87,6 +115,6 @@ object PipelineBench {
     val cachedAfter = math.max(spark.sparkContext.getPersistentRDDs.size,
       if (spark.sharedState.cacheManager.isEmpty) 0 else 1)
     val missionJson = if (multi) s""","missions":$nMissions""" else ""
-    println(f"""{"mode":"$mode"$missionJson,"pings":$nPings,"finite_shear_cells":$cells,"seconds":$secs%.2f,"pings_per_sec":${nPings / secs}%.0f$fullJson,"peak_heap_mb":${graft.Bench.peakHeapMb},"cached_rdds_after_release":$cachedAfter}""")
+    println(f"""{"mode":"$mode"$missionJson,"pings":$nPings,"finite_shear_cells":$cells,"seconds":$secs%.2f,"pings_per_sec":${nPings / secs}%.0f$shearCost$fullJson,"peak_heap_mb":${graft.Bench.peakHeapMb},"cached_rdds_after_release":$cachedAfter}""")
   }
 }

@@ -106,6 +106,15 @@ class BenchSpec extends AnyFunSuite {
     assert((j \ "path").extract[String] == path.toAbsolutePath.toString)
   }
 
+  test("a string with control characters still makes a JSON line that parses") {
+    // the escaper Bench's error list and Verify's oracle dump share
+    implicit val fmts: Formats = DefaultFormats
+    val sql = "SELECT 1\tAS a,\r\n  'x' AS b\u0001 -- \"q\" \\"
+    val j = JsonMethods.parse(s"{${Bench.jsonString("q01")}: ${Bench.jsonString(sql)}}")
+    assert((j \ "q01").extract[String] ==
+      "SELECT 1 AS a,    'x' AS b  -- \"q\" \\")
+  }
+
   test("per-query lines: one short JSONL line each, consistent with the full maps") {
     // the r19 driver-parseability contract (two rounds of PERF per_query
     // were lost to tail truncation of the 12 KB full line): every query

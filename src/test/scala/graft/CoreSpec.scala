@@ -175,6 +175,128 @@ class InterpJoinSpec extends AnyFunSuite {
                 else r.getAs[Double]("nearest_v"))
     assert(got.toSeq == Seq(1.0, null))
   }
+
+  private def col0(df: org.apache.spark.sql.DataFrame, c: String): Seq[Any] =
+    df.orderBy("id").collect().toSeq
+      .map(r => if (r.isNullAt(r.fieldIndex(c))) null else r.getAs[Double](c))
+
+  test("interpolate: each value column keeps its own knot set") {
+    val src = Seq((1L, 0.0, Some(0.0), None), (1L, 10.0, None, Some(100.0)),
+      (1L, 20.0, Some(20.0), Some(200.0))).toDF("k", "x", "a", "b")
+    val dst = Seq((1L, 1L, 5.0), (2L, 1L, 10.0), (3L, 1L, 15.0)).toDF("id", "k", "x")
+    val got = InterpJoin.interpolate(src, dst, "x", Seq("a", "b"), Seq("k"))
+    assert(col0(got, "interp_a") == Seq(5.0, 10.0, 15.0))
+    assert(col0(got, "interp_b") == Seq(null, 100.0, 150.0))
+  }
+
+  test("interpolate: an equal-x knot is the previous knot, at both hull ends") {
+    val src = Seq((1L, 0.0, 0.0), (1L, 10.0, 100.0), (1L, 10.0, 100.0), (1L, 20.0, 0.0))
+      .toDF("k", "x", "y")
+    val dst = Seq((1L, 1L, 0.0), (2L, 1L, 10.0), (3L, 1L, 10.0), (4L, 1L, 15.0),
+      (5L, 1L, 20.0)).toDF("id", "k", "x")
+    val got = InterpJoin.interpolate(src, dst, "x", Seq("y"), Seq("k"))
+    assert(col0(got, "interp_y") == Seq(0.0, 100.0, 100.0, 50.0, 0.0))
+  }
+
+  test("a null-x probe gives null") {
+    val src = Seq((1L, 0.0, 1.0), (1L, 10.0, 2.0)).toDF("k", "x", "y")
+    val dst = Seq((1L, 1L, Some(5.0)), (2L, 1L, None)).toDF("id", "k", "x")
+    assert(col0(InterpJoin.interpolate(src, dst, "x", Seq("y"), Seq("k")),
+      "interp_y") == Seq(1.5, null))
+    assert(col0(InterpJoin.nearest(src, dst, "x", Seq("y"), Seq("k"), Some(100.0)),
+      "nearest_y") == Seq(1.0, null))
+  }
+
+  test("null partition keys form their own group") {
+    val src = Seq((None, 0.0, 0.0), (None, 10.0, 10.0), (Some(1L), 0.0, 100.0),
+      (Some(1L), 10.0, 200.0)).toDF("k", "x", "y")
+    val dst = Seq((1L, None, 5.0), (2L, Some(1L), 5.0), (3L, Some(2L), 5.0))
+      .toDF("id", "k", "x")
+    assert(col0(InterpJoin.interpolate(src, dst, "x", Seq("y"), Seq("k")),
+      "interp_y") == Seq(5.0, 150.0, null))
+    assert(col0(InterpJoin.nearest(src, dst, "x", Seq("y"), Seq("k")),
+      "nearest_y") == Seq(0.0, 100.0, null))
+  }
+
+  test("nearest: a knot with a null value still matches, and brings the null") {
+    val src = Seq((1L, 0.0, None), (1L, 10.0, Some(1.0))).toDF("k", "x", "v")
+    val dst = Seq((1L, 1L, 2.0), (2L, 1L, 8.0)).toDF("id", "k", "x")
+    assert(col0(InterpJoin.nearest(src, dst, "x", Seq("v"), Seq("k")),
+      "nearest_v") == Seq(null, 1.0))
+  }
+
+  // 5 keys (one null), 3 value columns; knots on a 25-point integer grid so
+  // x values repeat, duplicate knots agree (values are a function of key, x
+  // and column, null for about a fifth of them), probes on and between the
+  // grid, inside and outside the hull, about a tenth with a null x
+  private def randomFrames(seed: Long) = {
+    val r = new scala.util.Random(seed)
+    val keys = Seq(Some(1L), Some(2L), Some(3L), Some(4L), None)
+    def v(k: Option[Long], x: Int, c: Int): Option[Double] = {
+      val h = (k.getOrElse(0L) * 31 + x) * 7 + c
+      if (math.floorMod(h * 2654435761L, 5L) == 0) None else Some(math.sin(h.toDouble) * 100)
+    }
+    val src = (1 to 100).map { _ =>
+      val k = keys(r.nextInt(5)); val x = r.nextInt(25)
+      (k, x, v(k, x, 0), v(k, x, 1), v(k, x, 2))
+    }.toDF("k", "x", "a", "b", "c")
+    val dst = (1 to 100).map { i =>
+      val x = r.nextInt(10) match {
+        case 0 => None
+        case 1 | 2 => Some(r.nextInt(31) - 3 + 0.5)
+        case _ => Some((r.nextInt(31) - 3).toDouble)
+      }
+      (i.toLong, keys(r.nextInt(5)), x)
+    }.toDF("id", "k", "x")
+    (src, dst)
+  }
+
+  private def sameRows(got: org.apache.spark.sql.DataFrame,
+      want: org.apache.spark.sql.DataFrame, outs: Seq[String]): Unit = {
+    assert(got.schema.map(f => (f.name, f.dataType)) ==
+      want.schema.map(f => (f.name, f.dataType)))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(("id" +: outs).map(col): _*).collect().map { r =>
+        r.getLong(0) -> (1 until r.length).map(i =>
+          if (r.isNullAt(i)) None else Some(r.getDouble(i)))
+      }.toMap
+    val (g, w) = (rows(got), rows(want))
+    assert(g.size == 100 && w.size == 100)
+    assert(w.values.flatten.count(_.isDefined) > 30, "too few matched probes to test")
+    w.keys.foreach(id => assert(g(id) == w(id), s"probe $id"))
+  }
+
+  test("interpolate matches the window formulation on random keyed data") {
+    val (src, dst) = randomFrames(11)
+    val vs = Seq("a", "b", "c")
+    sameRows(InterpJoin.interpolate(src, dst, "x", vs, Seq("k")),
+      WindowInterpJoin.interpolate(src, dst, "x", vs, Seq("k")), vs.map("interp_" + _))
+  }
+
+  test("the join plans one sort and sweep, no window, and joins with itself") {
+    val (src, dst) = randomFrames(13)
+    val got = InterpJoin.interpolate(src, dst, "x", Seq("a"), Seq("k"))
+    val plan = got.queryExecution.executedPlan.toString
+    assert(plan.contains("SortedSweep") && !plan.contains("Window"), plan)
+    val self = got.join(got.select(col("id"), col("interp_a").as("again")), "id")
+    assert(self.where(not(col("interp_a") <=> col("again"))).count() == 0)
+    assert(self.count() == 100)
+  }
+
+  test("nearest matches the window formulation on random keyed data") {
+    val (src, dst) = randomFrames(12)
+    val vs = Seq("a", "b", "c")
+    val outs = vs.map("nearest_" + _)
+    sameRows(InterpJoin.nearest(src, dst, "x", vs, Seq("k"), Some(2.0)),
+      WindowInterpJoin.nearest(src, dst, "x", vs, Seq("k"), Some(2.0)), outs)
+    // without a tolerance only non-null probes: the window form gave a
+    // null-x probe the value of its key's first knot
+    val located = dst.where(col("x").isNotNull)
+    val got = InterpJoin.nearest(src, located, "x", vs, Seq("k"))
+    val want = WindowInterpJoin.nearest(src, located, "x", vs, Seq("k"))
+    assert(got.count() == located.count())
+    assert(got.orderBy("id").collect().toSeq == want.orderBy("id").collect().toSeq)
+  }
 }
 
 class OptimizeSpec extends AnyFunSuite {

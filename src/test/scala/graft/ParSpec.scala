@@ -49,4 +49,32 @@ class ParSpec extends AnyFunSuite {
       Par.overlap[Unit, Int](throw new LinkageError("background"))(1)
     }
   }
+
+  test("a publish gate that never opens times out, warning every slice") {
+    import scala.concurrent.duration.DurationInt
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val t0 = System.nanoTime()
+    val e = intercept[java.util.concurrent.TimeoutException] {
+      Par.awaitGate(scala.concurrent.Promise[Unit]().future, "deleteFromIndex",
+        "postings", slice = 20.millis, bound = 150.millis, warn = warnings.add(_))
+    }
+    val waited = (System.nanoTime() - t0) / 1e9
+    assert(waited >= 0.15 && waited < 10, s"waited $waited s")
+    assert(e.getMessage.contains("postings"))
+    assert(warnings.size >= 3, s"${warnings.size} warnings")
+    warnings.forEach { w =>
+      assert(w.contains("deleteFromIndex") && w.contains("postings") && w.contains(" ms"), w)
+    }
+  }
+
+  test("an open publish gate returns at once; a failed one rethrows") {
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    Par.awaitGate(scala.concurrent.Future.unit, "v", "t", warn = warnings.add(_))
+    assert(warnings.isEmpty)
+    val e = intercept[IllegalStateException] {
+      Par.awaitGate(scala.concurrent.Future.failed(new IllegalStateException("bands")),
+        "v", "t", warn = warnings.add(_))
+    }
+    assert(e.getMessage == "bands" && warnings.isEmpty)
+  }
 }
