@@ -596,7 +596,7 @@ object Dedup {
   def saveLshIndex(docs: DataFrame, idCol: String, textCol: String,
       dir: String, k: Int = 16, nBands: Int = 8, shingleN: Int = 3): Unit = {
     writeLshRows(docs, idCol, textCol, dir, k, nBands, shingleN, "overwrite")
-    writeLshMeta(docs.sparkSession, k, nBands, shingleN, s"$dir/meta")
+    writeLshMeta(docs.sparkSession, (k, nBands, shingleN), s"$dir/meta")
   }
 
   /** RE-GEOMETRY the banding of a persisted LSH index — the retrain verb
@@ -645,10 +645,9 @@ object Dedup {
           array((0 until k).map(i => col(s"__m$i")): _*).as("sig"))
       val newBands = bands(sigs, "doc_id", k, nBands)
         .select(col("band"), col("bsig"), col("doc_id"))
-      newBands.repartition(col("band"), col("bsig")).write.mode("overwrite")
-        .partitionBy("band").parquet(next)
+      bandsWriter(newBands).mode("overwrite").parquet(next)
       IndexFiles.ensureReadable(newBands, next)
-      writeLshMeta(spark, k, nBands, shingleN, s"$next/_meta")
+      writeLshMeta(spark, (k, nBands, shingleN), s"$next/_meta")
     }
   }
 
@@ -668,33 +667,21 @@ object Dedup {
   private def writeLshRows(docs: DataFrame, idCol: String, textCol: String,
       dir: String, k: Int, nBands: Int, shingleN: Int, mode: String): Unit = {
     val spark = docs.sparkSession
+    val op = if (mode == "append") "lsh.append" else "lsh.save"
     val sigs = signatures(docs, idCol, textCol, k, shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // per-table writer leases: a save/append racing a compaction's
-      // rewrite of the same table aborts loudly (IndexFiles doc).
       // SHINGLES LAND FIRST: every doc visible in bands is then already
       // verifiable (bands-without-shingles pairs drop silently at the
       // probe's inner join), and a retrain — which rebuilds bands FROM
       // the shingles table — can at worst duplicate an in-flight doc's
       // band rows (candidates are DISTINCT; dedupe-compact removes the
       // residue) instead of losing them.
-      def writeShingles(): Unit = {
-        IndexFiles.withTableLeaseFenced(spark, dir, "shingles") { lease =>
-          // fenced before the write job (the appendToIndex rationale): a
-          // taken-over holder must not land rows into a version the taker
-          // is about to prune
-          if (mode == "append")
-            FaultPoints.beforeFencedWrite("lsh.append", "shingles")
-          lease.checkStillHeld("the shingles write")
-          sigs.select(col(idCol).as("doc_id"), col("shingles"))
-            .write.mode(mode)
-            .parquet(IndexFiles.tablePath(spark, dir, "shingles"))
-        }
-        if (mode == "append") FaultPoints.afterTable("lsh.append", "shingles")
-      }
+      def writeShingles(): Unit =
+        IndexFiles.fencedWrite(spark, dir, "shingles", op, mode)(
+          sigs.select(col(idCol).as("doc_id"), col("shingles")).write)
       def writeBands(): Unit =
-        IndexFiles.withTableLeaseFenced(spark, dir, "bands") { lease =>
+        IndexFiles.fencedWrite(spark, dir, "bands", op, mode) {
           // the batch was banded under the geometry read BEFORE the lease;
           // a retrain that cut over in between would make those rows
           // silently never-colliding — re-check under the lease and abort
@@ -709,14 +696,9 @@ object Dedup {
                 "shingles until a compactLshIndex(dedupeRows = true) — " +
                 "harmless to probes (candidates are DISTINCT) but run the " +
                 "dedupe compact to reclaim the space")
-            FaultPoints.beforeFencedWrite("lsh.append", "bands")
           }
-          lease.checkStillHeld("the bands write")
-          bands(sigs, idCol, k, nBands)
-            .select(col("band"), col("bsig"), col(idCol).as("doc_id"))
-            .repartition(col("band"), col("bsig"))
-            .write.mode(mode).partitionBy("band")
-            .parquet(IndexFiles.tablePath(spark, dir, "bands"))
+          bandsWriter(bands(sigs, idCol, k, nBands)
+            .select(col("band"), col("bsig"), col(idCol).as("doc_id")))
         }
       // Overlap the two writes ONLY on a provably reader-free bootstrap
       // (r18, guide §2.6): a fresh-dir overwrite save has no live tables,
@@ -726,13 +708,10 @@ object Dedup {
       // any save targeting a dir that already has either table — keeps
       // the strict order: shingles-first is the reader/retrain
       // correctness contract there.
-      val fsW = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-        spark.sparkContext.hadoopConfiguration)
+      val fs = IndexFiles.fsFor(spark, dir)
       val freshBootstrap = mode == "overwrite" &&
-        !fsW.exists(new org.apache.hadoop.fs.Path(
-          IndexFiles.tablePath(spark, dir, "shingles"))) &&
-        !fsW.exists(new org.apache.hadoop.fs.Path(
-          IndexFiles.tablePath(spark, dir, "bands")))
+        Seq("shingles", "bands").forall(t => !fs.exists(
+          new org.apache.hadoop.fs.Path(IndexFiles.tablePath(spark, dir, t))))
       if (freshBootstrap) {
         // Par.overlap (not bare Future/Await): a writeBands failure must
         // still await the shingles write before the finally unpersists
@@ -745,64 +724,70 @@ object Dedup {
     } finally sigs.unpersist()
   }
 
+  /** The bands write shape: repartition on (band, bsig), so each band
+    * directory holds a bounded file count instead of one file per
+    * (task x band).
+    */
+  private def bandsWriter(bands: DataFrame) =
+    bands.repartition(col("band"), col("bsig")).write.partitionBy("band")
+
   private def writeLshMeta(spark: org.apache.spark.sql.SparkSession,
-      k: Int, nBands: Int, shingleN: Int, path: String): Unit = {
+      geometry: (Int, Int, Int), path: String): Unit = {
     import spark.implicits._
-    Seq((k, nBands, shingleN)).toDF("k", "n_bands", "shingle_n")
+    Seq(geometry).toDF("k", "n_bands", "shingle_n")
       .coalesce(1).write.mode("overwrite").parquet(path)
     // driver-readable sidecar (r18): the geometry is three ints, but a
     // parquet read of it costs a one-task Spark job — and the lifecycle
     // verbs re-read it up to four times per operation (entry checks plus
-    // the required under-lease re-checks). The sidecar is read with one
-    // FS call, written via create+rename so a racing reader sees the old
-    // file or the new one, never a torn write; the parquet table remains
-    // the durable format and the fallback for indexes written before the
+    // the required under-lease re-checks). The parquet table remains the
+    // durable format and the fallback for indexes written before the
     // sidecar existed. Underscore prefix: invisible to any table scan.
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/._meta.txt.tmp")
-    val dst = new org.apache.hadoop.fs.Path(s"$path/_meta.txt")
-    val out = fs.create(tmp, true)
-    try out.write(s"$k,$nBands,$shingleN".getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(dst)) fs.delete(dst, false)
-    if (!fs.rename(tmp, dst)) fs.delete(tmp, false)
+    val (k, nBands, shingleN) = geometry
+    IndexFiles.writeSmallFile(IndexFiles.fsFor(spark, path), path,
+      "_meta.txt", s"$k,$nBands,$shingleN", required = false)
   }
 
   /** The index's live hash geometry: the `_meta` embedded in the LIVE
     * bands version when present ([[retrainLshIndex]] and the bands
     * rewrite paths publish geometry and bands atomically under the one
     * manifest), else the save-time `<dir>/meta` (an index never
-    * regeometried). Callers that also SCAN the bands table must resolve
-    * the path once and use [[readLshMetaAt]] — resolving twice straddles
-    * a retrain cutover and pairs a new geometry with old bands rows (or
-    * vice versa), which silently never collide.
+    * regeometried) — [[IndexFiles.liveArtifact]]. Callers that also SCAN
+    * the bands table must resolve the path once and pass it to
+    * [[lshGeometry]] — resolving twice straddles a retrain cutover and
+    * pairs a new geometry with old bands rows (or vice versa), which
+    * silently never collide.
     */
   private def readLshMeta(spark: org.apache.spark.sql.SparkSession,
       dir: String): (Int, Int, Int) =
-    readLshMetaAt(spark, dir, IndexFiles.tablePath(spark, dir, "bands"))
+    lshGeometry(spark, dir, IndexFiles.tablePath(spark, dir, "bands"))
 
+  private def lshGeometry(spark: org.apache.spark.sql.SparkSession,
+      dir: String, bandsPath: String): (Int, Int, Int) =
+    readLshMetaAt(spark, IndexFiles.liveArtifact(spark, dir, bandsPath, "meta"))
+
+  /** The geometry stored at `p`: the sidecar first (one FS read, no Spark
+    * job — see [[writeLshMeta]]), the parquet for pre-sidecar indexes.
+    */
   private def readLshMetaAt(spark: org.apache.spark.sql.SparkSession,
-      dir: String, bandsPath: String): (Int, Int, Int) = {
-    val embedded = new org.apache.hadoop.fs.Path(s"$bandsPath/_meta")
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-      spark.sparkContext.hadoopConfiguration)
-    val p = if (fs.exists(embedded)) s"$bandsPath/_meta" else s"$dir/meta"
-    // sidecar first (one FS read, no Spark job — see writeLshMeta);
-    // parquet fallback for pre-sidecar indexes
-    val side = new org.apache.hadoop.fs.Path(s"$p/_meta.txt")
-    if (fs.exists(side)) {
-      val in = fs.open(side)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val Array(k, nBands, shingleN) = txt.trim.split(",").map(_.toInt)
-      (k, nBands, shingleN)
-    } else {
-      val r = spark.read.schema(lshMetaSchema).parquet(p)
-        .select(col("k"), col("n_bands"), col("shingle_n")).head()
-      (r.getInt(0), r.getInt(1), r.getInt(2))
+      p: String): (Int, Int, Int) =
+    IndexFiles.readSmallFile(IndexFiles.fsFor(spark, p), p, "_meta.txt") match {
+      case Some(txt) =>
+        val Array(k, nBands, shingleN) = txt.trim.split(",").map(_.toInt)
+        (k, nBands, shingleN)
+      case None =>
+        val r = spark.read.schema(lshMetaSchema).parquet(p)
+          .select(col("k"), col("n_bands"), col("shingle_n")).head()
+        (r.getInt(0), r.getInt(1), r.getInt(2))
     }
-  }
+
+  /** The bands tables' rewrites re-embed the live geometry in the new
+    * version: a compaction or delete after a retrain must not strand the
+    * retrained meta in the pruned old version and fall back to the stale
+    * save-time one.
+    */
+  private def carryMeta(spark: org.apache.spark.sql.SparkSession) =
+    IndexFiles.Carry("meta",
+      (from, to) => writeLshMeta(spark, readLshMetaAt(spark, from), to))
 
   /** Compact the saved band and shingle tables (see
     * [[graft.operators.Similarity.compactIvfIndex]] — same maintenance
@@ -812,15 +797,10 @@ object Dedup {
     */
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, dedupeRows: Boolean = false): Unit = {
-    // LSH-aware bands compact (not the generic IndexFiles.compact): the
-    // live geometry is re-embedded in the compacted version, so a
-    // compaction AFTER a retrain cannot strand the retrained geometry in
-    // the old version and fall back to the stale save-time meta (the
-    // compactIvfIndex centroid discipline). Geometry and rows resolve
-    // from ONE bands version INSIDE the lease — split or pre-lease
-    // resolution could pair a retrain's rows with the pre-retrain meta
-    // (rows that then silently never collide) or revert the retrain
-    // outright.
+    // the bands compact re-embeds the live geometry (carryMeta), read
+    // with the rows from ONE bands version INSIDE the lease — split or
+    // pre-lease resolution could pair a retrain's rows with the
+    // pre-retrain meta or revert the retrain outright.
     // The two table compacts are independent row-identical rewrites of
     // DISJOINT tables — concurrent driver-thread jobs (r19, guide §2.6;
     // the Retrieval.compactIndex rationale: each cuts over atomically and
@@ -833,17 +813,9 @@ object Dedup {
       IndexFiles.compact(spark, dir, "shingles", None, dedupeRows,
         schema = Some(lshShinglesSchema))
     } {
-      IndexFiles.writeNextVersion(spark, dir, "bands") { next =>
-        val bandsPath = IndexFiles.tablePath(spark, dir, "bands")
-        val (k, nBands, shingleN) = readLshMetaAt(spark, dir, bandsPath)
-        val df0 = readLshBandsAt(spark, bandsPath)
-          .select(col("band"), col("bsig"), col("doc_id"))
-        val df = if (dedupeRows) df0.distinct() else df0
-        df.repartition(col("band")).write.mode("overwrite")
-          .partitionBy("band").parquet(next)
-        IndexFiles.ensureReadable(df, next)
-        writeLshMeta(spark, k, nBands, shingleN, s"$next/_meta")
-      }
+      IndexFiles.rewriteRows(spark, dir, "bands", Some(lshBandsSchema),
+        Some("band"), carry = Some(carryMeta(spark)))(
+        IndexFiles.keepRows(dedupeRows))
     }
     FaultPoints.afterTable("lsh.compact", "bands")
     IndexFiles.compactLedgers(spark, dir)
@@ -862,55 +834,22 @@ object Dedup {
   def deleteFromLshIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, docIds: DataFrame, idCol: String = "doc_id"): Unit = {
     val del = docIds.select(col(idCol).cast("long").as("doc_id")).distinct()
-    // The two anti-join rewrites are independent O(index) jobs over
-    // DISJOINT tables — COMPUTED concurrently (r19, guide §2.6, the
-    // Retrieval.deleteFromIndex shape) with the PUBLISH order preserved:
-    // the shingles rewrite runs on a driver thread but gates its cutover
-    // on the bands cutover having landed (bands-first keeps the
-    // documented window shape: a half-landed delete leaves dead SHINGLE
-    // rows — invisible, the probe's candidates come from bands — never
-    // dead band rows beyond what a concurrent retrain can synthesize).
-    // If the bands rewrite fails, the gate propagates and the shingles
-    // rewrite aborts UNPUBLISHED; Par.overlap always awaits it.
-    // Fault-point semantics re-derived (IndexInterleaveSpec): the hook
-    // fires AFTER both rewrites, no lease held — the bands-published-
-    // shingles-pending window is no longer an injectable seam (a
-    // competing verb racing it aborts on the held shingles lease).
-    val bandsPublished = scala.concurrent.Promise[Unit]()
-    Par.overlap {
-      // no explicit coalesce: AQE sizes the post-join output (the
-      // deleteFromIndex doclens rationale — shingle sets are the WIDE
-      // table here, a fixed tiny count would bottleneck the rewrite)
-      IndexFiles.writeNextVersion(spark, dir, "shingles") { next =>
-        val shingles = readLshShingles(spark, dir)
-          .join(del, Seq("doc_id"), "left_anti")
-        shingles.write.mode("overwrite").parquet(next)
-        IndexFiles.ensureReadable(shingles, next)
-        // publish-order gate (see above): bands must cut over first
-        Par.awaitGate(bandsPublished.future, "deleteFromLshIndex", "shingles")
-      }
-    } {
-      try {
-        IndexFiles.writeNextVersion(spark, dir, "bands") { next =>
-          // geometry + rows from ONE bands version inside the lease (the
-          // compactLshIndex rationale)
-          val bandsPath = IndexFiles.tablePath(spark, dir, "bands")
-          val (k, nBands, shingleN) = readLshMetaAt(spark, dir, bandsPath)
-          val bands = readLshBandsAt(spark, bandsPath)
-            .select(col("band"), col("bsig"), col("doc_id"))
-            .join(del, Seq("doc_id"), "left_anti")
-            .select("band", "bsig", "doc_id")
-          bands.repartition(col("band")).write.mode("overwrite")
-            .partitionBy("band").parquet(next)
-          IndexFiles.ensureReadable(bands, next)
-          // re-embed the live geometry: a delete after a retrain must not
-          // strand the retrained meta in the pruned old version
-          writeLshMeta(spark, k, nBands, shingleN, s"$next/_meta")
-        }
-        bandsPublished.success(())
-      } catch {
-        case e: Throwable => bandsPublished.failure(e); throw e
-      }
+    val drop: DataFrame => DataFrame = _.join(del, Seq("doc_id"), "left_anti")
+    // The two anti-join rewrites run concurrently with bands PUBLISHED
+    // first: a half-landed delete leaves dead SHINGLE rows — invisible,
+    // the probe's candidates come from bands — never dead band rows
+    // beyond what a concurrent retrain can synthesize. The bands rewrite
+    // re-embeds the live geometry (carryMeta). Fault-point semantics
+    // re-derived (IndexInterleaveSpec): the hook fires AFTER both
+    // rewrites, no lease held — the bands-published-shingles-pending
+    // window is no longer an injectable seam (a competing verb racing it
+    // aborts on the held shingles lease).
+    IndexFiles.publishInOrder("deleteFromLshIndex", "shingles") {
+      IndexFiles.rewriteRows(spark, dir, "bands", Some(lshBandsSchema),
+        Some("band"), carry = Some(carryMeta(spark)))(drop)
+    } { gate =>
+      IndexFiles.rewriteRows(spark, dir, "shingles",
+        Some(lshShinglesSchema), None, beforePublish = gate)(drop)
     }
     FaultPoints.afterTable("lsh.delete", "bands")
   }
@@ -953,15 +892,9 @@ object Dedup {
     // retrain committing between the pre-check above and the append
     // would otherwise take the foreign (now wrong-geometry) band rows
     // silently — the appendToLshIndex race, same loud abort
-    IndexFiles.withTableLeaseFenced(spark, into, "shingles") { lease =>
-      // fenced before the write job (the appendToIndex rationale)
-      lease.checkStillHeld("the shingles merge-append")
-      readLshShingles(spark, from)
-        .write.mode("append")
-        .parquet(IndexFiles.tablePath(spark, into, "shingles"))
-    }
-    FaultPoints.afterTable("lsh.merge", "shingles")
-    IndexFiles.withTableLeaseFenced(spark, into, "bands") { lease =>
+    IndexFiles.fencedWrite(spark, into, "shingles", "lsh.merge")(
+      readLshShingles(spark, from).write)
+    IndexFiles.fencedWrite(spark, into, "bands", "lsh.merge") {
       val live = readLshMeta(spark, into)
       require(live == gFrom,
         s"mergeLshIndexes: host geometry changed to $live while merging " +
@@ -969,12 +902,8 @@ object Dedup {
           "merge (the already-appended shingle rows are geometry-free " +
           "and byte-identical on the re-run; dedupe-compact removes the " +
           "duplicates)")
-      lease.checkStillHeld("the bands merge-append")
-      readLshBandsAt(spark, IndexFiles.tablePath(spark, from, "bands"))
-        .select(col("band"), col("bsig"), col("doc_id"))
-        .repartition(col("band"), col("bsig"))
-        .write.mode("append").partitionBy("band")
-        .parquet(IndexFiles.tablePath(spark, into, "bands"))
+      bandsWriter(readLshBandsAt(spark,
+        IndexFiles.tablePath(spark, from, "bands")))
     }
   }
 
@@ -1001,7 +930,7 @@ object Dedup {
     // retrain cutover between two resolutions would band the batch under
     // one geometry and scan the other's rows (silently zero collisions)
     val bandsPath = IndexFiles.tablePath(spark, dir, "bands")
-    val (k, nBands, shingleN) = readLshMetaAt(spark, dir, bandsPath)
+    val (k, nBands, shingleN) = lshGeometry(spark, dir, bandsPath)
     val bSigs = scope.track(signatures(batch, idCol, textCol, k, shingleN))
     // cap BOTH sides: a degenerate boilerplate bucket can arrive in the
     // batch too, and an uncapped batch bucket of B docs would multiply

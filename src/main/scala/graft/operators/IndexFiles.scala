@@ -1,17 +1,39 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Shared file-layout maintenance for the persisted index families (IVF
-  * lists, LSH bands/shingles, BM25 postings/doclens). Every append path
-  * adds at least one new file per touched partition, so a year of daily
-  * ingest turns each `cell=`/`band=`/`bucket=` directory into hundreds of
-  * small files — the listing/open overhead then dominates the
-  * partition-pruned probes these layouts exist for. Compaction rewrites a
-  * table to one file per partition (row-identical by default) and cuts
-  * readers over with a ZERO-DOWNTIME versioned swap:
+/** The one lifecycle engine of the persisted index families (IVF and
+  * IVF-PQ lists, LSH bands/shingles, BM25 postings/doclens/stats): every
+  * lifecycle decision is written once here, and the families keep only
+  * their math (tokenize, band, assign, encode, the BM25 stats
+  * arithmetic). The verbs:
+  *
+  *  - [[fencedWrite]] — the one fenced append (lease, build under it,
+  *    fault point, fence, write, release), used by every append, merge
+  *    and the LSH save;
+  *  - [[rewriteRows]] — the one row-filtering rewrite (read the live
+  *    version with its static schema, filter, write, keep readable,
+  *    re-embed a live artifact, publish), used by every delete and
+  *    compaction ([[compact]]);
+  *  - [[publishInOrder]] — the ordered two-table publish of the BM25 and
+  *    LSH deletes;
+  *  - [[writeSmallFile]]/[[readSmallFile]] — the one atomic small text
+  *    file (manifests, the ledger highwater, artifact sidecars);
+  *  - [[liveArtifact]] — where a table's quantizer or geometry lives;
+  *  - [[applyBatchOnce]] — the ingest ledger bracket.
+  *
+  * Retrains and the BM25 stats rebuild compute new contents and stay
+  * family code over [[writeNextVersion]].
+  *
+  * Every append path adds at least one new file per touched partition,
+  * so a year of daily ingest turns each `cell=`/`band=`/`bucket=`
+  * directory into hundreds of small files — the listing/open overhead
+  * then dominates the partition-pruned probes these layouts exist for.
+  * Compaction rewrites a table to one file per partition (row-identical
+  * by default) and cuts readers over with a ZERO-DOWNTIME versioned swap:
   *
   *  - a table `sub` lives at `<dir>/<sub>` when freshly saved (version 0,
   *    the legacy layout) and at `<dir>/<sub>.v<N>` after N rewrites;
@@ -29,15 +51,15 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * Single-writer contract: appends and rewrites of one table must not
   * run concurrently with each other; readers are lock-free. Since r15
   * the contract is ENFORCED best-effort by a per-table writer lease
-  * ([[withTableLease]]) taken by every rewrite ([[writeNextVersion]])
+  * ([[withTableLeaseFenced]]) taken by every rewrite ([[writeNextVersion]])
   * and every family append path: a second concurrent writer aborts
   * loudly instead of silently corrupting the table (a racing rewrite
   * would otherwise delete the first writer's in-progress version as
   * "crash residue"). Every rewrite resolves the table version and reads
   * its inputs INSIDE the lease (a read-modify-write whose read preceded
   * the lease would silently revert a writer that committed in between).
-  * Append-mode writers are FENCED too (since r17): each calls
-  * [[WriterLease.checkStillHeld]] immediately before its write job
+  * Append-mode writers are FENCED too (since r17): [[fencedWrite]] calls
+  * [[WriterLease.checkStillHeld]] immediately before the write job
   * starts, so a holder that stalled past the stale window and was taken
   * over aborts instead of landing rows into a table version the taker
   * is about to prune (silently lost rows — worse than the duplicate an
@@ -86,7 +108,7 @@ private[graft] object IndexFiles {
   private val heartbeatMs = 15 * 1000L
 
   /** Settle delay for the double re-read that guards non-atomic
-    * check-then-create lock acquisition (see [[withTableLease]]) — must
+    * check-then-create lock acquisition (see [[withTableLeaseFenced]]) — must
     * exceed a plausible competitor's check-to-create skew. `private[graft]`
     * var only so time-sensitive specs can shorten it.
     */
@@ -182,14 +204,8 @@ private[graft] object IndexFiles {
     * advisory protocol above. That is the right
     * price — the hazard being closed is unsynchronized AUTOMATION (a
     * compaction cron racing a streaming append), not byzantine
-    * concurrency.
-    */
-  def withTableLease[T](spark: SparkSession, dir: String, sub: String,
-      staleLeaseMs: Long = defaultStaleLeaseMs)(body: => T): T =
-    withTableLeaseFenced(spark, dir, sub, staleLeaseMs)(_ => body)
-
-  /** [[withTableLease]] variant passing the [[WriterLease]] handle so the
-    * body can fence its publish points ([[WriterLease.checkStillHeld]]).
+    * concurrency. The body receives the [[WriterLease]] handle so it can
+    * fence its publish points ([[WriterLease.checkStillHeld]]).
     */
   private[graft] def withTableLeaseFenced[T](spark: SparkSession,
       dir: String, sub: String,
@@ -326,7 +342,7 @@ private[graft] object IndexFiles {
     owner
   }
 
-  private def fsFor(spark: SparkSession, path: String): FileSystem =
+  private[graft] def fsFor(spark: SparkSession, path: String): FileSystem =
     FileSystem.get(new java.net.URI(path),
       spark.sparkContext.hadoopConfiguration)
 
@@ -354,15 +370,9 @@ private[graft] object IndexFiles {
     * a legacy table — or any reader after a crash mid-first-rewrite —
     * would resolve the incomplete v1 instead of the intact legacy v0).
     */
-  private def liveVersion(fs: FileSystem, dir: String, sub: String): Int = {
-    val manifest = new Path(s"$dir/$sub.manifest")
-    if (fs.exists(manifest)) {
-      val in = fs.open(manifest)
-      try new String(in.readAllBytes,
-        java.nio.charset.StandardCharsets.UTF_8).trim.toInt
-      finally in.close()
-    } else versionsOnDisk(fs, dir, sub).maxOption.getOrElse(0)
-  }
+  private def liveVersion(fs: FileSystem, dir: String, sub: String): Int =
+    readSmallFile(fs, dir, s"$sub.manifest").map(_.trim.toInt)
+      .getOrElse(versionsOnDisk(fs, dir, sub).maxOption.getOrElse(0))
 
   /** The live directory of table `sub` under index `dir` — EVERY read and
     * append path resolves through this (a freshly saved index resolves to
@@ -377,7 +387,7 @@ private[graft] object IndexFiles {
   /** Write a replacement for table `sub` as its next version (the `write`
     * callback receives the target directory) and publish it. The
     * zero-downtime successor of the old delete+rename swap. Runs under
-    * the table's writer lease ([[withTableLease]]): a concurrent rewrite
+    * the table's writer lease ([[withTableLeaseFenced]]): a concurrent rewrite
     * or append of the same table aborts loudly instead of the two
     * rewriters computing the same `next` and deleting each other's
     * in-progress version as crash residue. The two destructive points —
@@ -398,7 +408,7 @@ private[graft] object IndexFiles {
     // fallback would resolve the in-progress (or crash-abandoned) next
     // version for every lock-free reader
     if (!fs.exists(new Path(s"$dir/$sub.manifest")))
-      writeManifest(fs, dir, sub, live)
+      writeSmallFile(fs, dir, s"$sub.manifest", live.toString, required = true)
     val next = live + 1
     val target = new Path(versionPath(dir, sub, next))
     // crash residue: a previous rewrite attempt may have died mid-write of
@@ -417,17 +427,40 @@ private[graft] object IndexFiles {
     publishVersion(spark, dir, sub, next)
   }
 
-  private def writeManifest(fs: FileSystem, dir: String, sub: String,
-      v: Int): Unit = {
-    val manifest = new Path(s"$dir/$sub.manifest")
-    val tmp = new Path(s"$dir/$sub.manifest.tmp")
+  /** Atomically replace the small text file `<dir>/<name>` — a version
+    * manifest, a ledger highwater, an artifact sidecar (`_meta.txt`,
+    * `_centroids.txt`, `_codebooks.txt`): write `<dir>/.<name>.tmp`, then
+    * rename it over the old file, so a racing reader sees the old text or
+    * the new, never a torn write. A failed rename raises when `required`
+    * (the manifest and the highwater have no fallback); otherwise the tmp
+    * file is dropped and readers fall back to the parquet table the
+    * sidecar mirrors.
+    */
+  private[graft] def writeSmallFile(fs: FileSystem, dir: String,
+      name: String, text: String, required: Boolean): Unit = {
+    val dst = new Path(s"$dir/$name")
+    val tmp = new Path(s"$dir/.$name.tmp")
     val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    if (fs.exists(manifest)) fs.delete(manifest, false)
-    require(fs.rename(tmp, manifest),
-      s"writeManifest: rename $tmp -> $manifest failed")
+    if (fs.exists(dst)) fs.delete(dst, false)
+    if (!fs.rename(tmp, dst)) {
+      require(!required, s"rename $tmp -> $dst failed")
+      fs.delete(tmp, false)
+    }
+  }
+
+  /** The text of `<dir>/<name>` written by [[writeSmallFile]], if present. */
+  private[graft] def readSmallFile(fs: FileSystem, dir: String,
+      name: String): Option[String] = {
+    val f = new Path(s"$dir/$name")
+    if (!fs.exists(f)) None
+    else {
+      val in = fs.open(f)
+      try Some(new String(in.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8))
+      finally in.close()
+    }
   }
 
   /** Cut readers over to version `v` (already fully written) and prune
@@ -444,7 +477,7 @@ private[graft] object IndexFiles {
     val prev = liveVersion(fs, dir, sub)
     require(fs.exists(new Path(versionPath(dir, sub, v))),
       s"publishVersion: $dir/$sub.v$v does not exist")
-    writeManifest(fs, dir, sub, v)
+    writeSmallFile(fs, dir, s"$sub.manifest", v.toString, required = true)
     // keep TWO prior versions: an in-flight reader that resolved just
     // before this cutover survives not only this publish but a whole
     // further compaction cycle (a reader slower than one rewrite would
@@ -455,44 +488,134 @@ private[graft] object IndexFiles {
       .foreach(o => fs.delete(new Path(versionPath(dir, sub, o)), true))
   }
 
-  /** Rewrite `sub` (a parquet table under `dir`) compacted: partitioned
-    * tables repartition on `partitionBy` (one task -> one file per
-    * partition, the writeLists discipline), unpartitioned ones coalesce
-    * to a file count SIZED FROM THE TABLE'S ON-DISK BYTES (an FS listing,
-    * no data scan): ceil(bytes / 256 MB), floored at `flatFiles`. A fixed
-    * small count would serialize the rewrite at scale — coalesce merges
-    * READ tasks too, so coalesce(4) over a billion-row doclens table is a
-    * 4-task job; sizing by bytes keeps tiny tables at `flatFiles` files
-    * while a 16 GB table compacts with ~64-way parallelism. `dedupeRows`
-    * drops full-row duplicates first — the at-least-once replay repair (a
-    * replayed micro-batch re-appends byte-identical rows). The rewrite
-    * lands as the next table version and cuts over with zero reader
-    * downtime (see the object doc).
+  /** The one fenced write of the index families: every append, merge
+    * and the LSH save land rows in a live table through here, in this
+    * order — take `sub`'s writer lease; build the batch under it (`batch`
+    * may read the index's centroids or geometry and `require` that they
+    * still match); fire [[FaultPoints.beforeFencedWrite]]; fence
+    * ([[WriterLease.checkStillHeld]]: a holder taken over while stalled
+    * would otherwise land its rows in a version the taker is about to
+    * prune — silently lost rows, worse than the dedupe-compactable
+    * duplicate an abort + replay leaves); write to the live
+    * [[tablePath]]; release the lease; fire [[FaultPoints.afterTable]].
+    * `op` names the verb for the fault points (`bm25.append`,
+    * `lsh.merge`, ...); `batch` carries the family's own partitioning.
     */
-  def compact(spark: SparkSession, dir: String, sub: String,
-      partitionBy: Option[String], dedupeRows: Boolean,
-      flatFiles: Int = 4,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): Unit =
+  private[graft] def fencedWrite(spark: SparkSession, dir: String,
+      sub: String, op: String, mode: String = "append")
+      (batch: => DataFrameWriter[Row]): Unit = {
+    withTableLeaseFenced(spark, dir, sub) { lease =>
+      val writer = batch
+      FaultPoints.beforeFencedWrite(op, sub)
+      lease.checkStillHeld(s"the $op write of $sub")
+      writer.mode(mode).parquet(tablePath(spark, dir, sub))
+    }
+    FaultPoints.afterTable(op, sub)
+  }
+
+  /** A small artifact a table rewrite carries into the new version:
+    * `copy(from, to)` reads it at `from` ([[liveArtifact]]) and writes it
+    * at `to` = `<next version>/_<name>`.
+    */
+  private[graft] final case class Carry(name: String,
+      copy: (String, String) => Unit)
+
+  /** Where artifact `name` of a table lives, given the table's resolved
+    * live version `live`: embedded as `<live>/_<name>` when a retrain or
+    * rewrite put it there (Spark ignores underscore paths, so the table
+    * scan never sees it), else the save-time `<dir>/<name>`. Embedding
+    * makes the artifact and the rows cut over under ONE manifest publish,
+    * so a reader never pairs a new quantizer or geometry with old rows.
+    * Callers that also read the rows pass the same `live` they read them
+    * from — resolving twice could straddle a cutover.
+    */
+  private[graft] def liveArtifact(spark: SparkSession, dir: String,
+      live: String, name: String): String =
+    if (fsFor(spark, dir).exists(new Path(s"$live/_$name"))) s"$live/_$name"
+    else s"$dir/$name"
+
+  /** `rows` for a rewrite that keeps every row, or drops full-row
+    * duplicates — the at-least-once replay repair (a replayed
+    * micro-batch re-appends byte-identical rows).
+    */
+  private[graft] def keepRows(dedupeRows: Boolean): DataFrame => DataFrame =
+    df => if (dedupeRows) df.distinct() else df
+
+  /** The one row-filtering rewrite of table `sub`: under its lease
+    * ([[writeNextVersion]]) resolve and read the live version — with the
+    * static `schema` when the owner knows it (a schema-less read runs a
+    * footer-inference job), columns in schema order — apply `rows` (an
+    * anti-join, [[keepRows]]), write the next version, keep it readable
+    * ([[ensureReadable]]), re-land `carry` from the live version into the
+    * new one, run `beforePublish` (the gate of [[publishInOrder]]) and
+    * publish. Partitioned tables repartition on `partitionBy` (one task
+    * -> one file per partition). Flat tables are written as the rows come
+    * unless `flatFiles` is set: then they coalesce to a file count SIZED
+    * FROM THE TABLE'S ON-DISK BYTES (an FS listing, no data scan),
+    * ceil(bytes / 256 MB) floored at `flatFiles` — a fixed small count
+    * would serialize the rewrite at scale (coalesce merges READ tasks
+    * too). Deletes leave flat tables uncoalesced: the anti-join's shuffle
+    * lets AQE size their output.
+    */
+  private[graft] def rewriteRows(spark: SparkSession, dir: String,
+      sub: String, schema: Option[StructType], partitionBy: Option[String],
+      flatFiles: Option[Int] = None, carry: Option[Carry] = None,
+      beforePublish: () => Unit = () => ())
+      (rows: DataFrame => DataFrame): Unit =
     writeNextVersion(spark, dir, sub) { next =>
       // resolve + read INSIDE the lease: resolving before it could pair
       // this rewrite with a version another writer replaced in between
       // (reverting that writer's committed work)
       val live = tablePath(spark, dir, sub)
-      // a caller-supplied schema skips the footer-inference job (r18);
-      // owners of fixed-shape tables know their schema statically
-      val df0 = schema.map(spark.read.schema(_)).getOrElse(spark.read)
-        .parquet(live)
-      val df = if (dedupeRows) df0.distinct() else df0
-      val writer = partitionBy match {
-        case Some(p) => df.repartition(col(p)).write.partitionBy(p)
-        case None =>
-          val n = math.max(flatFiles,
-            (tableBytes(spark, live) / (256L << 20)).toInt + 1)
-          df.coalesce(n).write
+      val kept = rows(schema.fold(spark.read)(spark.read.schema(_))
+        .parquet(live))
+      val df = schema.fold(kept)(s => kept.select(s.fieldNames.map(col): _*))
+      val writer = (partitionBy, flatFiles) match {
+        case (Some(p), _) => df.repartition(col(p)).write.partitionBy(p)
+        case (None, Some(f)) =>
+          df.coalesce(math.max(f,
+            (tableBytes(spark, live) / (256L << 20)).toInt + 1)).write
+        case (None, None) => df.write
       }
       writer.mode("overwrite").parquet(next)
       ensureReadable(df, next)
+      carry.foreach(c =>
+        c.copy(liveArtifact(spark, dir, live, c.name), s"$next/_${c.name}"))
+      beforePublish()
     }
+
+  /** Rewrite `sub` compacted ([[rewriteRows]] with its by-bytes
+    * coalesce for flat tables), row-identical unless `dedupeRows`. The
+    * rewrite lands as the next table version and cuts over with zero
+    * reader downtime (see the object doc).
+    */
+  def compact(spark: SparkSession, dir: String, sub: String,
+      partitionBy: Option[String], dedupeRows: Boolean,
+      flatFiles: Int = 4, schema: Option[StructType] = None): Unit =
+    rewriteRows(spark, dir, sub, schema, partitionBy,
+      flatFiles = Some(flatFiles))(keepRows(dedupeRows))
+
+  /** The ordered two-table publish: run two table rewrites as concurrent
+    * driver jobs, but publish `first`'s table before the second's —
+    * `second` receives a gate to call after its data write and before its
+    * publish ([[rewriteRows]]' `beforePublish`). The lease heartbeat
+    * keeps the second table's lease fresh while it waits. If `first`
+    * fails, the gate rethrows and the second rewrite aborts UNPUBLISHED
+    * (its next-version residue is cleared by the next rewrite); both are
+    * always awaited ([[Par.overlap]]), so no job outlives the call. Crash
+    * windows: the first table may cut over without the second, never the
+    * reverse.
+    */
+  private[graft] def publishInOrder(verb: String, secondTable: String)
+      (first: => Unit)(second: (() => Unit) => Unit): Unit = {
+    val firstPublished = scala.concurrent.Promise[Unit]()
+    Par.overlap {
+      second(() => Par.awaitGate(firstPublished.future, verb, secondTable))
+    } {
+      try { first; firstPublished.success(()) }
+      catch { case e: Throwable => firstPublished.failure(e); throw e }
+    }
+  }
 
   /** Keep a just-rewritten table READABLE when its content is empty: a
     * dynamic-partition overwrite of an empty frame lands ZERO parquet
@@ -580,6 +703,20 @@ private[graft] object IndexFiles {
       (writerId == "local" && fs.exists(new Path(s"$dir/_ledger/applied-$batchId")))
   }
 
+  /** The ledger bracket of one ingest step: skip `body` when `batchId`
+    * is already applied for `writerId`; else run it and write the marker
+    * LAST — a crash before the marker replays the batch once (index rows
+    * repairable by a dedupe compact), while a marker written early would
+    * drop the batch. Without a batchId (an ad-hoc backfill) the body just
+    * runs.
+    */
+  def applyBatchOnce(spark: SparkSession, dir: String, writerId: String,
+      batchId: Option[Long])(body: => Unit): Unit =
+    if (!batchId.exists(wasBatchApplied(spark, dir, writerId, _))) {
+      body
+      batchId.foreach(recordBatchApplied(spark, dir, writerId, _))
+    }
+
   def recordBatchApplied(spark: SparkSession, dir: String, writerId: String,
       batchId: Long): Unit = {
     val fs = fsFor(spark, dir)
@@ -629,18 +766,9 @@ private[graft] object IndexFiles {
     val hw0 = readHighwater(fs, dir, writerId).getOrElse(-1L)
     var hw = hw0
     ids.filter(_ > hw).sorted.foreach(id => if (id == hw + 1) hw = id)
-    if (hw > hw0) {
-      val hwPath = new Path(ledgerDir, "highwater")
-      val tmp = new Path(ledgerDir, "highwater.tmp")
-      fs.mkdirs(ledgerDir)
-      val out = fs.create(tmp, true)
-      try out.write(hw.toString.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (fs.exists(hwPath)) fs.delete(hwPath, false)
-      require(fs.rename(tmp, hwPath),
-        s"compactLedger: rename $tmp -> $hwPath failed")
-    }
+    if (hw > hw0)
+      writeSmallFile(fs, ledgerDir.toString, "highwater", hw.toString,
+        required = true)
     scoped.filter(_ <= hw).foreach(id =>
       fs.delete(ledgerMarker(dir, writerId, id), false))
     flat.filter(_ <= hw).foreach(id =>
@@ -667,16 +795,9 @@ private[graft] object IndexFiles {
   }
 
   private def readHighwater(fs: FileSystem, dir: String,
-      writerId: String): Option[Long] = {
-    val p = new Path(ledgerMarker(dir, writerId, 0L).getParent, "highwater")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-      finally in.close()
-    }
-  }
+      writerId: String): Option[Long] =
+    readSmallFile(fs, ledgerMarker(dir, writerId, 0L).getParent.toString,
+      "highwater").map(_.trim.toLong)
 
   private def ledgerMarker(dir: String, writerId: String,
       batchId: Long): Path = {

@@ -293,19 +293,34 @@ object Retrieval {
     * pure layout overhead per postings write), while 64 buckets of a
     * 100 TB corpus' postings are far too coarse for the 1/nBuckets
     * per-term pruning the layout exists to provide. Deriving from corpus
-    * size keeps partition files in a healthy size band at every scale;
-    * `spark.graft.bm25.docsPerBucket` (default 20k) parameterizes the
-    * target, floor 8 keeps pruning meaningful on small corpora, cap 4096
-    * bounds directory count. Results never depend on the modulus (bucket
-    * ids appear in no output; serve reads it from stats/), so the only
-    * thing that changes with scale is the file layout.
+    * size keeps partition files in a healthy size band at every scale:
+    * one bucket per [[DocsPerBucket]] documents, floor 8 keeps pruning
+    * meaningful on small corpora, cap 4096 bounds directory count.
+    * Results never depend on the modulus (bucket ids appear in no output;
+    * serve reads it from stats/), so the only thing that changes with
+    * scale is the file layout.
     */
-  private def chooseBuckets(nDocs: Long,
-      spark: SparkSession): Int = {
-    val perBucket = spark.conf.getOption("spark.graft.bm25.docsPerBucket")
-      .map(_.toLong).getOrElse(20000L)
+  private def chooseBuckets(nDocs: Long): Int =
     math.min(4096L, math.max(8L,
-      (nDocs + perBucket - 1) / math.max(1L, perBucket))).toInt
+      (nDocs + DocsPerBucket - 1) / DocsPerBucket)).toInt
+
+  /** Documents per postings bucket targeted by [[chooseBuckets]]. */
+  private val DocsPerBucket = 20000L
+
+  /** The postings write shape: repartition on the partition column, so
+    * each bucket lands in one task — one file per bucket directory (the
+    * writeLists discipline).
+    */
+  private def postingsWriter(postings: DataFrame) =
+    postings.repartition(col("bucket")).write.partitionBy("bucket")
+
+  /** (n_buckets, stats epoch) of the live stats — one metadata row, one
+    * job; legacy pre-epoch tables read as epoch 0.
+    */
+  private def statsMeta(spark: SparkSession, dir: String): (Int, Long) = {
+    val r = readStats(spark, dir).select(col("n_buckets"),
+      coalesce(col("stats_epoch"), lit(0L))).head()
+    (r.getInt(0), r.getLong(1))
   }
 
   /** `nBuckets = 0` (the default) derives the bucket modulus from the
@@ -334,7 +349,7 @@ object Retrieval {
         coalesce(sum(col("dl")), lit(0L)).as("sum_dl")).head()
       val (nDocs, sumDl) = (totalsRow.getLong(0), totalsRow.getLong(1))
       val buckets =
-        if (nBuckets > 0) nBuckets else chooseBuckets(nDocs, spark)
+        if (nBuckets > 0) nBuckets else chooseBuckets(nDocs)
       val postings = postingsOf(docsTok, buckets)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -354,10 +369,7 @@ object Retrieval {
           docsTok.select(col("doc_id"), col("dl")).write.mode("overwrite")
             .parquet(IndexFiles.tablePath(spark, dir, "doclens"))
         } {
-          // repartition on the partition column: each bucket lands in one
-          // task, one file per bucket directory (the writeLists discipline)
-          postings.repartition(col("bucket")).write.mode("overwrite")
-            .partitionBy("bucket")
+          postingsWriter(postings).mode("overwrite")
             .parquet(IndexFiles.tablePath(spark, dir, "postings"))
         }
         val dfreq = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -387,29 +399,18 @@ object Retrieval {
     * ([[IndexFiles.writeNextVersion]] — never read-and-overwrite the same
     * path in one job). Everything is additive, so a grown index serves
     * BIT-IDENTICAL results to an index built once on the union — the
-    * RetrievalSpec identity and the q91 driver gate.
-    *
-    * Concurrent ground-truth rebuild (a delete or dedupe-compact
-    * interleaving between this append's table writes): detected via the
-    * stats EPOCH captured at entry — if it moved by stats-merge time, the
-    * rebuild may already have counted this batch's landed rows, so the
-    * merge recomputes ground truth instead of double-adding
-    * (self-healing; the formerly-documented "df drift" window, now exact
-    * — IndexInterleaveSpec's append∥delete case).
+    * RetrievalSpec identity and the q91 driver gate. A ground-truth
+    * rebuild interleaving between this append's table writes is detected
+    * by the stats epoch and self-healed ([[mergeStats]];
+    * IndexInterleaveSpec's append∥delete case).
     */
   def appendToIndex(spark: SparkSession, dir: String, newDocs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     graft.plans.Natives.ensure(spark)
-    val statsOld = readStats(spark, dir)
-    // one metadata row read ONCE: separate head() jobs would rescan. The
-    // epoch is captured HERE — before this batch's postings/doclens land —
-    // so the stats-merge below can detect a ground-truth rebuild that ran
-    // anywhere inside this operation's table-write window (legacy
-    // pre-epoch tables read as null -> 0)
-    val meta = statsOld.select(col("n_buckets"),
-      coalesce(col("stats_epoch"), lit(0L)).as("stats_epoch")).head()
-    val nBuckets = meta.getInt(0)
-    val entryEpoch = meta.getLong(1)
+    // the epoch is captured HERE — before this batch's postings/doclens
+    // land — so the stats merge can detect a ground-truth rebuild that ran
+    // anywhere inside this operation's table-write window
+    val (nBuckets, entryEpoch) = statsMeta(spark, dir)
     // persist the tokenized batch: it feeds FOUR jobs (postings write,
     // doclens write, df aggregation, totals), and an unpinned
     // nondeterministic source (sample(), an uncached shuffle) would
@@ -421,80 +422,61 @@ object Retrieval {
       val postings = postingsOf(docsTok, nBuckets)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        // per-table writer leases: an append racing a compaction's
-        // rewrite of the same table aborts loudly (IndexFiles doc); the
-        // stats rewrite below is leased inside writeNextVersion. Each
-        // append is FENCED right before its write job starts: a holder
-        // taken over while stalled (the fenced-publish rationale) would
-        // otherwise land its rows into a version the taker is about to
-        // prune — silently lost rows, worse than the dedupe-compactable
-        // duplicate the abort+replay leaves.
-        IndexFiles.withTableLeaseFenced(spark, dir, "postings") { lease =>
-          FaultPoints.beforeFencedWrite("bm25.append", "postings")
-          lease.checkStillHeld("the postings append")
-          postings.repartition(col("bucket")).write.mode("append")
-            .partitionBy("bucket")
-            .parquet(IndexFiles.tablePath(spark, dir, "postings"))
-        }
-        FaultPoints.afterTable("bm25.append", "postings")
-        IndexFiles.withTableLeaseFenced(spark, dir, "doclens") { lease =>
-          FaultPoints.beforeFencedWrite("bm25.append", "doclens")
-          lease.checkStillHeld("the doclens append")
-          docsTok.select(col("doc_id"), col("dl")).write.mode("append")
-            .parquet(IndexFiles.tablePath(spark, dir, "doclens"))
-        }
-        FaultPoints.afterTable("bm25.append", "doclens")
-        // additive stats merge: old per-term rows + the batch's, df
-        // summed, n_docs/sum_dl totals recomputed once and stamped on
-        // every row. The OLD stats re-resolve INSIDE the stats lease —
-        // merging against the snapshot read at function entry would
-        // silently revert a delete/merge that republished stats while
-        // this batch's postings were landing (lost update)
-        val dfNew = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
+        IndexFiles.fencedWrite(spark, dir, "postings", "bm25.append")(
+          postingsWriter(postings))
+        IndexFiles.fencedWrite(spark, dir, "doclens", "bm25.append")(
+          docsTok.select(col("doc_id"), col("dl")).write)
         val batchTotals = docsTok.agg(count(lit(1)).as("n_docs"),
           coalesce(sum(col("dl")), lit(0L)).as("sum_dl")).head()
-        // published only after the next version is fully written — a
-        // reader racing the cutover resolves either the old or the new
-        // stats, never a partial table
-        IndexFiles.writeNextVersion(spark, dir, "stats") { next =>
-          val statsLive = readStats(spark, dir)
-          // one fused head (r18): epoch + live totals in a single
-          // metadata job — the epoch-only and totals-only heads were two
-          // sequential driver round trips over the same one-row read
-          val liveMeta = statsLive.select(
-            coalesce(col("stats_epoch"), lit(0L)).as("stats_epoch"),
-            col("n_docs"), col("sum_dl")).head()
-          val liveEpoch = liveMeta.getLong(0)
-          if (liveEpoch != entryEpoch) {
-            // SELF-HEAL (the former append∥delete drift case): a
-            // ground-truth rebuild — a delete's or dedupe-compact's
-            // rebuildStats — republished stats while this batch's tables
-            // were landing, and may already have counted the landed
-            // rows; the additive merge would double-count them. The
-            // batch is FULLY landed at this point (postings and doclens
-            // both committed above), so recompute ground truth from the
-            // live tables instead — exact corpus stats whichever
-            // between-table-writes window the rebuild fell into. Bumping
-            // the epoch again covers a second in-flight additive merger
-            // whose rows this recompute just counted.
-            writeGroundTruthStats(spark, dir, nBuckets, liveEpoch + 1, next)
-          } else {
-            val merged = statsLive.select(col("term"), col("df"))
-              .where(col("term").isNotNull) // drop a full-purge sentinel row
-              .unionByName(dfNew)
-              .groupBy(col("term")).agg(sum(col("df")).as("df"))
-              .withColumn("n_docs",
-                lit(liveMeta.getLong(1) + batchTotals.getLong(0)))
-              .withColumn("sum_dl",
-                lit(liveMeta.getLong(2) + batchTotals.getLong(1)))
-              .withColumn("n_buckets", lit(nBuckets))
-              .withColumn("stats_epoch", lit(liveEpoch))
-            merged.write.mode("overwrite").parquet(next)
-          }
-        }
+        mergeStats(spark, dir, nBuckets, entryEpoch,
+          postings.groupBy(col("term")).agg(count(lit(1)).as("df")),
+          batchTotals.getLong(0), batchTotals.getLong(1))
       } finally postings.unpersist()
     } finally docsTok.unpersist()
   }
+
+  /** The additive stats merge of [[appendToIndex]] and [[mergeIndexes]],
+    * published as the next stats version (a reader racing the cutover
+    * resolves the old or the new stats, never a partial table): the live
+    * per-term df plus `addDf` (documents are disjoint, so a term's df is
+    * the sum of per-batch dfs), the live n_docs/sum_dl plus
+    * `addDocs`/`addDl`. The live stats re-resolve INSIDE the stats lease —
+    * merging against an entry-time snapshot would silently revert a
+    * delete or merge that republished stats meanwhile (lost update).
+    *
+    * SELF-HEAL (the former append∥delete drift case): if the epoch moved
+    * since `entryEpoch`, a ground-truth rebuild — a delete's or
+    * dedupe-compact's [[rebuildStats]] — republished stats while this
+    * operation's tables were landing and may already have counted them;
+    * adding would double-count. The operation's rows are FULLY landed by
+    * now, so ground truth is recomputed from the live tables instead —
+    * exact stats whichever between-table-writes window the rebuild fell
+    * into. Bumping the epoch again covers a second in-flight additive
+    * merger whose rows this recompute just counted.
+    */
+  private def mergeStats(spark: SparkSession, dir: String, nBuckets: Int,
+      entryEpoch: Long, addDf: DataFrame, addDocs: Long,
+      addDl: Long): Unit =
+    IndexFiles.writeNextVersion(spark, dir, "stats") { next =>
+      val statsLive = readStats(spark, dir)
+      // one fused head (r18): epoch + live totals in one metadata job
+      val live = statsLive.select(
+        coalesce(col("stats_epoch"), lit(0L)).as("stats_epoch"),
+        col("n_docs"), col("sum_dl")).head()
+      val liveEpoch = live.getLong(0)
+      if (liveEpoch != entryEpoch)
+        writeGroundTruthStats(spark, dir, nBuckets, liveEpoch + 1, next)
+      else
+        statsLive.select(col("term"), col("df"))
+          .where(col("term").isNotNull) // drop a full-purge sentinel row
+          .unionByName(addDf)
+          .groupBy(col("term")).agg(sum(col("df")).as("df"))
+          .withColumn("n_docs", lit(live.getLong(1) + addDocs))
+          .withColumn("sum_dl", lit(live.getLong(2) + addDl))
+          .withColumn("n_buckets", lit(nBuckets))
+          .withColumn("stats_epoch", lit(liveEpoch))
+          .write.mode("overwrite").parquet(next)
+    }
 
   /** Compact the postings and doclens tables (see
     * [[graft.operators.Similarity.compactIvfIndex]] — every
@@ -542,12 +524,8 @@ object Retrieval {
       // source tables resolve INSIDE the stats lease (the IndexFiles
       // read-under-lease rule); the epoch bump is what lets a concurrent
       // additive merger detect this rebuild and self-heal (statsOf doc)
-      val statsLive = readStats(spark, dir)
-      // one fused head (r18): n_buckets + epoch in a single metadata job
-      val meta = statsLive.select(col("n_buckets"),
-        coalesce(col("stats_epoch"), lit(0L))).head()
-      writeGroundTruthStats(spark, dir, meta.getInt(0),
-        meta.getLong(1) + 1, next)
+      val (nBuckets, epoch) = statsMeta(spark, dir)
+      writeGroundTruthStats(spark, dir, nBuckets, epoch + 1, next)
     }
 
   /** DELETE documents from a persisted inverted index — the takedown /
@@ -575,59 +553,21 @@ object Retrieval {
   def deleteFromIndex(spark: SparkSession, dir: String, docIds: DataFrame,
       idCol: String = "doc_id"): Unit = {
     val del = docIds.select(col(idCol).cast("long").as("doc_id")).distinct()
-    // The two anti-join rewrites are independent O(index) jobs over
-    // DISJOINT tables — COMPUTED concurrently (r19, guide §2.6) with the
-    // PUBLISH order preserved: the postings rewrite runs on a driver
-    // thread but gates its cutover on the doclens cutover having landed
-    // (doclens-first is the reader contract — searchIndex's
-    // postings–doclens join is inner, so a deleted doc stops being
-    // servable at the FIRST cutover; publishing postings first would
-    // open a window where the doc still serves). The gate sits inside
-    // writeNextVersion's callback, after the data write and before the
-    // fenced publish; the lease heartbeat keeps the postings lease fresh
-    // while it waits. If the doclens rewrite fails, the gate propagates
-    // the failure and the postings rewrite aborts UNPUBLISHED (its
-    // next-version residue is cleared by the next rewrite), and
-    // Par.overlap still awaits it — no abandoned job outlives the call.
-    // Crash windows are unchanged from the sequential shape: doclens may
-    // cut over without postings (dead postings rows, dropped by the
-    // join), never the reverse.
-    //
-    // no explicit coalesce: the anti-join's shuffle gives AQE the seam to
-    // size the output partitions (a fixed tiny count would serialize the
-    // rewrite of a corpus-scale doclens table into a handful of tasks);
-    // source tables resolve INSIDE each lease (IndexFiles rule).
+    val drop: DataFrame => DataFrame = _.join(del, Seq("doc_id"), "left_anti")
+    // the two anti-join rewrites run as concurrent jobs over DISJOINT
+    // tables with doclens PUBLISHED first (the reader contract above);
+    // source tables resolve inside each lease (IndexFiles rule).
     // Fault-point semantics re-derived (IndexInterleaveSpec, as in
     // compactIndex): both hooks fire AFTER both rewrites, no lease held —
     // the doclens-published-postings-pending window is no longer an
     // injectable seam (a competing verb racing it aborts on the held
     // postings lease, per the exact-or-loud-abort matrix).
-    val doclensPublished = scala.concurrent.Promise[Unit]()
-    Par.overlap {
-      IndexFiles.writeNextVersion(spark, dir, "postings") { next =>
-        val postings = readPostings(spark, dir)
-          .select(col("bucket"), col("term"), col("doc_id"), col("tf"))
-          .join(del, Seq("doc_id"), "left_anti")
-        postings.repartition(col("bucket")).write.mode("overwrite")
-          .partitionBy("bucket").parquet(next)
-        // a full purge leaves zero files in a partitioned overwrite —
-        // land the schema so the table stays readable
-        IndexFiles.ensureReadable(postings, next)
-        // publish-order gate (see above): doclens must cut over first
-        Par.awaitGate(doclensPublished.future, "deleteFromIndex", "postings")
-      }
-    } {
-      try {
-        IndexFiles.writeNextVersion(spark, dir, "doclens") { next =>
-          val doclens = readDoclens(spark, dir)
-            .join(del, Seq("doc_id"), "left_anti")
-          doclens.write.mode("overwrite").parquet(next)
-          IndexFiles.ensureReadable(doclens, next)
-        }
-        doclensPublished.success(())
-      } catch {
-        case e: Throwable => doclensPublished.failure(e); throw e
-      }
+    IndexFiles.publishInOrder("deleteFromIndex", "postings") {
+      IndexFiles.rewriteRows(spark, dir, "doclens", Some(doclensSchema),
+        None)(drop)
+    } { gate =>
+      IndexFiles.rewriteRows(spark, dir, "postings", Some(postingsSchema),
+        Some("bucket"), beforePublish = gate)(drop)
     }
     FaultPoints.afterTable("bm25.delete", "doclens")
     FaultPoints.afterTable("bm25.delete", "postings")
@@ -679,21 +619,15 @@ object Retrieval {
   def mergeIndexes(spark: SparkSession, into: String, from: String,
       requireDisjoint: Boolean = true): Unit = {
     graft.plans.Natives.ensure(spark)
-    val statsInto = readStats(spark, into)
+    // into's epoch is captured before from's rows land in its tables (the
+    // appendToIndex self-heal rationale); `from` is read-only, so its
+    // entry-time stats stand
+    val (nBuckets, entryEpoch) = statsMeta(spark, into)
     val statsFrom = readStats(spark, from)
-    val metaInto = statsInto.select(col("n_buckets"), col("n_docs"),
-      col("sum_dl"),
-      coalesce(col("stats_epoch"), lit(0L)).as("stats_epoch")).head()
     val metaFrom = statsFrom.select(col("n_docs"), col("sum_dl")).head()
-    val nBuckets = metaInto.getInt(0)
-    // captured before from's rows land in into's tables — the stats merge
-    // below compares it with the live epoch to detect a concurrent
-    // ground-truth rebuild (the appendToIndex self-heal rationale)
-    val entryEpoch = metaInto.getLong(3)
-    val dlInto = readDoclens(spark, into)
     val dlFrom = readDoclens(spark, from)
     if (requireDisjoint) {
-      val overlap = dlInto.select("doc_id")
+      val overlap = readDoclens(spark, into).select("doc_id")
         .join(dlFrom.select("doc_id"), Seq("doc_id")).limit(1).count()
       require(overlap == 0L,
         s"mergeIndexes: doc_id sets of $into and $from overlap — " +
@@ -701,59 +635,16 @@ object Retrieval {
     }
     // re-bucket under into's modulus (no-op values when the moduli match,
     // but always recomputed: the stored bucket is from's geometry)
-    IndexFiles.withTableLeaseFenced(spark, into, "postings") { lease =>
-      // fenced like appendToIndex: a taken-over holder must not land
-      // rows into a version the taker is about to prune
-      lease.checkStillHeld("the postings merge-append")
-      readPostings(spark, from)
+    IndexFiles.fencedWrite(spark, into, "postings", "bm25.merge")(
+      postingsWriter(readPostings(spark, from)
         .select(col("term"), col("doc_id"), col("tf"))
         .withColumn("bucket",
-          pmod(Text.hash48(col("term")), lit(nBuckets.toLong)))
-        .repartition(col("bucket")).write.mode("append")
-        .partitionBy("bucket")
-        .parquet(IndexFiles.tablePath(spark, into, "postings"))
-    }
-    FaultPoints.afterTable("bm25.merge", "postings")
-    IndexFiles.withTableLeaseFenced(spark, into, "doclens") { lease =>
-      lease.checkStillHeld("the doclens merge-append")
-      dlFrom.select(col("doc_id"), col("dl")).write.mode("append")
-        .parquet(IndexFiles.tablePath(spark, into, "doclens"))
-    }
-    FaultPoints.afterTable("bm25.merge", "doclens")
-    // host stats re-resolve INSIDE the stats lease (the appendToIndex
-    // rationale: merging against the entry-time snapshot would silently
-    // revert a delete/append that republished stats while this merge's
-    // postings were landing); `from` is read-only, its entry-time stats
-    // stand
-    IndexFiles.writeNextVersion(spark, into, "stats") { next =>
-      val statsLive = readStats(spark, into)
-      // one fused head (r18): epoch + live totals in a single metadata
-      // job (the appendToIndex fusion)
-      val metaLive = statsLive.select(
-        coalesce(col("stats_epoch"), lit(0L)).as("stats_epoch"),
-        col("n_docs"), col("sum_dl")).head()
-      val liveEpoch = metaLive.getLong(0)
-      if (liveEpoch != entryEpoch) {
-        // SELF-HEAL: a ground-truth rebuild republished into's stats
-        // while from's postings/doclens were landing and may already
-        // have counted them — recompute from the live tables (from's
-        // contribution is fully landed above) instead of double-adding
-        // (the appendToIndex drift rationale)
-        writeGroundTruthStats(spark, into, nBuckets, liveEpoch + 1, next)
-      } else {
-        val merged = statsLive.select(col("term"), col("df"))
-          .where(col("term").isNotNull) // drop a full-purge sentinel row
-          .unionByName(statsFrom.select(col("term"), col("df")))
-          .groupBy(col("term")).agg(sum(col("df")).as("df"))
-          .withColumn("n_docs",
-            lit(metaLive.getLong(1) + metaFrom.getLong(0)))
-          .withColumn("sum_dl",
-            lit(metaLive.getLong(2) + metaFrom.getLong(1)))
-          .withColumn("n_buckets", lit(nBuckets))
-          .withColumn("stats_epoch", lit(liveEpoch))
-        merged.write.mode("overwrite").parquet(next)
-      }
-    }
+          pmod(Text.hash48(col("term")), lit(nBuckets.toLong)))))
+    IndexFiles.fencedWrite(spark, into, "doclens", "bm25.merge")(
+      dlFrom.select(col("doc_id"), col("dl")).write)
+    mergeStats(spark, into, nBuckets, entryEpoch,
+      statsFrom.select(col("term"), col("df")),
+      metaFrom.getLong(0), metaFrom.getLong(1))
   }
 
   /** BM25 over a persisted index: the query batch's terms resolve to

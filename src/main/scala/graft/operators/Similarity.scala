@@ -164,13 +164,32 @@ object Similarity {
     * — at nCells ~ 1000 an unshuffled write from a 32-partition frame
     * would scatter ~32k small files.
     */
-  private def writeLists(lists: DataFrame, path: String,
-      mode: String = "overwrite"): Unit = {
-    lists.repartition(col("cell")).write.mode(mode)
-      .partitionBy("cell").parquet(path)
+  private def writeLists(lists: DataFrame, path: String): Unit = {
+    listsWriter(lists).mode("overwrite").parquet(path)
     // full-purge safety: an empty overwrite must stay readable
-    if (mode == "overwrite") IndexFiles.ensureReadable(lists, path)
+    IndexFiles.ensureReadable(lists, path)
   }
+
+  private def listsWriter(lists: DataFrame) =
+    lists.repartition(col("cell")).write.partitionBy("cell")
+
+  /** The live quantizer of an index dir whose lists version resolved to
+    * `lists`: the centroids a retrain or rewrite embedded in that
+    * version, else the initial-save `<dir>/centroids`
+    * ([[IndexFiles.liveArtifact]]).
+    */
+  private def liveCentroids(spark: org.apache.spark.sql.SparkSession,
+      dir: String, lists: String): Seq[Seq[Double]] =
+    readCentroids(spark, IndexFiles.liveArtifact(spark, dir, lists, "centroids"))
+
+  /** The list rewrites re-embed the live quantizer in the new version: a
+    * compaction or delete after a retrain must not strand the retrained
+    * centroids in the pruned old version and silently fall back to the
+    * stale initial-save table.
+    */
+  private def carryCentroids(spark: org.apache.spark.sql.SparkSession) =
+    IndexFiles.Carry("centroids",
+      (from, to) => writeCentroids(spark, readCentroids(spark, from), to))
 
   /** Append new vectors to a persisted IVF index without rebuilding:
     * assign against the SAVED centroids (the quantizer is frozen — the
@@ -193,15 +212,11 @@ object Similarity {
     // lists version, so reading them before it could assign this batch
     // under a quantizer a concurrent retrain just replaced — appended
     // rows would sit in cells the LIVE quantizer never probes.
-    IndexFiles.withTableLeaseFenced(spark, dir, "lists") { lease =>
-      val cents = readCentroids(spark, liveCentroidsPath(spark, dir))
-      // fenced before the write job (the Retrieval.appendToIndex
-      // rationale): a taken-over holder must not land rows into a
-      // version the taker is about to prune
-      lease.checkStillHeld("the lists append")
-      writeLists(c0.withColumn("cell", nearestCell(spark, col("v"), cents))
-        .select(col("cell"), col(idCol).as("vec_id"), col("v").as("c_vec")),
-        IndexFiles.tablePath(spark, dir, "lists"), mode = "append")
+    IndexFiles.fencedWrite(spark, dir, "lists", "ivf.append") {
+      val cents = liveCentroids(spark, dir,
+        IndexFiles.tablePath(spark, dir, "lists"))
+      listsWriter(c0.withColumn("cell", nearestCell(spark, col("v"), cents))
+        .select(col("cell"), col(idCol).as("vec_id"), col("v").as("c_vec")))
     }
   }
 
@@ -256,20 +271,14 @@ object Similarity {
     */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, dedupeRows: Boolean = false): Unit = {
-    // IVF-aware compact (not the generic IndexFiles.compact): the live
-    // quantizer is re-embedded in the compacted version, so a compaction
-    // AFTER a retrain cannot strand the retrained centroids in the old
-    // version and silently fall back to the stale initial-save table.
-    // Quantizer and rows resolve INSIDE the lease — resolving before it
-    // could pair this rewrite with a version (or centroids) a concurrent
-    // retrain/delete just replaced, reverting that writer's work.
-    IndexFiles.writeNextVersion(spark, dir, "lists") { next =>
-      val cents = readCentroids(spark, liveCentroidsPath(spark, dir))
-      val df0 = readIvfLists(spark, IndexFiles.tablePath(spark, dir, "lists"))
-      val df = if (dedupeRows) df0.distinct() else df0
-      writeLists(df, next)
-      writeCentroids(spark, cents, s"$next/_centroids")
-    }
+    // IVF-aware compact: the live quantizer is re-embedded in the
+    // compacted version (carryCentroids), resolved with the rows INSIDE
+    // the lease — resolving before it could pair this rewrite with a
+    // version (or centroids) a concurrent retrain/delete just replaced,
+    // reverting that writer's work.
+    IndexFiles.rewriteRows(spark, dir, "lists", Some(ivfListsSchema),
+      Some("cell"), carry = Some(carryCentroids(spark)))(
+      IndexFiles.keepRows(dedupeRows))
     IndexFiles.compactLedgers(spark, dir)
   }
 
@@ -289,14 +298,10 @@ object Similarity {
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, vecIds: DataFrame, idCol: String = "vec_id"): Unit = {
     val del = vecIds.select(col(idCol).cast("long").as("vec_id")).distinct()
-    IndexFiles.writeNextVersion(spark, dir, "lists") { next =>
-      // quantizer + rows resolved INSIDE the lease (see compactIvfIndex)
-      val cents = readCentroids(spark, liveCentroidsPath(spark, dir))
-      val kept = readIvfLists(spark, IndexFiles.tablePath(spark, dir, "lists"))
-        .join(del, Seq("vec_id"), "left_anti")
-      writeLists(kept, next)
-      writeCentroids(spark, cents, s"$next/_centroids")
-    }
+    // quantizer + rows resolved INSIDE the lease (see compactIvfIndex)
+    IndexFiles.rewriteRows(spark, dir, "lists", Some(ivfListsSchema),
+      Some("cell"), carry = Some(carryCentroids(spark)))(
+      _.join(del, Seq("vec_id"), "left_anti"))
   }
 
   /** MERGE another persisted IVF index into this one — the shard-union
@@ -368,39 +373,23 @@ object Similarity {
     batch.join(dups, Seq(idCol), "left_anti")
   }
 
-  /** Atomically land a small driver-readable text sidecar next to a tiny
-    * artifact table (r18): reading a one-file parquet still costs a
-    * one-task Spark job, and the lifecycle verbs re-read the quantizer /
-    * codebooks several times per operation. create+rename keeps a racing
-    * reader on the old file or the new, never a torn write; the parquet
-    * stays the durable format and the fallback for pre-sidecar indexes.
-    * Doubles are encoded as raw IEEE-754 long bits (hex), so the
-    * round-trip is bit-exact by construction.
+  /** Land a small driver-readable text sidecar next to a tiny artifact
+    * table (r18): reading a one-file parquet still costs a one-task Spark
+    * job, and the lifecycle verbs re-read the quantizer / codebooks
+    * several times per operation. Written atomically
+    * ([[IndexFiles.writeSmallFile]]); the parquet stays the durable
+    * format and the fallback for pre-sidecar indexes. Doubles are encoded
+    * as raw IEEE-754 long bits (hex), so the round-trip is bit-exact by
+    * construction.
     */
   private def writeSidecar(spark: org.apache.spark.sql.SparkSession,
-      path: String, name: String, text: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/.$name.tmp")
-    val dst = new org.apache.hadoop.fs.Path(s"$path/$name")
-    val out = fs.create(tmp, true)
-    try out.write(text.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(dst)) fs.delete(dst, false)
-    if (!fs.rename(tmp, dst)) fs.delete(tmp, false)
-  }
+      path: String, name: String, text: String): Unit =
+    IndexFiles.writeSmallFile(IndexFiles.fsFor(spark, path), path, name,
+      text, required = false)
 
   private def readSidecar(spark: org.apache.spark.sql.SparkSession,
-      path: String, name: String): Option[String] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    val f = new org.apache.hadoop.fs.Path(s"$path/$name")
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    }
-  }
+      path: String, name: String): Option[String] =
+    IndexFiles.readSmallFile(IndexFiles.fsFor(spark, path), path, name)
 
   private def hexRow(c: Seq[Double]): String =
     c.map(d => java.lang.Long.toHexString(
@@ -424,24 +413,6 @@ object Similarity {
     * spelled out rather than a bare NoSuchElementException from the dense
     * re-index.
     */
-  /** The live centroid table of an IVF index dir: centroids embedded in
-    * the current lists version (`<lists live>/_centroids` — written by
-    * [[retrainIvfIndex]], invisible to the lists scan because Spark
-    * ignores underscore-prefixed paths) win over the initial-save
-    * `<dir>/centroids`. Embedding the quantizer IN the lists version
-    * makes the (centroids, assignment) pair cut over under ONE manifest
-    * publish — a reader can never pair a new quantizer with old lists or
-    * vice versa.
-    */
-  private def liveCentroidsPath(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    val embedded = s"${IndexFiles.tablePath(spark, dir, "lists")}/_centroids"
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-      spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(embedded))) embedded
-    else s"$dir/centroids"
-  }
-
   private def readCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[Seq[Double]] = {
     // sidecar first (one FS read, bit-exact, no Spark job); parquet
@@ -477,32 +448,10 @@ object Similarity {
     */
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): IvfIndex = {
-    val lists = readIvfLists(spark, IndexFiles.tablePath(spark, dir, "lists"))
-    IvfIndex(readCentroids(spark, liveCentroidsPath(spark, dir)), lists)
+    val lists = IndexFiles.tablePath(spark, dir, "lists")
+    IvfIndex(liveCentroids(spark, dir, lists), readIvfLists(spark, lists))
   }
 
-  /** Probe a built/loaded index: each query searches its nProbe closest
-    * cells (multi-probe), exact cosine within them.
-    *
-    * The probed cell set is computed up front with one tiny job (the
-    * collect is the DISTINCT cell ids only — bounded by nCells, never by
-    * the batch size) and pushed as a STATIC `cell IN (...)` partition
-    * filter on the inverted lists — a loaded index's probe lists and
-    * reads only those cells' files at scan planning time, with no
-    * reliance on the dynamic-partition-pruning planner heuristics (AQE
-    * drops DPP when it judges the broadcast non-reusable, which would
-    * silently regress the probe to a full index scan).
-    *
-    * The query batch itself stays DISTRIBUTED: the exploded (q_id, q_vec,
-    * cell) frame is persisted (materialized ONCE by the cell-id collect,
-    * so a non-deterministic source — sample/rand/an uncached shuffle —
-    * cannot produce a cell filter that disagrees with the join's cells)
-    * and joined as a DataFrame, with AQE choosing broadcast for the
-    * serve-sized batch and a shuffled join for a corpus-sized ingest
-    * batch — the same shape as [[graft.operators.Dedup.matchesAgainstLshIndex]],
-    * so a 100-TB pipeline's daily batch never rides through the driver.
-    * The candidate-side plan stays lazy.
-    */
   /** The exploded (q_id, q_vec, cell) probe frame [[probeIvf]] joins —
     * exposed so tests can recompute the exact probed-cell set and hold
     * the scan-pruning metrics to it (one shared derivation, no drift).
@@ -589,6 +538,28 @@ object Similarity {
       .where(col("vec_id") =!= col("q_id"))
   }
 
+  /** Probe a built/loaded index: each query searches its nProbe closest
+    * cells (multi-probe), exact cosine within them.
+    *
+    * The probed cell set is computed up front with one tiny job (the
+    * collect is the DISTINCT cell ids only — bounded by nCells, never by
+    * the batch size) and pushed as a STATIC `cell IN (...)` partition
+    * filter on the inverted lists — a loaded index's probe lists and
+    * reads only those cells' files at scan planning time, with no
+    * reliance on the dynamic-partition-pruning planner heuristics (AQE
+    * drops DPP when it judges the broadcast non-reusable, which would
+    * silently regress the probe to a full index scan).
+    *
+    * The query batch itself stays DISTRIBUTED: the exploded (q_id, q_vec,
+    * cell) frame is persisted (materialized ONCE by the cell-id collect,
+    * so a non-deterministic source — sample/rand/an uncached shuffle —
+    * cannot produce a cell filter that disagrees with the join's cells)
+    * and joined as a DataFrame, with AQE choosing broadcast for the
+    * serve-sized batch and a shuffled join for a corpus-sized ingest
+    * batch — the same shape as [[graft.operators.Dedup.matchesAgainstLshIndex]],
+    * so a 100-TB pipeline's daily batch never rides through the driver.
+    * The candidate-side plan stays lazy.
+    */
   def probeIvf(index: IvfIndex, queries: DataFrame, k: Int, nProbe: Int = 3,
       idCol: String = "vec_id", vecCol: String = "embedding",
       scope: Dedup.CacheScope = Dedup.sessionScope): DataFrame = {
@@ -932,13 +903,8 @@ object Similarity {
   def deleteFromIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, vecIds: DataFrame, idCol: String = "vec_id"): Unit = {
     val del = vecIds.select(col(idCol).cast("long").as("vec_id")).distinct()
-    IndexFiles.writeNextVersion(spark, dir, "lists") { next =>
-      // rows resolved INSIDE the lease (see compactIvfIndex)
-      val kept = readIvfPqLists(spark,
-          IndexFiles.tablePath(spark, dir, "lists"))
-        .join(del, Seq("vec_id"), "left_anti")
-      writeLists(kept, next)
-    }
+    IndexFiles.rewriteRows(spark, dir, "lists", Some(ivfPqListsSchema),
+      Some("cell"))(_.join(del, Seq("vec_id"), "left_anti"))
   }
 
   /** MERGE another persisted IVF-PQ index into this one. Unlike the
@@ -956,28 +922,26 @@ object Similarity {
     */
   def mergeIvfPqIndexes(spark: org.apache.spark.sql.SparkSession,
       into: String, from: String): Unit = {
-    require(readCentroids(spark, liveCentroidsPath(spark, into)) ==
-        readCentroids(spark, liveCentroidsPath(spark, from)),
+    def centroidsOf(d: String) =
+      liveCentroids(spark, d, IndexFiles.tablePath(spark, d, "lists"))
+    require(centroidsOf(into) == centroidsOf(from),
       "mergeIvfPqIndexes: coarse centroids differ — codes are not " +
         "transferable between independently trained IVF-PQ indexes")
     require(readCodebooks(spark, s"$into/codebooks") ==
         readCodebooks(spark, s"$from/codebooks"),
       "mergeIvfPqIndexes: PQ codebooks differ — codes are not " +
         "transferable between independently trained IVF-PQ indexes")
-    IndexFiles.withTableLeaseFenced(spark, into, "lists") { lease =>
-      // fenced before the write job (the Retrieval.appendToIndex rationale)
-      lease.checkStillHeld("the lists merge-append")
-      writeLists(readIvfPqLists(spark,
-          IndexFiles.tablePath(spark, from, "lists")),
-        IndexFiles.tablePath(spark, into, "lists"), mode = "append")
-    }
+    IndexFiles.fencedWrite(spark, into, "lists", "ivfpq.merge")(
+      listsWriter(readIvfPqLists(spark,
+        IndexFiles.tablePath(spark, from, "lists"))))
   }
 
   def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): IvfPqIndex =
-    IvfPqIndex(readCentroids(spark, liveCentroidsPath(spark, dir)),
-      readCodebooks(spark, s"$dir/codebooks"),
-      readIvfPqLists(spark, IndexFiles.tablePath(spark, dir, "lists")))
+      dir: String): IvfPqIndex = {
+    val lists = IndexFiles.tablePath(spark, dir, "lists")
+    IvfPqIndex(liveCentroids(spark, dir, lists),
+      readCodebooks(spark, s"$dir/codebooks"), readIvfPqLists(spark, lists))
+  }
 
   /** Append new vectors to a persisted composite index: coarse-assign
     * against the saved centroids AND encode with the saved codebooks
@@ -993,8 +957,9 @@ object Similarity {
     // centroids resolve through the lists version, and an assignment
     // under artifacts a concurrent rewrite replaced would land rows in
     // cells the live index never probes)
-    IndexFiles.withTableLeaseFenced(spark, dir, "lists") { lease =>
-      val cents = readCentroids(spark, liveCentroidsPath(spark, dir))
+    IndexFiles.fencedWrite(spark, dir, "lists", "ivfpq.append") {
+      val cents = liveCentroids(spark, dir,
+        IndexFiles.tablePath(spark, dir, "lists"))
       val cb = readCodebooks(spark, s"$dir/codebooks")
       // two-step select keeps the double-cast vector a bound attribute
       // inside the argmax expressions (the dotOff contract, as in pqEncode)
@@ -1002,13 +967,10 @@ object Similarity {
         .select(col(idCol).as("vec_id"), Vec.asDouble(col(vecCol)).as("__v"))
         .select(col("vec_id"), col("__v"),
           nearestCell(spark, col("__v"), cents).as("cell"))
-      // fenced before the write job (the Retrieval.appendToIndex rationale)
-      lease.checkStillHeld("the lists append")
-      writeLists(assigned.select(col("cell"), col("vec_id"),
+      listsWriter(assigned.select(col("cell"), col("vec_id"),
         array((0 until cb.m).map(s =>
           nearestSubCell(spark, col("__v"), s * cb.dsub,
-            cb.centroids(s))): _*).as("code")),
-        IndexFiles.tablePath(spark, dir, "lists"), mode = "append")
+            cb.centroids(s))): _*).as("code")))
     }
   }
 

@@ -416,29 +416,26 @@ object StreamingOps {
     import graft.operators.{Dedup, IndexFiles}
     val spark = batch.sparkSession
     val writer = writerIdFor(spark, appId)
-    if (batchId.exists(IndexFiles.wasBatchApplied(spark, indexDir, writer, _)))
-      return // replayed micro-batch: already fully applied, skip
-    val scope = new Dedup.CacheScope
-    // survivors feed two writes (index append + corpus sink): persist so
-    // the probe computes once
-    val survivors = {
-      val self = Dedup.dedupCorpus(batch, idCol, textCol, jaccardThreshold,
-        maxBucket = maxBucket, scope = scope)
-      Dedup.dedupBatchAgainstLshIndex(spark, indexDir, self,
-          jaccardThreshold, idCol, textCol, maxBucket, scope)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    try {
-      Dedup.appendToLshIndex(spark, indexDir, survivors, idCol, textCol)
-      writeCorpus(survivors, corpusDir, writer, batchId)
-      // marker LAST: a crash before this line replays the batch once
-      // (index rows repairable, corpus idempotent); a marker written
-      // early would DROP the batch
-      batchId.foreach(graft.operators.IndexFiles
-        .recordBatchApplied(spark, indexDir, writer, _))
-    } finally {
-      survivors.unpersist()
-      scope.release()
+    // a replayed micro-batch is skipped; the marker lands last (the
+    // corpus sink is idempotent even in the window before it)
+    IndexFiles.applyBatchOnce(spark, indexDir, writer, batchId) {
+      val scope = new Dedup.CacheScope
+      // survivors feed two writes (index append + corpus sink): persist
+      // so the probe computes once
+      val survivors = {
+        val self = Dedup.dedupCorpus(batch, idCol, textCol, jaccardThreshold,
+          maxBucket = maxBucket, scope = scope)
+        Dedup.dedupBatchAgainstLshIndex(spark, indexDir, self,
+            jaccardThreshold, idCol, textCol, maxBucket, scope)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }
+      try {
+        Dedup.appendToLshIndex(spark, indexDir, survivors, idCol, textCol)
+        writeCorpus(survivors, corpusDir, writer, batchId)
+      } finally {
+        survivors.unpersist()
+        scope.release()
+      }
     }
   }
 
@@ -525,28 +522,25 @@ object StreamingOps {
     import graft.operators.{Dedup, IndexFiles, Similarity}
     val spark = batch.sparkSession
     val writer = writerIdFor(spark, appId)
-    if (batchId.exists(IndexFiles.wasBatchApplied(spark, indexDir, writer, _)))
-      return // replayed micro-batch: already fully applied, skip
-    val scope = new Dedup.CacheScope
-    // in-batch SemDeDup first (two near-dups arriving together would both
-    // survive an index-only probe), then the index probe; survivors feed
-    // two writes, so persist
-    val keptIds = Similarity.semanticDedup(batch, k = selfDedupK,
-        threshold = cosineThreshold, idCol = idCol, vecCol = vecCol)
-      .select(col("id").as(idCol))
-    val survivors = Similarity.dedupBatchAgainstIvfIndex(spark, indexDir,
-        batch.join(keptIds, Seq(idCol), "left_semi"),
-        cosineThreshold, nProbe, idCol, vecCol, scope)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      Similarity.appendToIvfIndex(spark, indexDir, survivors, idCol, vecCol)
-      writeCorpus(survivors, corpusDir, writer, batchId)
-      // marker LAST (see ingestBatch): early = dropped batch, late = one
-      // repairable index re-append (corpus idempotent)
-      batchId.foreach(IndexFiles.recordBatchApplied(spark, indexDir, writer, _))
-    } finally {
-      survivors.unpersist()
-      scope.release()
+    IndexFiles.applyBatchOnce(spark, indexDir, writer, batchId) {
+      val scope = new Dedup.CacheScope
+      // in-batch SemDeDup first (two near-dups arriving together would
+      // both survive an index-only probe), then the index probe;
+      // survivors feed two writes, so persist
+      val keptIds = Similarity.semanticDedup(batch, k = selfDedupK,
+          threshold = cosineThreshold, idCol = idCol, vecCol = vecCol)
+        .select(col("id").as(idCol))
+      val survivors = Similarity.dedupBatchAgainstIvfIndex(spark, indexDir,
+          batch.join(keptIds, Seq(idCol), "left_semi"),
+          cosineThreshold, nProbe, idCol, vecCol, scope)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        Similarity.appendToIvfIndex(spark, indexDir, survivors, idCol, vecCol)
+        writeCorpus(survivors, corpusDir, writer, batchId)
+      } finally {
+        survivors.unpersist()
+        scope.release()
+      }
     }
   }
 
@@ -586,14 +580,12 @@ object StreamingOps {
   def indexDocumentsBatch(batch: DataFrame, indexDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       batchId: Option[Long] = None, appId: Option[String] = None): Unit = {
-    import graft.operators.IndexFiles
     val spark = batch.sparkSession
-    val writer = writerIdFor(spark, appId)
-    if (batchId.exists(IndexFiles.wasBatchApplied(spark, indexDir, writer, _)))
-      return // replayed micro-batch: already fully applied, skip
-    graft.operators.Retrieval.appendToIndex(spark, indexDir, batch,
-      idCol, textCol)
-    batchId.foreach(IndexFiles.recordBatchApplied(spark, indexDir, writer, _))
+    graft.operators.IndexFiles.applyBatchOnce(spark, indexDir,
+        writerIdFor(spark, appId), batchId) {
+      graft.operators.Retrieval.appendToIndex(spark, indexDir, batch,
+        idCol, textCol)
+    }
   }
 
   /** Run a streaming query over a parquet directory to a memory sink and

@@ -158,4 +158,64 @@ class IndexDeleteSpec extends AnyFunSuite {
       jaccardThreshold = 0.7).select("doc_id").as[Long].collect().toSet
     assert(fresh == Set(100L))
   }
+
+  test("a delete whose first-published table fails publishes neither table") {
+    // the ordered two-table publish: doclens (BM25) and bands (LSH)
+    // publish first; when that rewrite fails — here its lease is held by
+    // a second writer — the gated second rewrite must abort unpublished,
+    // so its manifest still names the old version and serving is as
+    // before the delete
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    def withHeldLease[T](dir: String, table: String)(body: => T): T = {
+      val entered = new CountDownLatch(1)
+      val release = new CountDownLatch(1)
+      val holder = new Thread(() =>
+        IndexFiles.withTableLeaseFenced(spark, dir, table) { _ =>
+          entered.countDown()
+          release.await(60, TimeUnit.SECONDS)
+        }, s"held-$table")
+      holder.start()
+      assert(entered.await(60, TimeUnit.SECONDS), "holder never entered")
+      try body finally { release.countDown(); holder.join(60000) }
+    }
+    def manifest(dir: String, table: String) = java.nio.file.Files
+      .readString(java.nio.file.Paths.get(s"$dir/$table.manifest")).trim
+    def checkUnpublished(dir: String, first: String, second: String,
+        serve: () => Set[Seq[Any]])(delete: => Unit): Unit = {
+      val secondVersion = manifest(dir, second)
+      val served = serve()
+      val e = intercept[IllegalStateException] {
+        withHeldLease(dir, first)(delete)
+      }
+      assert(e.getMessage.contains("writer lease"), e.getMessage)
+      assert(manifest(dir, second) == secondVersion,
+        s"$second must not publish when $first failed")
+      assert(serve() == served, "serving must be as before the delete")
+    }
+
+    val bm = tmp("del_order_bm25")
+    Retrieval.buildIndex(docs, bm, nBuckets = 16)
+    // a first delete versions both tables, so each has a manifest
+    Retrieval.deleteFromIndex(spark, bm,
+      docs.where(pmod(col("doc_id"), lit(7L)) === 3L).select("doc_id"))
+    val qs = Seq("qa" -> Seq("spark", "join"), "qb" -> Seq("window", "scan"))
+    checkUnpublished(bm, "doclens", "postings", () =>
+      Retrieval.searchIndex(spark, bm, qs, k = 10).collect().map(_.toSeq).toSet) {
+      Retrieval.deleteFromIndex(spark, bm,
+        docs.where(pmod(col("doc_id"), lit(7L)) === 4L).select("doc_id"))
+    }
+
+    def doc(i: Long) = s"unique document body number $i with stable shingle " +
+      s"text alpha$i beta$i gamma$i delta$i epsilon$i zeta$i eta$i theta$i"
+    val lsh = tmp("del_order_lsh")
+    Dedup.saveLshIndex((0L until 10L).map(i => (i, doc(i)))
+      .toDF("doc_id", "text"), "doc_id", "text", lsh)
+    Dedup.deleteFromLshIndex(spark, lsh, Seq(9L).toDF("doc_id"))
+    val probe = Seq((100L, doc(5)), (101L, doc(7))).toDF("doc_id", "text")
+    checkUnpublished(lsh, "bands", "shingles", () =>
+      Dedup.matchesAgainstLshIndex(spark, lsh, probe, maxBucket = None)
+        .collect().map(_.toSeq).toSet) {
+      Dedup.deleteFromLshIndex(spark, lsh, Seq(5L).toDF("doc_id"))
+    }
+  }
 }

@@ -4,7 +4,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{IndexFiles, Retrieval}
 
-/** The per-table writer lease ([[graft.operators.IndexFiles.withTableLease]])
+/** The per-table writer lease ([[graft.operators.IndexFiles.withTableLeaseFenced]])
   * enforcing the single-writer contract: two concurrent writers of one
   * index table must never interleave — before r15 a racing rewrite pair
   * would each compute the same `next` version and delete the other's
@@ -63,7 +63,7 @@ class WriterLeaseSpec extends AnyFunSuite {
     val entered = new CountDownLatch(1)
     val release = new CountDownLatch(1)
     val holder = new Thread(() => {
-      IndexFiles.withTableLease(spark, idx, "postings") {
+      IndexFiles.withTableLeaseFenced(spark, idx, "postings") { _ =>
         entered.countDown()
         release.await(60, TimeUnit.SECONDS)
       }
@@ -101,7 +101,7 @@ class WriterLeaseSpec extends AnyFunSuite {
     val entered = new CountDownLatch(1)
     val release = new CountDownLatch(1)
     val holder = new Thread(() => {
-      IndexFiles.withTableLease(spark, idx, "bands") {
+      IndexFiles.withTableLeaseFenced(spark, idx, "bands") { _ =>
         entered.countDown()
         release.await(60, TimeUnit.SECONDS)
       }
@@ -226,33 +226,95 @@ class WriterLeaseSpec extends AnyFunSuite {
     // takeover used to land its append rows into whatever table version
     // the taker had made live (or was about to prune) — silently lost
     // rows. checkStillHeld right before the write job aborts instead.
-    // Staged via the in-lease pre-write seam: the "takeover" rewrites
-    // the lock with the taker's identity inside exactly the stall
-    // window the fence closes.
-    val idx = freshIndex()
-    val lockFile = new java.io.File(s"$idx/postings.lock")
-    val postingsCount = () => spark.read
-      .parquet(IndexFiles.tablePath(spark, idx, "postings")).count()
-    val before = postingsCount()
-    val err = intercept[IllegalStateException] {
-      graft.operators.FaultPoints.withPreWriteHook((op, t) =>
-        if (op == "bm25.append" && t == "postings")
-          java.nio.file.Files.write(lockFile.toPath,
-            "taker-host/pid=999/nonce=deadbeef".getBytes("UTF-8"))) {
-        Retrieval.appendToIndex(spark, idx,
-          Seq((9L, "zeta eta theta")).toDF("doc_id", "text"))
+    // Every family's append and merge writes through the one fenced
+    // write, so the same seam must close for each: staged via the
+    // in-lease pre-write hook, the "takeover" rewrites the lock with the
+    // taker's identity inside exactly the stall window the fence closes.
+    import graft.operators.{Dedup, Similarity}
+    import org.apache.spark.sql.functions.col
+    def tmp(tag: String) =
+      java.nio.file.Files.createTempDirectory(tag).toString + "/index"
+    val qs = Seq("q1" -> Seq("alpha", "beta"), "q2" -> Seq("zeta", "theta"))
+    def bm25Serve(d: String) = Retrieval.searchIndex(spark, d, qs, k = 10)
+      .collect().map(_.toSeq).toSet
+    def lshDoc(i: Long) = s"unique body $i alpha$i beta$i gamma$i delta$i eps$i"
+    def lshDocs(ids: Seq[Long]) = ids.map(i => (i, lshDoc(i)))
+      .toDF("doc_id", "text")
+    def lshServe(d: String) = Dedup.matchesAgainstLshIndex(spark, d,
+        lshDocs(Seq(1L, 11L)).withColumn("doc_id", col("doc_id") + 100L),
+        maxBucket = None)
+      .collect().map(_.toSeq).toSet
+    def vecs(ids: Seq[Long]) = ids.map(i =>
+      (i, (0 until 8).map(d => math.sin(i * 1.7 + d * 0.9) + d * 0.01)))
+      .toDF("vec_id", "embedding")
+    val queries = vecs(Seq(100L, 101L))
+    def ivfServe(d: String) = Similarity.probeIvf(
+        Similarity.loadIvfIndex(spark, d), queries, 3, nProbe = 2)
+      .collect().map(_.toSeq).toSet
+    def ivfPqServe(d: String) = Similarity.probeIvfPq(
+        Similarity.loadIvfPqIndex(spark, d), queries, vecs(0L until 20L), 3,
+        nProbe = 2, shortlist = Int.MaxValue)
+      .collect().map(_.toSeq).toSet
+    // (op, table, index, fenced verb, serve)
+    val cases: Seq[(String, String, String, String => Unit,
+        String => Set[Seq[Any]])] = Seq(
+      ("bm25.append", "postings", freshIndex(),
+        d => Retrieval.appendToIndex(spark, d,
+          Seq((9L, "zeta eta theta")).toDF("doc_id", "text")), bm25Serve),
+      ("bm25.merge", "postings", freshIndex(), { d =>
+        val shard = tmp("lease-shard")
+        Retrieval.buildIndex(Seq((9L, "zeta eta theta")).toDF("doc_id", "text"),
+          shard, nBuckets = 4)
+        Retrieval.mergeIndexes(spark, d, shard)
+      }, bm25Serve),
+      ("lsh.merge", "shingles", {
+        val d = tmp("lease-lsh")
+        Dedup.saveLshIndex(lshDocs(0L until 5L), "doc_id", "text", d)
+        d
+      }, { d =>
+        val shard = tmp("lease-lsh-shard")
+        Dedup.saveLshIndex(lshDocs(10L until 15L), "doc_id", "text", shard)
+        Dedup.mergeLshIndexes(spark, d, shard)
+      }, lshServe),
+      ("ivf.append", "lists", {
+        val d = tmp("lease-ivf")
+        Similarity.saveIvfIndex(
+          Similarity.buildIvfIndex(vecs(0L until 10L), 2, 8), d)
+        d
+      }, d => Similarity.appendToIvfIndex(spark, d, vecs(10L until 20L)),
+        ivfServe),
+      ("ivfpq.append", "lists", {
+        val d = tmp("lease-ivfpq")
+        Similarity.saveIvfPqIndex(Similarity.buildIvfPq(vecs(0L until 10L),
+          nCells = 2, dim = 8, m = 2, ksub = 4, iters = 1), d)
+        d
+      }, d => Similarity.appendToIvfPqIndex(spark, d, vecs(10L until 20L)),
+        ivfPqServe))
+    for ((op, table, idx, verb, serve) <- cases) {
+      val lockFile = new java.io.File(s"$idx/$table.lock")
+      def rows() = spark.read
+        .parquet(IndexFiles.tablePath(spark, idx, table)).count()
+      val before = serve(idx)
+      val rowsBefore = rows()
+      val err = intercept[IllegalStateException] {
+        graft.operators.FaultPoints.withPreWriteHook((o, t) =>
+          if (o == op && t == table)
+            java.nio.file.Files.write(lockFile.toPath,
+              "taker-host/pid=999/nonce=deadbeef".getBytes("UTF-8")))(verb(idx))
       }
+      assert(err.getMessage.contains("fenced out"), s"$op: ${err.getMessage}")
+      assert(rows() == rowsBefore, s"$op: a fenced write must not land rows")
+      assert(serve(idx) == before,
+        s"$op: a fenced write must leave serving as before the append")
+      if (op.startsWith("bm25"))
+        assert(doclensCount(idx) == 2,
+          s"$op: a fenced write must not have reached the doclens write")
+      // and release must NOT delete the taker's lease
+      assert(lockFile.exists(), s"$op: release must leave the taker's lock")
+      assert(new String(java.nio.file.Files.readAllBytes(lockFile.toPath),
+        "UTF-8").contains("taker-host"),
+        s"$op: the taker's lock content must survive the fenced release")
+      lockFile.delete()
     }
-    assert(err.getMessage.contains("fenced out"), err.getMessage)
-    assert(postingsCount() == before,
-      "fenced append must not land postings rows")
-    assert(doclensCount(idx) == 2,
-      "fenced append must not have reached the doclens append")
-    // and release must NOT delete the taker's lease
-    assert(lockFile.exists(), "release must leave the taker's lock alone")
-    assert(new String(java.nio.file.Files.readAllBytes(lockFile.toPath),
-      "UTF-8").contains("taker-host"),
-      "the taker's lock content must survive the fenced holder's release")
-    lockFile.delete()
   }
 }
