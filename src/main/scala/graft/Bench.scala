@@ -35,7 +35,7 @@ object Bench {
       val t = (System.nanoTime() - t0) / 1e9
       // hygiene OUTSIDE the timed window, in two parts. (1) release the
       // session cache scope: queries persist intermediates into
-      // Dedup.sessionScope (the single-tenant contract — the CALLER
+      // CacheScope.session (the single-tenant contract — the CALLER
       // releases), and 112 queries' accumulated dead blocks measurably
       // throttle the storage-heavy ones (q76/q90/q94 at sf1 ran 2.5x
       // their isolated times with the junk resident — reproduced: five
@@ -45,7 +45,7 @@ object Bench {
       // ~12 such queries left tens of GB churning the page cache). The
       // forced noop write has fully materialized the result, so both the
       // cached blocks and the dirs this query just created are dead.
-      graft.operators.Dedup.releaseCaches()
+      graft.core.CacheScope.session.release()
       (tempIndexDirs() -- before).foreach(deleteRecursively)
       name -> (if (ok) t else -1.0)
     }

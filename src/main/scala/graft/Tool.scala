@@ -54,7 +54,7 @@ object Tool {
     query(spark, dir, name).write.format("noop").mode("overwrite").save()
     val t = (System.nanoTime() - t0) / 1e9
     // outside the timed window
-    graft.operators.Dedup.releaseCaches()
+    graft.core.CacheScope.session.release()
     t
   }
 
@@ -80,7 +80,7 @@ object Tool {
     Files.createDirectories(Paths.get(outDir))
     Files.write(Paths.get(s"$outDir/$name.csv"),
       (cols.mkString(",") + "\n" + rows.mkString("\n")).getBytes("UTF-8"))
-    graft.operators.Dedup.releaseCaches()
+    graft.core.CacheScope.session.release()
     println(s"$name: ${rows.length} rows -> $outDir/$name.csv")
     rows.length
   }
@@ -98,7 +98,7 @@ object Tool {
     val out: Path = Paths.get(s"$outDir/${name}_$tag.txt")
     Files.createDirectories(out.getParent)
     Files.write(out, txt.getBytes("UTF-8"))
-    graft.operators.Dedup.releaseCaches()
+    graft.core.CacheScope.session.release()
     println(s"$name -> $out (${txt.length} chars)")
     txt
   }
@@ -108,7 +108,7 @@ object Tool {
     */
   def plan(spark: SparkSession, dir: String, name: String): String = {
     val txt = query(spark, dir, name).queryExecution.executedPlan.toString
-    graft.operators.Dedup.releaseCaches()
+    graft.core.CacheScope.session.release()
     println(txt.take(8000))
     txt
   }

@@ -20,7 +20,7 @@ object Verify {
           }
           // the Bench.pass cache-scope hygiene: dead persisted blocks from a
           // hundred prior queries otherwise squeeze the storage-heavy ones
-          graft.operators.Dedup.releaseCaches()
+          graft.core.CacheScope.session.release()
         }
       // Restrict the oracle dump to the queries that actually ran: some
       // oracles (q74/q77/q79) embed driver-computed literal tables stashed

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.CacheScope
 
 /** Compaction lifecycle rehearsal — the maintenance question a year of
   * daily ingest asks of every persisted index family: build once, append
@@ -88,11 +89,9 @@ object CompactionBench {
         .select((col("doc_id") + lit(5L * nBase)).as("doc_id"), col("text"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       probeBatch.count()
-      def probe() = {
-        val sc = new Dedup.CacheScope
-        try Dedup.matchesAgainstLshIndex(spark, dir, probeBatch, scope = sc)
+      def probe() = CacheScope.using { sc =>
+        Dedup.matchesAgainstLshIndex(spark, dir, probeBatch, scope = sc)
           .where(col("jaccard") >= 0.8).count()
-        finally sc.release()
       }
       val filesBefore = IndexFiles.dataFileCount(spark, dir, "bands")
       val (tBefore, hBefore) = bestOf3(() => probe())
@@ -123,11 +122,9 @@ object CompactionBench {
         .where(col("vec_id") % lit(nBase / 50 + 1) === 0)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       queries.count()
-      def probe() = {
-        val scope = new Dedup.CacheScope
-        try Similarity.probeIvf(Similarity.loadIvfIndex(spark, dir),
+      def probe() = CacheScope.using { scope =>
+        Similarity.probeIvf(Similarity.loadIvfIndex(spark, dir),
           queries, k = 10, nProbe = 3, scope = scope).count()
-        finally scope.release()
       }
       val filesBefore = IndexFiles.dataFileCount(spark, dir, "lists")
       val (tBefore, hBefore) = bestOf3(() => probe())

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.CacheScope
 
 /** Corpus-pipeline scale rehearsal — the LLM-training-data analog of
   * [[graft.pipeline.PipelineBench]]: synthesize an N-document corpus
@@ -17,10 +18,10 @@ import org.apache.spark.sql.functions._
   * high-frequency stopword backbone so LSH buckets are realistically
   * skewed. Usage: `runMain graft.operators.CorpusBench [nDocs]`.
   *
-  * `cached_rdds_after_release` counts what [[Dedup.releaseCaches]] cannot
-  * free: [[Dedup.connectedComponents]]'s final-round localCheckpoint RDDs,
-  * which pin O(paired docs) label rows for as long as the result frame is
-  * live — unpersisting a localCheckpoint severs truncated lineage rather
+  * `cached_rdds_after_release` counts what the session [[CacheScope]]
+  * cannot free: [[Dedup.connectedComponents]]'s final-round
+  * localCheckpoint RDDs, which pin O(paired docs) label rows for as long
+  * as the result frame is live — unpersisting a localCheckpoint severs truncated lineage rather
   * than triggering recompute, so they are deliberately not tracked.
   * Measured at local[32] (round 7): 200k docs 23.1 s (8.7k docs/s), 1M
   * docs 201 s (~5k docs/s — single machine, fixed cores); 200k
@@ -352,7 +353,7 @@ object CorpusBench {
       Dedup.appendToLshIndex(spark, dir, survivors)
       val appendSecs = (System.nanoTime() - t2) / 1e9
       survivors.unpersist(blocking = true)
-      Dedup.releaseCaches()
+      CacheScope.session.release()
       docs.unpersist(blocking = true)
       println(s"""{"metric":"corpus_lshindex","n_docs":$nDocs,"n_indexed":$nIdx,""" +
         s""""n_batch":$nBatch,"n_survivors":$nSurv,""" +
@@ -423,7 +424,7 @@ object CorpusBench {
       s""","worst_bucket_precap":$worst,"worst_bucket_capped":$worstCapped,"cap":$cap"""
     } else ""
 
-    Dedup.releaseCaches()
+    CacheScope.session.release()
     docs.unpersist(blocking = true)
     val cachedAfter = spark.sparkContext.getPersistentRDDs.size
     println(s"""{"metric":"corpus_preprocess","mode":"$mode","n_docs":$nDocs,"kept":$kept,""" +

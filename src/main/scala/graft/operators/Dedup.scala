@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.CacheScope
 import graft.functions.Text
 
 /** Document deduplication operators for training-data pipelines: exact
@@ -29,43 +30,11 @@ object Dedup {
     */
   val defaultMaxBucket: Option[Int] = Some(1000)
 
-  /** Tracks the frames one dedup run persists so the caller can free them
-    * after its sink materializes — a per-run handle, so two concurrent
-    * corpus runs each release only their own caches. Operators default to
-    * the shared [[Dedup.sessionScope]] (single-tenant callers keep the old
-    * `Dedup.releaseCaches()` behavior); fleet-style callers pass their own
-    * scope per run. Caveat: Spark's cache manager is plan-keyed, so two
-    * runs over a literally-identical input frame share one cache entry and
-    * releasing either scope frees it — isolation holds across distinct
-    * inputs, which is the actual concurrent-fleet scenario.
+  /** Releases [[CacheScope.session]], the default scope of every operator
+    * and pipeline entry point, the dedup inputs and signature tables among
+    * them. Call after the outputs built on it are materialized or written.
     */
-  final class CacheScope {
-    private val frames = new scala.collection.mutable.ArrayBuffer[DataFrame]()
-    private[graft] def track(df: DataFrame): DataFrame = {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      frames.synchronized { frames += p }
-      p
-    }
-    /** The frames currently tracked (test/diagnostic visibility). */
-    def tracked: Seq[DataFrame] = frames.synchronized { frames.toSeq }
-    /** Unpersist every frame this scope tracked and forget them. */
-    def release(): Unit = frames.synchronized {
-      frames.foreach(_.unpersist())
-      frames.clear()
-    }
-  }
-
-  /** Default scope for callers that don't manage one: session-wide, freed
-    * by [[releaseCaches]] — same cache discipline as AdcpPipeline.
-    */
-  val sessionScope: CacheScope = new CacheScope
-
-  /** Unpersist every cache the default-scope dedup operators created
-    * (minhash signature tables, corpus inputs). Call after the deduplicated
-    * output has been materialized/written. Runs given their own
-    * [[CacheScope]] are unaffected — release those via `scope.release()`.
-    */
-  def releaseCaches(): Unit = sessionScope.release()
+  def releaseCaches(): Unit = CacheScope.session.release()
 
   /** Exact dedup via content hash: one row per distinct text with the
     * keeper (min id) and duplicate count.
@@ -258,10 +227,10 @@ object Dedup {
   def minhashLsh(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 16, nBands: Int = 8,
       maxBucket: Option[Int] = defaultMaxBucket,
-      scope: CacheScope = sessionScope): DataFrame = {
+      scope: CacheScope = CacheScope.session): DataFrame = {
     // signatures feed both the banding and the Jaccard verification;
     // materialize once (one md5 pass over every shingle, the dominant cost)
-    val sigs = scope.track(signatures(docs, idCol, textCol, k))
+    val sigs = scope.persist(signatures(docs, idCol, textCol, k))
     withJaccard(candidates(bands(sigs, idCol, k, nBands), idCol, maxBucket),
       sigs, idCol)
   }
@@ -276,11 +245,11 @@ object Dedup {
   def dedupCorpus(docs0: DataFrame, idCol: String, textCol: String,
       jaccardThreshold: Double = 0.8, k: Int = 16, nBands: Int = 8,
       maxBucket: Option[Int] = defaultMaxBucket,
-      scope: CacheScope = sessionScope): DataFrame = {
+      scope: CacheScope = CacheScope.session): DataFrame = {
     // docs feeds both the signature pass and the final anti-join; persist
     // so an expensive upstream (e.g. the preprocess quality gate) computes
     // once, not once per consumer
-    val docs = scope.track(docs0)
+    val docs = scope.persist(docs0)
     val dups = minhashLsh(docs, idCol, textCol, k, nBands, maxBucket, scope)
       .where(col("jaccard") >= jaccardThreshold)
       .select("doc_a", "doc_b")
@@ -668,9 +637,8 @@ object Dedup {
       dir: String, k: Int, nBands: Int, shingleN: Int, mode: String): Unit = {
     val spark = docs.sparkSession
     val op = if (mode == "append") "lsh.append" else "lsh.save"
-    val sigs = signatures(docs, idCol, textCol, k, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    CacheScope.using { scope =>
+      val sigs = scope.persist(signatures(docs, idCol, textCol, k, shingleN))
       // SHINGLES LAND FIRST: every doc visible in bands is then already
       // verifiable (bands-without-shingles pairs drop silently at the
       // probe's inner join), and a retrain — which rebuilds bands FROM
@@ -714,14 +682,14 @@ object Dedup {
           new org.apache.hadoop.fs.Path(IndexFiles.tablePath(spark, dir, t))))
       if (freshBootstrap) {
         // Par.overlap (not bare Future/Await): a writeBands failure must
-        // still await the shingles write before the finally unpersists
+        // still await the shingles write before the scope unpersists
         // sigs under its running job
         Par.overlap(writeShingles())(writeBands())
       } else {
         writeShingles()
         writeBands()
       }
-    } finally sigs.unpersist()
+    }
   }
 
   /** The bands write shape: repartition on (band, bsig), so each band
@@ -925,13 +893,13 @@ object Dedup {
   def matchesAgainstLshIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", maxBucket: Option[Int] = defaultMaxBucket,
-      scope: CacheScope = sessionScope): DataFrame = {
+      scope: CacheScope = CacheScope.session): DataFrame = {
     // resolve the bands version ONCE and read the geometry from it: a
     // retrain cutover between two resolutions would band the batch under
     // one geometry and scan the other's rows (silently zero collisions)
     val bandsPath = IndexFiles.tablePath(spark, dir, "bands")
     val (k, nBands, shingleN) = lshGeometry(spark, dir, bandsPath)
-    val bSigs = scope.track(signatures(batch, idCol, textCol, k, shingleN))
+    val bSigs = scope.persist(signatures(batch, idCol, textCol, k, shingleN))
     // cap BOTH sides: a degenerate boilerplate bucket can arrive in the
     // batch too, and an uncapped batch bucket of B docs would multiply
     // every capped-index collision by B
@@ -966,7 +934,7 @@ object Dedup {
       dir: String, batch: DataFrame, jaccardThreshold: Double = 0.8,
       idCol: String = "doc_id", textCol: String = "text",
       maxBucket: Option[Int] = defaultMaxBucket,
-      scope: CacheScope = sessionScope): DataFrame = {
+      scope: CacheScope = CacheScope.session): DataFrame = {
     val dups = matchesAgainstLshIndex(spark, dir, batch, idCol, textCol,
         maxBucket, scope)
       .where(col("jaccard") >= jaccardThreshold)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.CacheScope
 
 /** Maintenance-verb rehearsal at corpus scale, two modes:
   *
@@ -349,12 +350,10 @@ object MaintenanceBench {
         .select((col("doc_id") + lit(5L * nBase)).as("doc_id"), col("text"))
         .persist(mem)
       val nProbe = probeBatch.count()
-      def hits() = {
-        val sc = new Dedup.CacheScope
-        try Dedup.matchesAgainstLshIndex(spark, a, probeBatch, scope = sc)
+      def hits() = CacheScope.using { sc =>
+        Dedup.matchesAgainstLshIndex(spark, a, probeBatch, scope = sc)
           .where(col("jaccard") >= 0.8)
           .select("batch_id").distinct().count()
-        finally sc.release()
       }
       val (tProbeMerged, hitsMerged) = timed(hits())
       require(hitsMerged == nProbe,
@@ -408,12 +407,10 @@ object MaintenanceBench {
       val queries = vecs.where(col("vec_id") % lit(nBase / 50 + 1) === 0)
         .persist(mem)
       queries.count()
-      def probe() = {
-        val scope = new Dedup.CacheScope
-        try Similarity.probeIvf(Similarity.loadIvfIndex(spark, a),
+      def probe() = CacheScope.using { scope =>
+        Similarity.probeIvf(Similarity.loadIvfIndex(spark, a),
           queries, k = 10, nProbe = 3, scope = scope)
           .select("vec_id").collect().map(_.getLong(0))
-        finally scope.release()
       }
       val (tProbeMerged, _) = timed(probe())
       val del = pmod(col("vec_id"), lit(10L)) === 3L
@@ -473,12 +470,10 @@ object MaintenanceBench {
       val queries = vecs.where(col("vec_id") % lit(nBase / 50 + 1) === 0)
         .persist(mem)
       queries.count()
-      def probe() = {
-        val scope = new Dedup.CacheScope
-        try Similarity.probeIvfPq(Similarity.loadIvfPqIndex(spark, a),
+      def probe() = CacheScope.using { scope =>
+        Similarity.probeIvfPq(Similarity.loadIvfPqIndex(spark, a),
           queries, vecs, k = 10, nProbe = 8, shortlist = 200, scope = scope)
           .select("vec_id").collect().map(_.getLong(0))
-        finally scope.release()
       }
       val (tProbeMerged, _) = timed(probe())
       val del = pmod(col("vec_id"), lit(10L)) === 3L
@@ -603,12 +598,10 @@ object MaintenanceBench {
         .select((col("doc_id") + lit(5L * nBase)).as("doc_id"), col("text"))
         .persist(mem)
       val nCopies = probeBatch.count()
-      val loop = new ServeLoop(spark.sparkContext, () => {
-        val sc = new Dedup.CacheScope
-        try Dedup.matchesAgainstLshIndex(spark, dir, probeBatch, scope = sc)
+      val loop = new ServeLoop(spark.sparkContext, () => CacheScope.using { sc =>
+        Dedup.matchesAgainstLshIndex(spark, dir, probeBatch, scope = sc)
           .where(col("jaccard") >= 0.8)
           .select("batch_id").distinct().count() == nCopies
-        finally sc.release()
       })
       loop.start()
       loop.awaitProbes(2) // latency baseline before the cutover
@@ -638,14 +631,12 @@ object MaintenanceBench {
       queries.count()
       // probe-all ≡ brute force under ANY quantizer: the expected set is
       // fixed across the cutover even though the centroids change
-      def probeAll(): Set[(Long, Long, Int)] = {
-        val sc = new Dedup.CacheScope
-        try Similarity.probeIvf(Similarity.loadIvfIndex(spark, dir),
+      def probeAll(): Set[(Long, Long, Int)] = CacheScope.using { sc =>
+        Similarity.probeIvf(Similarity.loadIvfIndex(spark, dir),
           queries, k = 10, nProbe = Int.MaxValue, scope = sc)
           .select("q_id", "vec_id", "rank")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
           .toSet
-        finally sc.release()
       }
       val want = probeAll()
       val loop = new ServeLoop(spark.sparkContext, () => probeAll() == want)
@@ -723,12 +714,10 @@ object MaintenanceBench {
       .select((col("doc_id") + lit(5L * nBase)).as("doc_id"), col("text"))
       .persist(mem)
     val nCopies = probeBatch.count()
-    val loop = new ServeLoop(spark.sparkContext, () => {
-      val sc = new Dedup.CacheScope
-      try Dedup.matchesAgainstLshIndex(spark, idx, probeBatch, scope = sc)
+    val loop = new ServeLoop(spark.sparkContext, () => CacheScope.using { sc =>
+      Dedup.matchesAgainstLshIndex(spark, idx, probeBatch, scope = sc)
         .where(col("jaccard") >= 0.8)
         .select("batch_id").distinct().count() == nCopies
-      finally sc.release()
     })
     loop.start()
     loop.awaitProbes(2)
@@ -881,13 +870,11 @@ object MaintenanceBench {
         .select((col("doc_id") + lit(5L * nBase)).as("doc_id"), col("text"))
         .persist(mem)
       probeBatch.count()
-      def vetoes(d: String) = {
-        val sc = new Dedup.CacheScope
-        try Dedup.matchesAgainstLshIndex(spark, d, probeBatch, scope = sc)
+      def vetoes(d: String) = CacheScope.using { sc =>
+        Dedup.matchesAgainstLshIndex(spark, d, probeBatch, scope = sc)
           .where(col("jaccard") >= 0.8)
           .select("batch_id", "dup_of")
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        finally sc.release()
       }
       val (tChain, _) = timed {
         Dedup.saveLshIndex(corpus.where(regA("doc_id")), "doc_id", "text",
@@ -934,13 +921,11 @@ object MaintenanceBench {
       // probe-all: identical to brute force for ANY quantizer, so the
       // composed chain (whose retrained centroids legitimately differ
       // from the one-shot build's) must match exactly
-      def probeAll(d: String, n: Int) = {
-        val sc = new Dedup.CacheScope
-        try Similarity.probeIvf(Similarity.loadIvfIndex(spark, d),
+      def probeAll(d: String, n: Int) = CacheScope.using { sc =>
+        Similarity.probeIvf(Similarity.loadIvfIndex(spark, d),
           queries, k = 10, nProbe = n, scope = sc)
           .select("q_id", "vec_id", "rank")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-        finally sc.release()
       }
       val (tChain, _) = timed {
         Similarity.saveIvfIndex(Similarity.buildIvfIndex(
@@ -979,14 +964,12 @@ object MaintenanceBench {
       queries.count()
       // probe-all + shortlist-inf ≡ brute force for ANY artifacts — the
       // q56e identity — so the one-shot reference may train its own
-      def probeAll(d: String) = {
-        val sc = new Dedup.CacheScope
-        try Similarity.probeIvfPq(Similarity.loadIvfPqIndex(spark, d),
+      def probeAll(d: String) = CacheScope.using { sc =>
+        Similarity.probeIvfPq(Similarity.loadIvfPqIndex(spark, d),
           queries, vecs, k = 10, nProbe = nCells,
           shortlist = Int.MaxValue, scope = sc)
           .select("q_id", "vec_id", "rank")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-        finally sc.release()
       }
       val (tChain, _) = timed {
         val idx = Similarity.buildIvfPq(vecs.where(regA("vec_id")), nCells,

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.CacheScope
 import graft.functions.Text
 
 /** Ranked full-text retrieval over a document corpus — the BM25 scoring a
@@ -339,9 +340,8 @@ object Retrieval {
     // writes; at 100 TB this is the difference between one corpus read
     // and four.
     val spark = docs.sparkSession
-    val docsTok = tokenizedDocs(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    CacheScope.using { scope =>
+      val docsTok = scope.persist(tokenizedDocs(docs, idCol, textCol))
       // totals head first (also materializes the persisted tokenize):
       // the corpus size both stamps the stats rows and sizes the bucket
       // modulus when the caller left it to scale
@@ -350,39 +350,36 @@ object Retrieval {
       val (nDocs, sumDl) = (totalsRow.getLong(0), totalsRow.getLong(1))
       val buckets =
         if (nBuckets > 0) nBuckets else chooseBuckets(nDocs)
-      val postings = postingsOf(docsTok, buckets)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // overlap the two independent table writes (r18, guide §2.6):
-        // the postings and doclens writes read only the ALREADY
-        // MATERIALIZED docsTok cache (the totals head above filled it)
-        // and write disjoint tables, and buildIndex is the bootstrap op
-        // — no lease, no publish-order contract (the maintenance verbs
-        // keep their sequential, ordered writes: deleteFromIndex's
-        // doclens-first and writeLshRows' shingles-first are
-        // reader-correctness contracts). The doclens write back-fills
-        // the executors the postings write's task tail leaves idle.
-        // Par.overlap (not bare Future/Await): a postings-write failure
-        // must still await the doclens write before the finally
-        // unpersists docsTok under its running job
-        Par.overlap {
-          docsTok.select(col("doc_id"), col("dl")).write.mode("overwrite")
-            .parquet(IndexFiles.tablePath(spark, dir, "doclens"))
-        } {
-          postingsWriter(postings).mode("overwrite")
-            .parquet(IndexFiles.tablePath(spark, dir, "postings"))
-        }
-        val dfreq = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        val totals = spark.range(1).select(lit(nDocs).as("n_docs"),
-          lit(sumDl).as("sum_dl"))
-        // emptiness probed on the PERSISTED postings (limit-1 over the
-        // cache, see statsOf); dfreq has one consumer, so no persist
-        statsOf(dfreq, totals, buckets, epoch = 0L,
-            dfreqEmpty = postings.isEmpty)
-          .write.mode("overwrite")
-          .parquet(IndexFiles.tablePath(spark, dir, "stats"))
-      } finally postings.unpersist()
-    } finally docsTok.unpersist()
+      val postings = scope.persist(postingsOf(docsTok, buckets))
+      // overlap the two independent table writes (r18, guide §2.6):
+      // the postings and doclens writes read only the ALREADY
+      // MATERIALIZED docsTok cache (the totals head above filled it)
+      // and write disjoint tables, and buildIndex is the bootstrap op
+      // — no lease, no publish-order contract (the maintenance verbs
+      // keep their sequential, ordered writes: deleteFromIndex's
+      // doclens-first and writeLshRows' shingles-first are
+      // reader-correctness contracts). The doclens write back-fills
+      // the executors the postings write's task tail leaves idle.
+      // Par.overlap (not bare Future/Await): a postings-write failure
+      // must still await the doclens write before the scope
+      // unpersists docsTok under its running job
+      Par.overlap {
+        docsTok.select(col("doc_id"), col("dl")).write.mode("overwrite")
+          .parquet(IndexFiles.tablePath(spark, dir, "doclens"))
+      } {
+        postingsWriter(postings).mode("overwrite")
+          .parquet(IndexFiles.tablePath(spark, dir, "postings"))
+      }
+      val dfreq = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      val totals = spark.range(1).select(lit(nDocs).as("n_docs"),
+        lit(sumDl).as("sum_dl"))
+      // emptiness probed on the PERSISTED postings (limit-1 over the
+      // cache, see statsOf); dfreq has one consumer, so no persist
+      statsOf(dfreq, totals, buckets, epoch = 0L,
+          dfreqEmpty = postings.isEmpty)
+        .write.mode("overwrite")
+        .parquet(IndexFiles.tablePath(spark, dir, "stats"))
+    }
   }
 
   /** Append new documents to a persisted inverted index — the
@@ -416,23 +413,19 @@ object Retrieval {
     // nondeterministic source (sample(), an uncached shuffle) would
     // otherwise desync the written postings from the merged stats — the
     // writeLshRows discipline
-    val docsTok = tokenizedDocs(newDocs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val postings = postingsOf(docsTok, nBuckets)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        IndexFiles.fencedWrite(spark, dir, "postings", "bm25.append")(
-          postingsWriter(postings))
-        IndexFiles.fencedWrite(spark, dir, "doclens", "bm25.append")(
-          docsTok.select(col("doc_id"), col("dl")).write)
-        val batchTotals = docsTok.agg(count(lit(1)).as("n_docs"),
-          coalesce(sum(col("dl")), lit(0L)).as("sum_dl")).head()
-        mergeStats(spark, dir, nBuckets, entryEpoch,
-          postings.groupBy(col("term")).agg(count(lit(1)).as("df")),
-          batchTotals.getLong(0), batchTotals.getLong(1))
-      } finally postings.unpersist()
-    } finally docsTok.unpersist()
+    CacheScope.using { scope =>
+      val docsTok = scope.persist(tokenizedDocs(newDocs, idCol, textCol))
+      val postings = scope.persist(postingsOf(docsTok, nBuckets))
+      IndexFiles.fencedWrite(spark, dir, "postings", "bm25.append")(
+        postingsWriter(postings))
+      IndexFiles.fencedWrite(spark, dir, "doclens", "bm25.append")(
+        docsTok.select(col("doc_id"), col("dl")).write)
+      val batchTotals = docsTok.agg(count(lit(1)).as("n_docs"),
+        coalesce(sum(col("dl")), lit(0L)).as("sum_dl")).head()
+      mergeStats(spark, dir, nBuckets, entryEpoch,
+        postings.groupBy(col("term")).agg(count(lit(1)).as("df")),
+        batchTotals.getLong(0), batchTotals.getLong(1))
+    }
   }
 
   /** The additive stats merge of [[appendToIndex]] and [[mergeIndexes]],
@@ -746,7 +739,7 @@ object Retrieval {
   def searchIndexBatch(spark: SparkSession, dir: String,
       queries: DataFrame, k: Int, k1: Double = 1.2, b: Double = 0.75,
       qidCol: String = "q_id", termsCol: String = "terms",
-      scope: Dedup.CacheScope = Dedup.sessionScope): DataFrame = {
+      scope: CacheScope = CacheScope.session): DataFrame = {
     graft.plans.Natives.ensure(spark)
     val statsAll = readStats(spark, dir)
     // totals ride the same one-row head (r18) so the serve plan can carry
@@ -756,7 +749,7 @@ object Retrieval {
     val nBuckets = meta.getInt(0)
     val nDocsIdx = meta.getLong(1)
     val sumDlIdx = meta.getLong(2)
-    val qterms = scope.track(queries
+    val qterms = scope.persist(queries
       .select(col(qidCol).as("q_id"),
         explode(array_distinct(col(termsCol))).as("term"))
       .withColumn("bucket",

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.CacheScope
 
 /** Semantic-dedup scale rehearsal — the [[Similarity.semanticDedup]]
   * analog of [[CorpusBench]]/[[AnnBench]]: synthesize N clustered
@@ -64,18 +65,19 @@ object SemDedupBench {
       // cost point for the COPY-dedup question — unlike top-k search,
       // where nProbe buys ranking recall. Probe work scales linearly in
       // nProbe (each probe joins the query against one more cell's list).
-      val probeScope = new Dedup.CacheScope
-      val survivors = Similarity.dedupBatchAgainstIvfIndex(spark, dir,
-          batch, cosineThreshold = 0.999, nProbe = 2, scope = probeScope)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nSurv = survivors.count()
-      val probeSecs = (System.nanoTime() - t1) / 1e9
-      val plantedSurvived = survivors.where(col("vec_id") >= 2L * n).count()
-      val t2 = System.nanoTime()
-      Similarity.appendToIvfIndex(spark, dir, survivors)
-      val appendSecs = (System.nanoTime() - t2) / 1e9
-      probeScope.release()
-      survivors.unpersist(); batch.unpersist(); clean.unpersist(blocking = true)
+      val (nSurv, probeSecs, plantedSurvived, appendSecs) =
+        CacheScope.using { scope =>
+          val survivors = scope.persist(Similarity.dedupBatchAgainstIvfIndex(
+            spark, dir, batch, cosineThreshold = 0.999, nProbe = 2,
+            scope = scope))
+          val nSurv = survivors.count()
+          val probeSecs = (System.nanoTime() - t1) / 1e9
+          val planted = survivors.where(col("vec_id") >= 2L * n).count()
+          val t2 = System.nanoTime()
+          Similarity.appendToIvfIndex(spark, dir, survivors)
+          (nSurv, probeSecs, planted, (System.nanoTime() - t2) / 1e9)
+        }
+      batch.unpersist(); clean.unpersist(blocking = true)
       require(plantedSurvived == 0,
         s"PLANTED COPIES SURVIVED THE INDEX PROBE: $plantedSurvived of $nPlanted")
       println(s"""{"metric":"vecindex_incremental","n_vecs":$n,"dim":$dim,""" +

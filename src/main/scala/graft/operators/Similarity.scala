@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.CacheScope
 import graft.functions.{Text, Vec}
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -340,7 +341,7 @@ object Similarity {
   def matchesAgainstIvfIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, nProbe: Int = 3,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      scope: Dedup.CacheScope = Dedup.sessionScope): DataFrame =
+      scope: CacheScope = CacheScope.session): DataFrame =
     probeIvf(loadIvfIndex(spark, dir), batch, k = 1, nProbe, idCol, vecCol,
         scope)
       .select(col("q_id").as("batch_id"), col("vec_id").as("dup_of"),
@@ -357,7 +358,7 @@ object Similarity {
       dir: String, batch: DataFrame, cosineThreshold: Double = 0.99,
       nProbe: Int = 3, idCol: String = "vec_id",
       vecCol: String = "embedding",
-      scope: Dedup.CacheScope = Dedup.sessionScope): DataFrame = {
+      scope: CacheScope = CacheScope.session): DataFrame = {
     // EXISTENCE probe, not top-1: a batch vector drops iff ANY probed
     // candidate reaches the threshold, which is exactly "ANN top-1 >=
     // threshold" over the same candidate set — but as a filter + distinct
@@ -519,8 +520,8 @@ object Similarity {
     */
   private def probeCandidates(index: IvfIndex, queries: DataFrame,
       nProbe: Int, idCol: String, vecCol: String,
-      scope: Dedup.CacheScope): DataFrame = {
-    val qExploded = scope.track(
+      scope: CacheScope): DataFrame = {
+    val qExploded = scope.persist(
       probeCells(index, queries, nProbe, idCol, vecCol))
     // the ONLY collect: distinct probed cell ids, bounded by nCells —
     // this action also materializes the persisted batch frame, freezing a
@@ -562,7 +563,7 @@ object Similarity {
     */
   def probeIvf(index: IvfIndex, queries: DataFrame, k: Int, nProbe: Int = 3,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      scope: Dedup.CacheScope = Dedup.sessionScope): DataFrame = {
+      scope: CacheScope = CacheScope.session): DataFrame = {
     val scored = probeCandidates(index, queries, nProbe, idCol, vecCol,
         scope)
       .withColumn("cosine", graft.plans.NativeDot.cosineCol(
@@ -645,29 +646,30 @@ object Similarity {
     var cents = (0 until m).map(s =>
       Vec.planes(ksub, dsub + 1).map(_.drop(1)).map(p =>
         p.map(x => x * (s + 1) / m.toDouble))) // distinct seeds per subspace
-    val c0 = candidates.select(Vec.asDouble(col(vecCol)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    for (_ <- 0 until iters) {
-      // one row per (vector, subspace): assign, then mean per (s, cell, pos)
-      val assigned = c0.select(explode(array((0 until m).map { s =>
-        struct(lit(s).as("s"), subVec(col("v"), s, dsub).as("sv"),
-          nearestSubCell(candidates.sparkSession, col("v"), s * dsub,
-            cents(s)).as("cell"))
-      }: _*)).as("a")).select(col("a.s"), col("a.sv"), col("a.cell"))
-      val means = assigned
-        .select(col("s"), col("cell"), posexplode(col("sv")).as(Seq("d", "x")))
-        .groupBy("s", "cell", "d").agg(avg("x").as("mu"))
-        .groupBy("s", "cell")
-        .agg(sort_array(collect_list(struct(col("d"), col("mu")))).as("c"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1)) ->
-          r.getSeq[org.apache.spark.sql.Row](2).map(_.getDouble(1)).toSeq)
-        .toMap
-      cents = (0 until m).map(s => (0 until ksub).map(c =>
-        means.getOrElse((s, c), cents(s)(c))))
+    CacheScope.using { scope =>
+      val c0 = scope.persist(
+        candidates.select(Vec.asDouble(col(vecCol)).as("v")))
+      for (_ <- 0 until iters) {
+        // one row per (vector, subspace): assign, then mean per (s, cell, pos)
+        val assigned = c0.select(explode(array((0 until m).map { s =>
+          struct(lit(s).as("s"), subVec(col("v"), s, dsub).as("sv"),
+            nearestSubCell(candidates.sparkSession, col("v"), s * dsub,
+              cents(s)).as("cell"))
+        }: _*)).as("a")).select(col("a.s"), col("a.sv"), col("a.cell"))
+        val means = assigned
+          .select(col("s"), col("cell"), posexplode(col("sv")).as(Seq("d", "x")))
+          .groupBy("s", "cell", "d").agg(avg("x").as("mu"))
+          .groupBy("s", "cell")
+          .agg(sort_array(collect_list(struct(col("d"), col("mu")))).as("c"))
+          .collect()
+          .map(r => (r.getInt(0), r.getInt(1)) ->
+            r.getSeq[org.apache.spark.sql.Row](2).map(_.getDouble(1)).toSeq)
+          .toMap
+        cents = (0 until m).map(s => (0 until ksub).map(c =>
+          means.getOrElse((s, c), cents(s)(c))))
+      }
+      PqCodebooks(m, ksub, dsub, cents)
     }
-    c0.unpersist()
-    PqCodebooks(m, ksub, dsub, cents)
   }
 
   /** Encode vectors to PQ codes: array of m centroid indices. Two-step
@@ -989,8 +991,8 @@ object Similarity {
   def probeIvfPq(index: IvfPqIndex, queries: DataFrame,
       candidates: DataFrame, k: Int, nProbe: Int = 3, shortlist: Int = 50,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      scope: Dedup.CacheScope = Dedup.sessionScope): DataFrame = {
-    val qExploded = scope.track(probeCellsOf(index.centroids, queries,
+      scope: CacheScope = CacheScope.session): DataFrame = {
+    val qExploded = scope.persist(probeCellsOf(index.centroids, queries,
       nProbe, idCol, vecCol))
     val probedCells = qExploded.select("cell").distinct()
       .collect().map(_.getInt(0))

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.CacheScope
 
 /** Pipeline entry points mirroring the reference's three public
   * compositions (process_adcp.py:2046-2083). Each stage is a lazy
@@ -9,7 +10,7 @@ import org.apache.spark.sql.functions._
   * calibration, shear-correction vectors, regrid ladder, bias coefficient),
   * at the stage barriers and at the final sink.
   *
-  * A BARRIER is an eager local checkpoint (`localCheckpoint(eager = true)`):
+  * A BARRIER is an eager local checkpoint ([[CacheScope.checkpoint]]):
   * it materializes a stage's output once and replaces its lineage with a
   * plan leaf. It bounds two costs. Recomputation: a stage that references
   * an earlier array column more than once would otherwise re-run it, which
@@ -27,38 +28,14 @@ import org.apache.spark.sql.functions._
   */
 object AdcpPipeline {
 
-  // the checkpoint RDDs behind every barrier the pipeline creates (stage
-  // barriers, the DAC glider, the referenced grid), so entry-point callers
-  // can free their blocks after their last action. The RDDs themselves are
-  // tracked: unpersisting a checkpointed Dataset leaves its LogicalRDD's
-  // blocks in place
-  private val trackedCheckpoints =
-    new scala.collection.mutable.ArrayBuffer[org.apache.spark.rdd.RDD[_]]()
-
-  private def barrier(df: DataFrame): DataFrame = {
-    val p = df.localCheckpoint(eager = true)
-    val rdds = p.queryExecution.logical.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }
-    trackedCheckpoints.synchronized { trackedCheckpoints ++= rdds }
-    p
-  }
-
-  /** Free the blocks of every barrier the pipeline created. The outputs
-    * of the runs before the call can no longer be evaluated afterwards
-    * (an action on them fails: their checkpoint blocks are gone), so
-    * call it after the caller's last action on those outputs, or after
-    * caching or writing what it still needs. Long-lived sessions otherwise
-    * accumulate checkpoint blocks across runs.
-    *
-    * Process-wide by design: with concurrent pipeline runs in one JVM it
-    * frees the barriers of ALL in-flight runs, so serialize runs or call
-    * it only at a quiescent point.
+  /** Releases [[CacheScope.session]], which holds the barriers of every
+    * run that did not pass its own scope. The outputs of those runs can no
+    * longer be evaluated afterwards (an action on them fails: their
+    * checkpoint blocks are gone), so call it after the caller's last action
+    * on them, or after caching or writing what it still needs. A run given
+    * its own scope frees its barriers with `scope.release()` instead.
     */
-  def releaseCaches(): Unit = trackedCheckpoints.synchronized {
-    trackedCheckpoints.foreach(_.unpersist(blocking = true))
-    trackedCheckpoints.clear()
-  }
+  def releaseCaches(): Unit = CacheScope.session.release()
 
   /** shear_from_adcp (:2046-2057): glider-aligned, QC'd, regridded,
     * 3-beam-solved, ENU-rotated shear per ping.
@@ -68,12 +45,15 @@ object AdcpPipeline {
     * level, so without the cut every stage that reads an earlier array
     * column more than once would re-run it. The call therefore runs the
     * barrier jobs itself; the returned shear is lazy from the last barrier.
+    * The barriers are tracked in `scope`: releasing it frees this run's
+    * blocks and no other run's.
     */
   def shearFromAdcp(
       adcpRaw: DataFrame, gliderRaw: DataFrame, opts0: Options,
       cellSize: Double, blankingDistance: Double,
       solveHeading: Boolean = true,
-      missionCols: Seq[String] = Nil): (DataFrame, DataFrame) = {
+      missionCols: Seq[String] = Nil,
+      scope: CacheScope = CacheScope.session): (DataFrame, DataFrame) = {
     // resolve declination/geomag targets through the provider seam (no-op
     // without a configured provider — opts0.geomag defaults to None);
     // with mission keys every mission gets its own field target
@@ -106,11 +86,12 @@ object AdcpPipeline {
              HeadingCorrection.Calibration(
                Array(1, 0, 0, 0, 1, 0, 0, 0, 1), Array(0, 0, 0), 0.0))(adcp)
     adcp = AdcpStages.soundspeedCorrection(adcp)
-    adcp = barrier(AdcpStages.removeOutliers(opts)(adcp))
-    adcp = barrier(correctShear(opts)(adcp))
+    adcp = scope.checkpoint(AdcpStages.removeOutliers(opts)(adcp))
+    adcp = scope.checkpoint(correctShear(opts)(adcp))
     adcp = AdcpStages.backscatterCorrection(opts)(adcp)
-    adcp = barrier(AdcpStages.regrid(opts, cellSize, blankingDistance)(adcp))
-    adcp = barrier(AdcpStages.threeBeamXyz(opts)(adcp))
+    adcp = scope.checkpoint(
+      AdcpStages.regrid(opts, cellSize, blankingDistance)(adcp))
+    adcp = scope.checkpoint(AdcpStages.threeBeamXyz(opts)(adcp))
     adcp = AdcpStages.enuAndShear(opts)(adcp)
     (adcp, glider)
   }
@@ -142,25 +123,29 @@ object AdcpPipeline {
   }
 
   /** velocity_from_shear (:2067-2083): DAC + full grid + shear referencing +
-    * bias solve + final dataset. `btRaw` optional bottom-track table.
+    * bias solve + final dataset. `btRaw` optional bottom-track table. The
+    * barriers and the axes' `dim` are tracked in `scope`.
     */
   def velocityFromShear(
       adcp0: DataFrame, glider0: DataFrame, opts: Options,
       btRaw: Option[DataFrame], spark: SparkSession,
-      missionCols: Seq[String] = Nil): (DataFrame, GridOutput.Axes) = {
+      missionCols: Seq[String] = Nil,
+      scope: CacheScope = CacheScope.session): (DataFrame, GridOutput.Axes) = {
     // the DAC-augmented glider feeds ~10 downstream scans (axes + every
     // gridded variable + profile datetimes); a barrier keeps each scan
     // from re-running the dead-reckoning windows and interp joins
-    val glider = barrier(GliderStages.getDac(adcp0, glider0, missionCols))
+    val glider =
+      scope.checkpoint(GliderStages.getDac(adcp0, glider0, missionCols))
     val adcp = btRaw match {
       case Some(bt) => GliderStages.bottomTrack(opts)(adcp0, bt, missionCols)
       case None => adcp0
     }
-    val ax = GridOutput.axes(glider, opts, missionCols)
+    val ax = GridOutput.axes(glider, opts, missionCols, scope)
     val grid0 = GridOutput.gridData(adcp, glider, ax)
     // calcBias reads the referenced grid twice (coefficient statistics,
     // final columns): the barrier runs its three shuffles and windows once
-    val referenced = barrier(GridOutput.referenceShear(grid0, ax, opts.yRes))
+    val referenced =
+      scope.checkpoint(GridOutput.referenceShear(grid0, ax, opts.yRes))
     val biased = GridOutput.calcBias(referenced, ax, spark)
     (GridOutput.makeDataset(biased, ax), ax)
   }

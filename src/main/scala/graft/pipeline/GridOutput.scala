@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
-import graft.core.Optimize
+import graft.core.{CacheScope, Optimize}
 
 /** The gridded-output half of the pipeline (SURVEY.md §2.9 entry points 2-3):
   * profile/depth axes, shear gridding + vertical integration, DAC
@@ -22,8 +22,6 @@ import graft.core.Optimize
   */
 object GridOutput {
 
-  private val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
   /** Axes (grid_shear_data, :1648-1656): yaxis = arange(0, ceil(max
     * pressure), yRes); xaxis = sorted unique profile numbers, held as a
     * broadcastable dim-frame (`dim`: missionCols, profile_number, xbin)
@@ -33,6 +31,7 @@ object GridOutput {
     * pd.cut semantics with the xaxis itself as edges mean profile
     * xaxis[k] lands in column k-1 and the first profile is dropped —
     * xbin = dense_rank(profile) - 2 per mission, null for the first.
+    * [[axes]] persists `dim` in its `scope`.
     */
   final case class Axes(yMax: Double, yRes: Double, missionCols: Seq[String],
       dim: DataFrame, nProfiles: Long) {
@@ -52,9 +51,8 @@ object GridOutput {
       dim.where(col("xbin").isNotNull)
         .groupBy(missionCols.map(col): _*)
         .agg((max("xbin") + 1).as("n_x"))
-    /** Unpersist the cached dim frame; call when done with this grid run
-      * (repeated axes() calls in a long-lived session otherwise accumulate
-      * cached RDDs).
+    /** Unpersists the cached dim frame alone; releasing the scope `axes`
+      * tracked it in frees it too.
       */
     def release(): Unit = { dim.unpersist(); () }
     /** Full grid key. */
@@ -68,19 +66,19 @@ object GridOutput {
   }
 
   def axes(glider: DataFrame, opts: Options,
-      missionCols: Seq[String] = Nil): Axes = {
+      missionCols: Seq[String] = Nil,
+      scope: CacheScope = CacheScope.session): Axes = {
     val yMax = glider.agg(max(ceil(col("pressure"))).cast("double"))
       .first().getDouble(0)
     val wM =
       if (missionCols.isEmpty) Window.partitionBy(lit(1))
       else Window.partitionBy(missionCols.map(col): _*)
-    val dim = glider
+    val dim = scope.persist(glider
       .select((missionCols :+ "profile_number").map(col): _*)
       .distinct()
       .withColumn("xbin",
         (dense_rank().over(wM.orderBy("profile_number")) - 2).cast("long"))
-      .withColumn("xbin", when(col("xbin") >= 0, col("xbin")))
-      .persist(disk)
+      .withColumn("xbin", when(col("xbin") >= 0, col("xbin"))))
     Axes(yMax, opts.yRes, missionCols, dim, dim.count())
   }
 

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.Optimize
+import graft.core.{CacheScope, Optimize}
 
 /** Compass calibration + tilt-compensated heading
   * (correct_heading / _heading_correction, process_adcp.py:313-460).
@@ -64,8 +64,8 @@ object HeadingCorrection {
       val r = Optimize.nelderMead(objective, x0, maxIter = maxIter, maxFun = maxIter)
       Calibration(r.x.take(9), r.x.drop(9), r.fx)
     } else {
-      val cached = mag3.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      CacheScope.using { scope =>
+        val cached = scope.persist(mag3)
         def objective(c: Array[Double]): Double = {
           val dx = col("mag_x") - c(9)
           val dy = col("mag_y") - c(10)
@@ -78,7 +78,7 @@ object HeadingCorrection {
         }
         val r = Optimize.nelderMead(objective, x0, maxIter = maxIter, maxFun = maxIter)
         Calibration(r.x.take(9), r.x.drop(9), r.fx)
-      } finally { cached.unpersist(); () }
+      }
     }
   }
 
@@ -141,11 +141,10 @@ object HeadingCorrection {
       missionCols: Seq[String],
       fallbackTarget: Double): Seq[(Seq[Any], Calibration)] = {
     require(missionCols.nonEmpty, "solvePerMission needs mission columns")
-    val mag = adcp
-      .select((missionCols ++ Seq("mag_x", "mag_y", "mag_z")).map(col): _*)
-      .na.drop(Seq("mag_x", "mag_y", "mag_z"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    CacheScope.using { scope =>
+      val mag = scope.persist(adcp
+        .select((missionCols ++ Seq("mag_x", "mag_y", "mag_z")).map(col): _*)
+        .na.drop(Seq("mag_x", "mag_y", "mag_z")))
       val keys = mag.select(missionCols.map(col): _*).distinct()
         .collect().map(_.toSeq.toList: Seq[Any])
         .sortBy(_.map(String.valueOf).mkString(""))
@@ -155,7 +154,7 @@ object HeadingCorrection {
         val cond = missionCols.zip(k).map((eq _).tupled).reduce(_ && _)
         k -> solve(mag.where(cond), targets.getOrElse(k, fallbackTarget))
       }
-    } finally { mag.unpersist(); () }
+    }
   }
 
   /** Apply per-mission calibrations as a broadcast dim-join of the 12

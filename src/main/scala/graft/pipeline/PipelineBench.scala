@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.core.CacheScope
 
 /** Pipeline throughput benchmark: runs shear_from_adcp end-to-end (incl.
   * the magnetometer calibration solve) on a scaled synthetic mission and
@@ -42,6 +43,22 @@ object PipelineBench {
 
   private def bench(spark: SparkSession, profiles: Int, mode: String,
       nMissions: Int): Unit = {
+    val line = CacheScope.using(run(spark, profiles, mode, nMissions, _))
+    // every cache of the run is released now; prove nothing stays cached —
+    // the discipline long-lived sessions need. The barriers' checkpoint
+    // blocks are invisible to the cache manager, so the count is of
+    // persistent RDDs (at least 1 while a cache entry stays registered): a
+    // leaked barrier shows here
+    val cachedAfter = math.max(spark.sparkContext.getPersistentRDDs.size,
+      if (spark.sharedState.cacheManager.isEmpty) 0 else 1)
+    println(s"""$line,"cached_rdds_after_release":$cachedAfter}""")
+  }
+
+  /** One run, with the inputs and every pipeline cache in `scope`; returns
+    * the JSON line without its closing cache check.
+    */
+  private def run(spark: SparkSession, profiles: Int, mode: String,
+      nMissions: Int, scope: CacheScope): String = {
     val multi = mode == "multi"
     // fail helpfully instead of grinding to an OOM: the 10x fleet shape
     // (600 profiles x 8 missions = 960k pings) measured 72.6 GB peak heap
@@ -62,12 +79,12 @@ object PipelineBench {
       if (multi) {
         val g0 = Fixture.glider(spark, profiles)
         val a0 = Fixture.adcp(spark, profiles)
-        ((1 to nMissions).map(m => tag(g0, m))
-           .reduce(_.unionByName(_)).repartition(32).cache(),
-         (1 to nMissions).map(m => tag(a0, m))
-           .reduce(_.unionByName(_)).repartition(32).cache())
-      } else (Fixture.glider(spark, profiles).cache(),
-            Fixture.adcp(spark, profiles).cache())
+        (scope.persist((1 to nMissions).map(m => tag(g0, m))
+           .reduce(_.unionByName(_)).repartition(32)),
+         scope.persist((1 to nMissions).map(m => tag(a0, m))
+           .reduce(_.unionByName(_)).repartition(32)))
+      } else (scope.persist(Fixture.glider(spark, profiles)),
+            scope.persist(Fixture.adcp(spark, profiles)))
     val nPings = adcpRaw.count(); glider.count() // materialize inputs first
 
     // Spark jobs run and generated classes compiled (code-cache misses) by
@@ -90,31 +107,21 @@ object PipelineBench {
     val ((adcp, gliderOut, cells), shearCost) = cost("shear") {
       val (adcp, gliderOut) = AdcpPipeline.shearFromAdcp(adcpRaw, glider,
         Fixture.opts, Fixture.cellSize, Fixture.blankingDistance,
-        solveHeading = true, missionCols = missionCols)
+        solveHeading = true, missionCols = missionCols, scope = scope)
       (adcp, gliderOut,
         adcp.select(explode(col("sh_e"))).where(col("col").isNotNull).count())
     }
     val secs = (System.nanoTime() - t0) / 1e9
     val fullJson = if (mode == "full" || multi) {
       val t1 = System.nanoTime()
-      val ((nE, axes), velocityCost) = cost("velocity") {
-        val (ds, axes) = AdcpPipeline.velocityFromShear(adcp, gliderOut,
-          Fixture.opts, None, spark, missionCols = missionCols)
-        (ds.where(col("ADCP_E").isNotNull && !isnan(col("ADCP_E"))).count(), axes)
+      val (nE, velocityCost) = cost("velocity") {
+        val (ds, _) = AdcpPipeline.velocityFromShear(adcp, gliderOut,
+          Fixture.opts, None, spark, missionCols = missionCols, scope = scope)
+        ds.where(col("ADCP_E").isNotNull && !isnan(col("ADCP_E"))).count()
       }
-      axes.release()
       f""","velocity_seconds":${(System.nanoTime() - t1) / 1e9}%.2f,"grid_cells_with_E":$nE$velocityCost"""
     } else ""
-    // release every pipeline cache and prove nothing stays cached — the
-    // discipline long-lived sessions need (Axes scaladoc). The barriers'
-    // checkpoint blocks are invisible to the cache manager, so the count is
-    // of persistent RDDs (at least 1 while a cache entry stays registered):
-    // a leaked barrier shows here
-    AdcpPipeline.releaseCaches()
-    glider.unpersist(); adcpRaw.unpersist()
-    val cachedAfter = math.max(spark.sparkContext.getPersistentRDDs.size,
-      if (spark.sharedState.cacheManager.isEmpty) 0 else 1)
     val missionJson = if (multi) s""","missions":$nMissions""" else ""
-    println(f"""{"mode":"$mode"$missionJson,"pings":$nPings,"finite_shear_cells":$cells,"seconds":$secs%.2f,"pings_per_sec":${nPings / secs}%.0f$shearCost$fullJson,"peak_heap_mb":${graft.Bench.peakHeapMb},"cached_rdds_after_release":$cachedAfter}""")
+    f"""{"mode":"$mode"$missionJson,"pings":$nPings,"finite_shear_cells":$cells,"seconds":$secs%.2f,"pings_per_sec":${nPings / secs}%.0f$shearCost$fullJson,"peak_heap_mb":${graft.Bench.peakHeapMb}"""
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.core.CacheScope
 
 /** Structured Streaming extension (SURVEY.md §7.5, §2.10): the glider/events
   * time-series is naturally an append-only stream. The same transformations
@@ -419,22 +420,15 @@ object StreamingOps {
     // a replayed micro-batch is skipped; the marker lands last (the
     // corpus sink is idempotent even in the window before it)
     IndexFiles.applyBatchOnce(spark, indexDir, writer, batchId) {
-      val scope = new Dedup.CacheScope
-      // survivors feed two writes (index append + corpus sink): persist
-      // so the probe computes once
-      val survivors = {
+      CacheScope.using { scope =>
+        // survivors feed two writes (index append + corpus sink): persist
+        // so the probe computes once
         val self = Dedup.dedupCorpus(batch, idCol, textCol, jaccardThreshold,
           maxBucket = maxBucket, scope = scope)
-        Dedup.dedupBatchAgainstLshIndex(spark, indexDir, self,
-            jaccardThreshold, idCol, textCol, maxBucket, scope)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
-      try {
+        val survivors = scope.persist(Dedup.dedupBatchAgainstLshIndex(spark,
+          indexDir, self, jaccardThreshold, idCol, textCol, maxBucket, scope))
         Dedup.appendToLshIndex(spark, indexDir, survivors, idCol, textCol)
         writeCorpus(survivors, corpusDir, writer, batchId)
-      } finally {
-        survivors.unpersist()
-        scope.release()
       }
     }
   }
@@ -523,23 +517,18 @@ object StreamingOps {
     val spark = batch.sparkSession
     val writer = writerIdFor(spark, appId)
     IndexFiles.applyBatchOnce(spark, indexDir, writer, batchId) {
-      val scope = new Dedup.CacheScope
-      // in-batch SemDeDup first (two near-dups arriving together would
-      // both survive an index-only probe), then the index probe;
-      // survivors feed two writes, so persist
-      val keptIds = Similarity.semanticDedup(batch, k = selfDedupK,
-          threshold = cosineThreshold, idCol = idCol, vecCol = vecCol)
-        .select(col("id").as(idCol))
-      val survivors = Similarity.dedupBatchAgainstIvfIndex(spark, indexDir,
-          batch.join(keptIds, Seq(idCol), "left_semi"),
-          cosineThreshold, nProbe, idCol, vecCol, scope)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      CacheScope.using { scope =>
+        // in-batch SemDeDup first (two near-dups arriving together would
+        // both survive an index-only probe), then the index probe;
+        // survivors feed two writes, so persist
+        val keptIds = Similarity.semanticDedup(batch, k = selfDedupK,
+            threshold = cosineThreshold, idCol = idCol, vecCol = vecCol)
+          .select(col("id").as(idCol))
+        val survivors = scope.persist(Similarity.dedupBatchAgainstIvfIndex(
+          spark, indexDir, batch.join(keptIds, Seq(idCol), "left_semi"),
+          cosineThreshold, nProbe, idCol, vecCol, scope))
         Similarity.appendToIvfIndex(spark, indexDir, survivors, idCol, vecCol)
         writeCorpus(survivors, corpusDir, writer, batchId)
-      } finally {
-        survivors.unpersist()
-        scope.release()
       }
     }
   }

@@ -173,6 +173,19 @@ class BenchSpec extends AnyFunSuite {
     }
   }
 
+  test("pass frees the grid axes a query persists (q62)") {
+    // q62 builds grid axes, whose dim frame is persisted in the session
+    // cache scope; the pass releases that scope after forcing the query
+    val q = "q62_depth_bias_hist"
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (times, errs) = Bench.pass(Map(q -> SparkEntry.queries(q)), spark,
+      "/root/testdata/sf0.001")
+    assert(errs.isEmpty && times(q) >= 0.0, errs)
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"RDDs left persistent after the pass: $leaked")
+  }
+
   test("both artifact lines carry the three host-noise probe timings") {
     // the self-describing-artifact contract: a loaded-host recording must
     // be adjudicable from the artifact alone — one probe before each pass,

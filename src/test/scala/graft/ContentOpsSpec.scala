@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.CacheScope
 import graft.functions.{Text, Vec}
 import graft.operators.{Dedup, Multimodal, Similarity}
 
@@ -209,8 +210,8 @@ class DedupSpec extends AnyFunSuite {
     // session-global trackedPersists this replaces freed BOTH). Distinct
     // inputs matter: Spark's cache manager is plan-keyed, so two runs over
     // the literally-identical frame share one cache entry by design.
-    val scopeA = new Dedup.CacheScope
-    val scopeB = new Dedup.CacheScope
+    val scopeA = new CacheScope
+    val scopeB = new CacheScope
     val docsB = docs.withColumn("doc_id", col("doc_id") + 100L)
     Dedup.dedupCorpus(docs, "doc_id", "text", jaccardThreshold = 0.5,
       scope = scopeA).count()

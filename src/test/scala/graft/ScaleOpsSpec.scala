@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.Salt
+import graft.core.{CacheScope, Salt}
 import graft.operators.Similarity
 
 class SaltSpec extends AnyFunSuite {
@@ -368,7 +368,7 @@ class IvfSpec extends AnyFunSuite {
     val e = graft.queries.Common.table(spark, "/root/testdata/sf0.001",
       "embeddings")
     val idx = Similarity.buildIvfIndex(e, 8, 64)
-    val scope = new graft.operators.Dedup.CacheScope
+    val scope = new CacheScope
     try {
       val probe = Similarity.probeIvf(idx, e.where(col("vec_id") < 6), 3,
         nProbe = 2, scope = scope)
@@ -483,7 +483,7 @@ class IvfPqSpec extends AnyFunSuite {
     // join reads the persisted exploded batch, not driver-collected rows
     val q = e.where(col("vec_id") < 6)
     val idx = Similarity.buildIvfPq(e, nCells = 8, dim = 64, m = 8, ksub = 16)
-    val scope = new graft.operators.Dedup.CacheScope
+    val scope = new CacheScope
     try {
       val probe = Similarity.probeIvfPq(idx, q, e, 3, nProbe = 2,
         shortlist = 50, scope = scope)
