@@ -45,10 +45,33 @@ object InterpJoin {
       xCol: String,
       valueCols: Seq[String],
       partitionCols: Seq[String] = Nil,
-      outPrefix: String = "interp_"): DataFrame = {
+      outPrefix: String = "interp_"): DataFrame =
+    interpolateThen(src, dst, xCol, valueCols, partitionCols, outPrefix)(
+      (_, _) => identity)
+
+  /** [[interpolate]] as the first step of a longer sweep, in the same plan
+    * node and sort: within each key group the probes leave the
+    * interpolation in x order, then `tiebreak` order, each with its
+    * interpolated columns appended, and `next` maps that stream, appending
+    * the `added` double columns. `next` gets the ordinals of its `reads`,
+    * which name columns of `dst` or the interpolated columns.
+    */
+  private[graft] def interpolateThen(
+      src: DataFrame,
+      dst: DataFrame,
+      xCol: String,
+      valueCols: Seq[String],
+      partitionCols: Seq[String],
+      outPrefix: String,
+      tiebreak: Seq[String] = Nil,
+      reads: Seq[String] = Nil,
+      added: Seq[String] = Nil)(next: SortedSweep.Sweep): DataFrame = {
     val n = valueCols.size
-    sweep(src, dst, xCol, valueCols, partitionCols, outPrefix)(
-      (ords, sameKey) => rows => new InterpSweep(rows, ords, sameKey, n))
+    sweep(src, dst, xCol, valueCols, partitionCols, outPrefix, tiebreak, reads,
+        added) { (ords, sameKey) =>
+      val (own, theirs) = ords.splitAt(2 + n)
+      rows => next(theirs, sameKey)(new InterpSweep(rows, own, sameKey, n))
+    }
   }
 
   /** For each row of `dst`, attach the `valueCols` of the nearest `src` row
@@ -72,10 +95,11 @@ object InterpJoin {
   }
 
   private def sweep(src: DataFrame, dst: DataFrame, xCol: String,
-      valueCols: Seq[String], partitionCols: Seq[String], outPrefix: String)(
-      f: SortedSweep.Sweep): DataFrame = {
+      valueCols: Seq[String], partitionCols: Seq[String], outPrefix: String,
+      tiebreak: Seq[String] = Nil, reads: Seq[String] = Nil,
+      added: Seq[String] = Nil)(f: SortedSweep.Sweep): DataFrame = {
     val vals = valueCols.map(c => s"__ij_v_$c")
-    val outs = valueCols.map(outPrefix + _)
+    val outs = valueCols.map(outPrefix + _) ++ added
     val srcPrep = src.select(
       (partitionCols.map(col) :+ col(xCol).cast("double").as(X) :+ lit(1).as(SRC)) ++
         valueCols.zip(vals).map { case (c, a) => col(c).cast("double").as(a) }: _*)
@@ -83,9 +107,10 @@ object InterpJoin {
       .withColumn(X, col(xCol).cast("double"))
       .withColumn(SRC, lit(0))
     SortedSweep(dstPrep.unionByName(srcPrep, allowMissingColumns = true),
-      keys = partitionCols, order = Seq(X -> true, SRC -> false),
-      reads = X +: SRC +: vals, keep = dst.columns.toSeq.filterNot(outs.contains),
-      added = outs)(f)
+      keys = partitionCols,
+      order = Seq(X -> true, SRC -> false) ++ tiebreak.map(_ -> true),
+      reads = (X +: SRC +: vals) ++ reads,
+      keep = dst.columns.toSeq.filterNot(outs.contains), added = outs)(f)
   }
 
   // Spark SQL's double comparison: NaN equals NaN and sorts above every

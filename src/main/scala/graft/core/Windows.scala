@@ -98,14 +98,6 @@ object Windows {
   def ffill(c: Column, w: WindowSpec): Column =
     last(c, ignoreNulls = true).over(w.rowsBetween(Window.unboundedPreceding, 0))
 
-  /** Backward fill (pandas bfill; process_adcp.py:1405-1406). Implemented as
-    * a descending-order RUNNING `last` — an unbounded-FOLLOWING frame would
-    * be re-evaluated from scratch per row by Spark (O(n^2) per partition).
-    */
-  def bfill(c: Column, orderCols: Seq[Column], parts: Seq[Column] = Nil): Column =
-    last(c, ignoreNulls = true).over(
-      ordered(orderCols.map(_.desc), parts).rowsBetween(Window.unboundedPreceding, 0))
-
   /** Running sum, null-skipping (np.nancumsum; process_adcp.py:1957-1959).
     * Rows whose input is null yield the running total so far (or null before
     * any finite value) — matching nancumsum-then-mask-restore composition.
@@ -118,12 +110,6 @@ object Windows {
     */
   def cumsumReverse(c: Column, w: WindowSpec): Column =
     sum(c).over(w.rowsBetween(0, Window.unboundedFollowing))
-
-  /** Running integral `cumsum(v * dt)` over an ordered time axis —
-    * dead-reckoning displacement (process_adcp.py:1345-1346).
-    */
-  def integrate(v: Column, t: Column, w: WindowSpec): Column =
-    cumsum(v * (t - lag(t, 1).over(w)), w)
 
   /** Subtract the running value captured at the most recent anchor row —
     * `reset_transport_at_GPS` (process_adcp.py:1329-1333,1348-1349):
@@ -138,7 +124,9 @@ object Windows {
     c - avg(c).over(Window.partitionBy(parts: _*))
 
   /** Reverse running count of finite values — bottom-N-bins masks
-    * (process_adcp.py:1756-1759). Descending running frame (see bfill).
+    * (process_adcp.py:1756-1759). A descending RUNNING frame: an
+    * unbounded-FOLLOWING frame would be re-evaluated from scratch per row
+    * by Spark (O(n^2) per partition).
     */
   def countFromEnd(c: Column, orderCols: Seq[Column], parts: Seq[Column] = Nil): Column =
     count(c).over(

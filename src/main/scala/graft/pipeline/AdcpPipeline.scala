@@ -114,11 +114,13 @@ object AdcpPipeline {
 
   /** grid_shear (:2060-2064): axes + the full combined grid (Sh_E/N/U from
     * the exploded ADCP bins, ADCP attitude grids, every numeric glider
-    * column) — three shuffles total via [[GridOutput.gridData]].
+    * column) — three shuffles total via [[GridOutput.gridData]]. The axes'
+    * `dim` is tracked in `scope`.
     */
   def gridShear(adcp: DataFrame, glider: DataFrame, opts: Options,
-      missionCols: Seq[String] = Nil): (DataFrame, GridOutput.Axes) = {
-    val ax = GridOutput.axes(glider, opts, missionCols)
+      missionCols: Seq[String] = Nil,
+      scope: CacheScope = CacheScope.session): (DataFrame, GridOutput.Axes) = {
+    val ax = GridOutput.axes(glider, opts, missionCols, scope)
     (GridOutput.gridData(adcp, glider, ax), ax)
   }
 
@@ -133,7 +135,7 @@ object AdcpPipeline {
       scope: CacheScope = CacheScope.session): (DataFrame, GridOutput.Axes) = {
     // the DAC-augmented glider feeds ~10 downstream scans (axes + every
     // gridded variable + profile datetimes); a barrier keeps each scan
-    // from re-running the dead-reckoning windows and interp joins
+    // from re-running the dead-reckoning and DAC sweeps
     val glider =
       scope.checkpoint(GliderStages.getDac(adcp0, glider0, missionCols))
     val adcp = btRaw match {
@@ -143,7 +145,8 @@ object AdcpPipeline {
     val ax = GridOutput.axes(glider, opts, missionCols, scope)
     val grid0 = GridOutput.gridData(adcp, glider, ax)
     // calcBias reads the referenced grid twice (coefficient statistics,
-    // final columns): the barrier runs its three shuffles and windows once
+    // final columns): the barrier runs its three shuffles and the
+    // referencing sweep (which also adds the bias columns) once
     val referenced =
       scope.checkpoint(GridOutput.referenceShear(grid0, ax, opts.yRes))
     val biased = GridOutput.calcBias(referenced, ax, spark)

@@ -68,8 +68,10 @@ object AdcpStages {
     else {
       val arrayCols = Seq("ranges") ++
         Schema.beams.flatMap(b => Seq(s"vel$b", s"corr$b", s"amp$b"))
+      // the length is what is left, not Int.MaxValue: Spark's interpreted
+      // slice adds it to the start and overflows to an empty array
       arrayCols.foldLeft(adcp) { (df, c) =>
-        df.withColumn(c, slice(col(c), n + 1, Int.MaxValue))
+        df.withColumn(c, slice(col(c), lit(n + 1), greatest(size(col(c)) - n, lit(0))))
       }
     }
 

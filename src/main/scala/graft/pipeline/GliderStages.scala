@@ -1,6 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.{DataFrame, SortedSweep}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{InterpJoin, Windows}
@@ -107,33 +110,34 @@ object GliderStages {
     * dead-reckon east/north displacement from heading+speed, reset at each
     * GPS fix, close each dive's loop against the GPS displacement, spread
     * DAC back over the glider timeline by interpolation + bfill/ffill.
+    *
+    * Two sorted sweeps per mission, no window over the samples: the
+    * heading interpolation streams the samples in time order straight into
+    * the dead reckoning ([[DeadReckoning]], the same plan node and sort),
+    * and after the per-dive loop closure the DAC spread interpolates the
+    * dive knots and fills the edges in one more pass ([[DacSpread]]). Only
+    * the per-dive pairing is a window, over one row per dive. `time_ns`
+    * orders each mission's samples; the running sums add in that order.
     */
   def getDac(adcp: DataFrame, glider: DataFrame,
       missionCols: Seq[String] = Nil): DataFrame = {
     val mCols = missionCols.map(col)
-    val wT = Windows.ordered(Seq(col("time_ns")), mCols)
-    // heading interpolated ADCP -> glider timeline (:1338)
-    val withHeading = InterpJoin.interpolate(
+    val dst = glider
+      .withColumn("t", col("date_float") * 1e-9)
+      .withColumn(Speed, col("speed_horz").cast("double"))
+      .withColumn(Gps, coalesce(gpsFix, lit(false)))
+    // heading interpolated ADCP -> glider timeline (:1338), then the dead
+    // reckoning (:1340-1349) over the same sorted samples
+    val base = InterpJoin.interpolateThen(
       adcp.select((missionCols ++ Seq("time_ns", "heading")).map(col): _*),
-      glider, "time_ns", Seq("heading"), missionCols, "adcp_")
-    val t = col("date_float") * 1e-9
-    val vgE = coalesce(col("speed_horz") * sin(radians(col("adcp_heading"))), lit(0.0))
-    val vgN = coalesce(col("speed_horz") * cos(radians(col("adcp_heading"))), lit(0.0))
-    val base = withHeading
-      .withColumn("t", t)
-      .withColumn("speed_e", vgE)
-      .withColumn("speed_n", vgN)
-      // append(0, v[1:]*diff(t)) -> the first sample's integral is 0, not null
-      .withColumn("de", coalesce(Windows.integrate(col("speed_e"), col("t"), wT), lit(0.0)))
-      .withColumn("dn", coalesce(Windows.integrate(col("speed_n"), col("t"), wT), lit(0.0)))
-      .withColumn("de", Windows.resetAtAnchor(col("de"), gpsFix, wT))
-      .withColumn("dn", Windows.resetAtAnchor(col("dn"), gpsFix, wT))
-      .withColumn("de_prev", lag(col("de"), 1).over(wT))
-      .withColumn("dn_prev", lag(col("dn"), 1).over(wT))
-      .withColumn("gps", gpsFix)
+      dst, "time_ns", Seq("heading"), missionCols, "adcp_",
+      tiebreak = Seq("time_ns"),
+      reads = Seq("t", Speed, Gps, "adcp_heading"),
+      added = Seq("speed_e", "speed_n", "de", "dn", "de_prev", "dn_prev"))(
+      (ords, sameKey) => rows => new DeadReckoning(rows, ords, sameKey))
 
     // per dive: first/last GPS row (:1352-1369)
-    val firstLast = base.where(col("gps"))
+    val firstLast = base.where(col(Gps))
       .groupBy(mCols :+ col("dive_number").as("dive"): _*)
       .agg(
         min_by(struct(col("latitude"), col("longitude"), col("t"), col("de_prev"), col("dn_prev")), col("time_ns")).as("first_gps"),
@@ -162,16 +166,196 @@ object GliderStages {
       .withColumn("meant", (col("next_surf_time") + col("dive_time")) / 2.0)
       .withColumn("dac_e", (col("gps_e") - col("dr_e")) / col("dt"))
       .withColumn("dac_n", (col("gps_n") - col("dr_n")) / col("dt"))
-      .select((missionCols ++ Seq("meant", "dac_e", "dac_n")).map(col): _*)
 
     // interp DAC(meant) onto the glider timeline, then bfill+ffill (:1404-1406)
-    val dac = InterpJoin.interpolate(
-      paired.withColumnRenamed("meant", "t"), base.drop("de_prev", "dn_prev", "gps"),
-      "t", Seq("dac_e", "dac_n"), missionCols, "i_")
-    dac
-      .withColumn("dac_e", Windows.ffill(Windows.bfill(col("i_dac_e"), Seq(col("time_ns")), mCols), wT))
-      .withColumn("dac_n", Windows.ffill(Windows.bfill(col("i_dac_n"), Seq(col("time_ns")), mCols), wT))
-      .drop("i_dac_e", "i_dac_n")
+    val probes = base.drop("de_prev", "dn_prev", Speed, Gps)
+    val knots = paired.select(mCols ++ Seq(col("meant").as("t"),
+      col("dac_e").as(KnotE), col("dac_n").as(KnotN), lit(1).as(IsKnot)): _*)
+    SortedSweep(
+      probes.withColumn(IsKnot, lit(0)).unionByName(knots, allowMissingColumns = true),
+      keys = missionCols,
+      order = Seq(IsKnot -> false, "time_ns" -> true, "t" -> true),
+      reads = Seq("t", IsKnot, KnotE, KnotN), keep = probes.columns.toSeq,
+      added = Seq("dac_e", "dac_n"))(
+      (ords, sameKey) => rows => new DacSpread(rows, ords, sameKey))
+      .select((glider.columns.toSeq ++ Seq("adcp_heading", "t", "speed_e",
+        "speed_n", "de", "dn", "dac_e", "dac_n")).map(col): _*)
+  }
+
+  private val Speed = "__dr_speed"
+  private val Gps = "__dr_gps"
+  private val IsKnot = "__dac_is_knot"
+  private val KnotE = "__dac_knot_e"
+  private val KnotN = "__dac_knot_n"
+
+  /** The dead reckoning of each mission's samples in time order
+    * (process_adcp.py:1340-1349), fed by the heading interpolation: the
+    * east/north speed from the horizontal speed and the interpolated
+    * heading (0 where either is missing); its running integral over the
+    * time steps (0 before the first step; a step with a missing time adds
+    * nothing), less the integral at the latest GPS fix; and the previous
+    * sample's reset integral. Reads t, the speed, the fix flag and the
+    * heading; adds speed_e, speed_n, de, dn, de_prev, dn_prev.
+    */
+  private final class DeadReckoning(rows: Iterator[InternalRow], ords: Seq[Int],
+      sameKey: (InternalRow, InternalRow) => Boolean)
+      extends Iterator[InternalRow] {
+    private val Seq(tOrd, speedOrd, gpsOrd, headingOrd) = ords
+    private var last: InternalRow = null
+    private var hasT = false
+    private var lastT = 0.0
+    // per axis (east, north): running integral, its value at the latest
+    // fix, the previous sample's reset integral
+    private val sum = new Array[Double](2)
+    private val hasSum = new Array[Boolean](2)
+    private val atFix = new Array[Double](2)
+    private val hasFix = new Array[Boolean](2)
+    private val prev = new Array[Double](2)
+    private var hasPrev = false
+
+    override def hasNext: Boolean = rows.hasNext
+
+    override def next(): InternalRow = {
+      val row = rows.next()
+      if (last == null || !sameKey(last, row)) {
+        hasT = false; hasPrev = false
+        java.util.Arrays.fill(hasSum, false)
+        java.util.Arrays.fill(hasFix, false)
+      }
+      last = row
+      val moving = !row.isNullAt(speedOrd) && !row.isNullAt(headingOrd)
+      val rad = if (moving) math.toRadians(row.getDouble(headingOrd)) else 0.0
+      val speed = Array(
+        if (moving) row.getDouble(speedOrd) * math.sin(rad) else 0.0,
+        if (moving) row.getDouble(speedOrd) * math.cos(rad) else 0.0)
+      val step = !row.isNullAt(tOrd) && hasT
+      val t = if (row.isNullAt(tOrd)) 0.0 else row.getDouble(tOrd)
+      val fix = !row.isNullAt(gpsOrd) && row.getBoolean(gpsOrd)
+      val out = new Array[Any](6)
+      var a = 0
+      while (a < 2) {
+        if (step) {
+          // the first term starts from 0.0, as Spark's running sum does
+          sum(a) = (if (hasSum(a)) sum(a) else 0.0) + speed(a) * (t - lastT)
+          hasSum(a) = true
+        }
+        val running = if (hasSum(a)) sum(a) else 0.0
+        if (fix) { atFix(a) = running; hasFix(a) = true }
+        val reset = running - (if (hasFix(a)) atFix(a) else 0.0)
+        out(a) = speed(a)
+        out(2 + a) = reset
+        out(4 + a) = if (hasPrev) prev(a) else null
+        prev(a) = reset
+        a += 1
+      }
+      hasPrev = true
+      hasT = !row.isNullAt(tOrd)
+      lastT = t
+      new JoinedRow(row, new GenericInternalRow(out))
+    }
+  }
+
+  /** The DAC spread of each mission (process_adcp.py:1404-1406): the
+    * mission's dive knots arrive first, in x order, and are kept (one per
+    * dive); then each sample, in time order, gets each DAC column linearly
+    * interpolated at its t exactly as [[InterpJoin.interpolate]] does
+    * (null outside the knot hull, the previous knot's value at a knot's x),
+    * and a null takes the next sample's value (bfill), or, with none left,
+    * the last one's (ffill). Samples wait only for the next non-null value
+    * of their column. Reads t, the knot flag and the two knot values; adds
+    * dac_e, dac_n.
+    */
+  private final class DacSpread(rows: Iterator[InternalRow], ords: Seq[Int],
+      sameKey: (InternalRow, InternalRow) => Boolean)
+      extends Iterator[InternalRow] {
+    private final class Sample(val row: InternalRow) {
+      val out = new Array[Any](2)
+      var open = 0
+    }
+    private val Seq(xOrd, knotOrd, eOrd, nOrd) = ords
+    private val valueOrds = Array(eOrd, nOrd)
+    private val kx = Array.fill(2)(new ArrayBuffer[Double]())
+    private val ky = Array.fill(2)(new ArrayBuffer[Double]())
+    private val pending = new java.util.ArrayDeque[Sample]()
+    private val waiting = Array.fill(2)(new ArrayBuffer[Sample]())
+    private val lastValue = new Array[Any](2)
+    private var group: InternalRow = null
+
+    // Spark SQL's double order: NaN equals NaN and sorts above every other
+    // value, -0.0 equals 0.0
+    private def cmp(a: Double, b: Double): Int =
+      if (a == b) 0 else java.lang.Double.compare(a, b)
+
+    private def interpolate(c: Int, x: Double): Any = {
+      val xs = kx(c)
+      // the last knot at or before x
+      var lo = 0; var hi = xs.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (cmp(xs(mid), x) <= 0) lo = mid + 1 else hi = mid
+      }
+      val i = lo - 1
+      if (i < 0) null
+      else if (cmp(xs(i), x) == 0) ky(c)(i)
+      else if (i + 1 == xs.length) null
+      else {
+        val (x0, y0, x1, y1) = (xs(i), ky(c)(i), xs(i + 1), ky(c)(i + 1))
+        y0 + (y1 - y0) * (x - x0) / (x1 - x0)
+      }
+    }
+
+    private def fill(c: Int, v: Any): Unit = {
+      waiting(c).foreach { s => s.out(c) = v; s.open -= 1 }
+      waiting(c).clear()
+    }
+
+    private def endGroup(): Unit = {
+      var c = 0
+      while (c < 2) {
+        fill(c, lastValue(c))
+        lastValue(c) = null; kx(c).clear(); ky(c).clear()
+        c += 1
+      }
+    }
+
+    override def hasNext: Boolean = {
+      while ((pending.isEmpty || pending.peek().open > 0) && rows.hasNext) {
+        val row = rows.next()
+        if (group == null || !sameKey(group, row)) {
+          if (group != null) endGroup()
+          group = row.copy()
+        }
+        if (row.getInt(knotOrd) == 1) {
+          if (!row.isNullAt(xOrd)) {
+            var c = 0
+            while (c < 2) {
+              if (!row.isNullAt(valueOrds(c))) {
+                kx(c) += row.getDouble(xOrd); ky(c) += row.getDouble(valueOrds(c))
+              }
+              c += 1
+            }
+          }
+        } else {
+          val s = new Sample(row.copy())
+          var c = 0
+          while (c < 2) {
+            val v = if (row.isNullAt(xOrd)) null else interpolate(c, row.getDouble(xOrd))
+            if (v == null) { waiting(c) += s; s.open += 1 }
+            else { fill(c, v); lastValue(c) = v; s.out(c) = v }
+            c += 1
+          }
+          pending.add(s)
+        }
+      }
+      if (!rows.hasNext && group != null) { endGroup(); group = null }
+      !pending.isEmpty && pending.peek().open == 0
+    }
+
+    override def next(): InternalRow =
+      if (hasNext) {
+        val s = pending.poll()
+        new JoinedRow(s.row, new GenericInternalRow(s.out))
+      } else throw new NoSuchElementException
   }
 
   /** Surface drift (getSurfaceDrift, process_adcp.py:1435-1478): centered

@@ -1,6 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.{Column, DataFrame, SortedSweep, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
@@ -169,17 +172,18 @@ object GridOutput {
     * SpB = yRes/dPdz clipped at one per-mission std (the clip assigns +std
     * regardless of sign, :1705-1708 — reference behavior, not symmetric),
     * reference = colMean(DAC) - nansum(V*SpB)/nansum(SpB), added back.
-    * Produces ADCP_E / ADCP_N.
+    * Produces ADCP_E / ADCP_N, and calc_bias's `__bias_e` / `__bias_n`
+    * from the gridded `speed_e` / `speed_n` ([[calcBias]] uses them).
     *
     * The SpB sums run over every cell of the combined grid where the glider
     * gridded (exactly the reference's dense-grid nansum domain, :1713 —
-    * including cells with no finite shear).
+    * including cells with no finite shear). The std is one small
+    * aggregate; everything else is one sweep per profile column
+    * ([[ProfileSweep]]). A column whose SpB sums to exactly 0 gets null
+    * velocities (the reference divides by that zero).
     */
   def referenceShear(grid0: DataFrame, axes: Axes, yRes: Double,
       letters: Seq[String] = Seq("e", "n")): DataFrame = {
-    val wCum = axes.wCol.orderBy("ybin")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wCol = axes.wCol
     val spb0 = when(col("speed_vert").isNull, lit(null).cast("double"))
       .when(col("speed_vert") === 0.0, lit(0.0))
       .otherwise(lit(yRes) / col("speed_vert"))
@@ -194,41 +198,111 @@ object GridOutput {
     val clipped = joined.withColumn("__spb",
       when(abs(col("__spb0")) > col("__spb_std"), col("__spb_std"))
         .otherwise(col("__spb0")))
-    letters.foldLeft(clipped) { (g, l) =>
-      val sh = col(s"Sh_${l.toUpperCase}")
-      val g2 = g
-        .withColumn("__vi",
-          when(sh.isNotNull, sum(coalesce(sh, lit(0.0))).over(wCum) * yRes))
-        .withColumn("__vr", col("__vi") - avg(col("__vi")).over(wCol))
-      val ref = avg(col(s"dac_$l")).over(wCol) -
-        sum(col("__vr") * col("__spb")).over(wCol) / sum(col("__spb")).over(wCol)
-      g2.withColumn(s"ADCP_${l.toUpperCase}", col("__vr") + ref)
-        .drop("__vi", "__vr")
-    }.drop("__spb0", "__spb", "__spb_std")
+    profileSweep(clipped, grid0.columns.toSeq, axes, yRes, letters)
+  }
+
+  /** The per-profile-column pass of [[referenceShear]] and [[calcBias]]:
+    * `df` clustered by (missionCols, xbin) and sorted by ybin, one column
+    * at a time, keeping the `keep` columns. Adds ADCP_L for each of
+    * `letters` (read from Sh_L, dac_l and `__spb`), then the bias columns
+    * (read from speed_e, speed_n).
+    */
+  private def profileSweep(df: DataFrame, keep: Seq[String], axes: Axes,
+      yRes: Double, letters: Seq[String]): DataFrame = {
+    val reads = Seq(col("speed_e"), col("speed_n")) ++ letters.flatMap(l =>
+      Seq(col(s"Sh_${l.toUpperCase}"), col(s"dac_$l"), col("__spb")))
+    val names = reads.indices.map(i => s"__ps_$i")
+    val in = df.select(keep.map(col) ++
+      reads.zip(names).map { case (c, n) => c.cast("double").as(n) }: _*)
+    SortedSweep(in, keys = axes.xKey, order = Seq("ybin" -> true), reads = names,
+      keep = keep, added = letters.map(l => s"ADCP_${l.toUpperCase}") ++
+        Seq("__bias_e", "__bias_n"))(
+      (ords, sameKey) => rows => new ProfileSweep(rows, ords, sameKey,
+        letters.size, yRes))
+  }
+
+  /** One profile column at a time (at most nY rows), in ybin order. Per
+    * shear letter: V = nancumsum(Sh) * yRes (null where Sh is), less its
+    * column mean, plus the reference mean(DAC) - sum(V*SpB)/sum(SpB)
+    * (null-skipping means and sums). Per bias letter (E, N): the
+    * nancumsum of the finite speeds (null where the speed is not finite),
+    * less its column mean. Reads the two speeds, then Sh, DAC and SpB per
+    * shear letter.
+    */
+  private final class ProfileSweep(rows: Iterator[InternalRow], ords: Seq[Int],
+      sameKey: (InternalRow, InternalRow) => Boolean, nShear: Int,
+      yRes: Double) extends Iterator[InternalRow] {
+    private val column = new ArrayBuffer[InternalRow]()
+    private val out = new java.util.ArrayDeque[InternalRow]()
+
+    /** Null-skipping running state of Spark's `sum` and `avg`. */
+    private final class Acc {
+      var sum = 0.0; var n = 0L
+      def add(v: Double): Unit = { sum += v; n += 1 }
+      def mean: Option[Double] = if (n == 0) None else Some(sum / n)
+      def total: Option[Double] = if (n == 0) None else Some(sum)
+    }
+
+    private def opt(r: InternalRow, o: Int): Option[Double] =
+      if (r.isNullAt(o)) None else Some(r.getDouble(o))
+
+    private def referenced(shOrd: Int, dacOrd: Int, spbOrd: Int): Array[Any] = {
+      var cum = 0.0
+      val vi = column.map { r =>
+        cum += (if (r.isNullAt(shOrd)) 0.0 else r.getDouble(shOrd))
+        if (r.isNullAt(shOrd)) None else Some(cum * yRes)
+      }
+      val viMean = new Acc; vi.foreach(_.foreach(viMean.add))
+      val vr = vi.map(v => for (a <- v; m <- viMean.mean) yield a - m)
+      val dac = new Acc; val vs = new Acc; val spb = new Acc
+      column.indices.foreach { i =>
+        opt(column(i), dacOrd).foreach(dac.add)
+        val w = opt(column(i), spbOrd)
+        w.foreach(spb.add)
+        for (v <- vr(i); s <- w) vs.add(v * s)
+      }
+      val ref = for (d <- dac.mean; a <- vs.total; b <- spb.total if b != 0.0)
+        yield d - a / b
+      vr.map(v => (for (a <- v; r <- ref) yield a + r).getOrElse(null)).toArray
+    }
+
+    private def bias(speedOrd: Int): Array[Any] = {
+      var cum = 0.0
+      val raw = column.map { r =>
+        val v = opt(r, speedOrd).filterNot(_.isNaN)
+        cum += v.getOrElse(0.0)
+        v.map(_ => cum)
+      }
+      val mean = new Acc; raw.foreach(_.foreach(mean.add))
+      val m = mean.mean.getOrElse(0.0)
+      raw.map(_.map(_ - m).getOrElse(null)).toArray
+    }
+
+    private def flush(): Unit = {
+      val cols = (0 until nShear).map(l =>
+        referenced(ords(2 + 3 * l), ords(3 + 3 * l), ords(4 + 3 * l))) ++
+        ords.take(2).map(bias)
+      column.indices.foreach { i =>
+        out.add(new JoinedRow(column(i), new GenericInternalRow(cols.map(_(i)).toArray)))
+      }
+      column.clear()
+    }
+
+    override def hasNext: Boolean = {
+      while (out.isEmpty && rows.hasNext) {
+        val row = rows.next()
+        if (column.nonEmpty && !sameKey(column.head, row)) flush()
+        column += row.copy()
+      }
+      if (out.isEmpty && column.nonEmpty) flush()
+      !out.isEmpty
+    }
+
+    override def next(): InternalRow =
+      if (hasNext) out.poll() else throw new NoSuchElementException
   }
 
   private def finiteCol(c: Column): Column = c.isNotNull && !isnan(c)
-
-  /** calc_bias bias columns (process_adcp.py:1954-1960), distributed:
-    * per-(mission, xbin) nancumsum of the gridded glider speed down the
-    * depth axis (running frame — O(n), same shape [[referenceShear]] uses),
-    * de-meaned over each column's finite cells. Null where speed is
-    * missing, exactly the reference's NaN cells. The grid never leaves the
-    * executors.
-    */
-  private def biasColumns(out: DataFrame, axes: Axes): DataFrame = {
-    val wCum = axes.wCol.orderBy("ybin")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    Seq("e", "n").foldLeft(out) { (g, l) =>
-      val sp = col(s"speed_$l")
-      val raw = when(finiteCol(sp),
-        sum(when(finiteCol(sp), sp).otherwise(lit(0.0))).over(wCum))
-      g.withColumn(s"__bias_$l", raw)
-        .withColumn(s"__bias_$l",
-          col(s"__bias_$l") -
-            coalesce(avg(col(s"__bias_$l")).over(axes.wCol), lit(0.0)))
-    }
-  }
 
   /** Per-mission bias coefficients (missionCols..., __coeff), solved from
     * sufficient statistics: the fmin objective is the rmsd-of-row-rmsds of
@@ -303,14 +377,17 @@ object GridOutput {
     * glider speed per column, de-meaned, scaled by the coefficient
     * minimizing the combined E/N RMSD score (fmin parity: maxiter=100,
     * ftol=1e-5) and added to the referenced velocities. Bias columns and
-    * the objective's sufficient statistics are computed distributed
-    * ([[biasColumns]], [[biasCoefficients]]); the solve runs per mission
+    * the objective's sufficient statistics are computed distributed (the
+    * bias columns [[referenceShear]] added, else the same per-column
+    * sweep; [[biasCoefficients]]); the solve runs per mission
     * with O(missions x nY) driver memory — no full-grid collect, no
     * synthetic string mission key (grouping and the broadcast re-join use
     * the actual mission columns).
     */
   def calcBias(out: DataFrame, axes: Axes, spark: SparkSession): DataFrame = {
-    val withBias = biasColumns(out, axes)
+    val withBias =
+      if (Seq("__bias_e", "__bias_n").forall(out.columns.contains)) out
+      else profileSweep(out, out.columns.toSeq, axes, axes.yRes, Nil)
     val coeffs = biasCoefficients(withBias, axes, spark)
     // null-safe (<=>) join: a null mission key forms its own group in the
     // coefficient solve, so the re-join must match it too — a plain equality

@@ -16,8 +16,11 @@ import org.apache.spark.sql.types.DoubleType
   * `EnsureRequirements` places exactly one exchange and one sort under it.
   * The sweep reads its columns by ordinal and emits rows shaped as its
   * input row followed by the added double columns; the node projects them
-  * to the kept columns plus the added ones. The node is opaque to column
-  * pruning: everything it keeps is computed below it.
+  * to the kept columns plus the added ones. A read may name an added
+  * column: its ordinal is then the one it has in the emitted row, so one
+  * sweep can hand its rows to a second one (see
+  * `graft.core.InterpJoin.interpolateThen`) inside the same node. The node
+  * is opaque to column pruning: everything it keeps is computed below it.
   *
   * The planner strategy is added to a session's extra strategies the first
   * time the session builds a sweep. Dataset construction from a logical
@@ -26,7 +29,8 @@ import org.apache.spark.sql.types.DoubleType
 object SortedSweep {
 
   /** Given the ordinals of the `reads` columns and a same-key test, the
-    * function that maps one sorted partition.
+    * function that maps one sorted partition. An added column's ordinal
+    * counts from the end of the input row.
     */
   type Sweep = (Seq[Int], (InternalRow, InternalRow) => Boolean) =>
     Iterator[InternalRow] => Iterator[InternalRow]
@@ -34,7 +38,8 @@ object SortedSweep {
   /** `df`'s rows clustered by `keys`, sorted by `keys` ascending (nulls
     * first) then by `order` (column, ascending?) within each partition, fed
     * to `sweep`; the result holds the `keep` columns of `df` followed by
-    * one nullable double column per name in `added`.
+    * one nullable double column per name in `added`. `reads` name columns
+    * of `df` or of `added`.
     */
   def apply(df: DataFrame, keys: Seq[String], order: Seq[(String, Boolean)],
       reads: Seq[String], keep: Seq[String], added: Seq[String])(
@@ -53,7 +58,8 @@ object SortedSweep {
     classic.Dataset.ofRows(spark, SortedSweepNode(
       keep.map(attr) ++ addedAttrs, keys.map(attr),
       order.map { case (n, asc) => SortOrder(attr(n), if (asc) Ascending else Descending) },
-      reads.map(attr), addedAttrs, sweep, plan))
+      reads.map(n => addedAttrs.find(_.name == n).getOrElse(attr(n))),
+      addedAttrs, sweep, plan))
   }
 
   private object Strategy extends SparkStrategy {
@@ -102,11 +108,12 @@ case class SortedSweepExec(
 
   override protected def doExecute(): RDD[InternalRow] = {
     val in = child.output
-    val ordinals = reads.map(a => in.indexWhere(_.exprId == a.exprId))
+    val inAndAdded = in ++ added
+    val ordinals = reads.map(a => inAndAdded.indexWhere(_.exprId == a.exprId))
     val keyOrder = new InterpretedOrdering(
       keys.map(k => SortOrder(BindReferences.bindReference(k, in), Ascending)))
     val sameKey = (a: InternalRow, b: InternalRow) => keyOrder.compare(a, b) == 0
-    val (out, inAndAdded, f) = (output, in ++ added, sweep)
+    val (out, f) = (output, sweep)
     child.execute().mapPartitionsWithIndexInternal { (index, rows) =>
       val project = UnsafeProjection.create(out, inAndAdded)
       project.initialize(index)

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalatest.{Failed, Outcome, Succeeded}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.CacheScope
 import graft.pipeline._
 
 /** End-to-end pipeline test against the self-inverting fixture: the
@@ -9,18 +11,40 @@ import graft.pipeline._
   * sheared ENU current -> XYZ -> beams at true cell depths), so the
   * pipeline must recover the prescribed field near-exactly — a quantitative
   * golden with no external oracle (FIXTURES.md §4).
+  *
+  * Every pipeline call runs in its own [[CacheScope]], so a test leaves no
+  * cache entry and no persistent RDD behind; the tests share the shear
+  * output as files, not as a cache.
   */
 class AdcpPipelineSpec extends AnyFunSuite {
   val spark = TestSpark.spark
   import spark.implicits._
 
-  private lazy val gliderRaw = Fixture.glider(spark).cache()
-  private lazy val adcpRaw = Fixture.adcp(spark).cache()
+  private lazy val gliderRaw = Fixture.glider(spark)
+  private lazy val adcpRaw = Fixture.adcp(spark)
 
   private lazy val shearOut = {
-    val (a, g) = AdcpPipeline.shearFromAdcp(adcpRaw, gliderRaw, Fixture.opts,
-      Fixture.cellSize, Fixture.blankingDistance, solveHeading = false)
-    (a.cache(), g)
+    val dir = java.nio.file.Files.createTempDirectory("graft-shear-").toString
+    CacheScope.using { s =>
+      AdcpPipeline.shearFromAdcp(adcpRaw, gliderRaw, Fixture.opts,
+        Fixture.cellSize, Fixture.blankingDistance, solveHeading = false,
+        scope = s)._1.write.mode("overwrite").parquet(dir)
+    }
+    (spark.read.parquet(dir), GliderStages.deriveGlider(gliderRaw))
+  }
+
+  override def withFixture(test: NoArgTest): Outcome = {
+    val sc = spark.sparkContext
+    val cacheManager = spark.sharedState.cacheManager
+    val (rdds, cached) = (sc.getPersistentRDDs.keySet, !cacheManager.isEmpty)
+    super.withFixture(test) match {
+      case Succeeded =>
+        val left = sc.getPersistentRDDs.keySet -- rdds
+        if (left.nonEmpty) Failed(s"persistent RDDs left: $left")
+        else if (!cached && !cacheManager.isEmpty) Failed("cached data left")
+        else Succeeded
+      case other => other
+    }
   }
 
   test("pipeline recovers the prescribed ENU current field") {
@@ -112,16 +136,18 @@ class AdcpPipelineSpec extends AnyFunSuite {
   }
 
   test("velocity_from_shear produces a finite referenced grid") {
-    val (adcp, _) = shearOut
-    val glider = GliderStages.deriveGlider(gliderRaw)
-    val (ds, axes) = AdcpPipeline.velocityFromShear(adcp, glider, Fixture.opts, None, spark)
-    val stats = ds.agg(
-      count(when(col("ADCP_E").isNotNull && !isnan(col("ADCP_E")), 1)),
-      max(abs(col("ADCP_E"))), max(abs(col("ADCP_N")))).first()
-    assert(stats.getLong(0) > 50, s"too few finite ADCP_E cells: ${stats.getLong(0)}")
-    assert(stats.getDouble(1) < 2.0 && stats.getDouble(2) < 2.0,
-      "referenced velocities exploded")
-    assert(axes.nY >= 49 && axes.nProfiles == 6)
+    val (adcp, glider) = shearOut
+    CacheScope.using { s =>
+      val (ds, axes) = AdcpPipeline.velocityFromShear(adcp, glider, Fixture.opts,
+        None, spark, scope = s)
+      val stats = ds.agg(
+        count(when(col("ADCP_E").isNotNull && !isnan(col("ADCP_E")), 1)),
+        max(abs(col("ADCP_E"))), max(abs(col("ADCP_N")))).first()
+      assert(stats.getLong(0) > 50, s"too few finite ADCP_E cells: ${stats.getLong(0)}")
+      assert(stats.getDouble(1) < 2.0 && stats.getDouble(2) < 2.0,
+        "referenced velocities exploded")
+      assert(axes.nY >= 49 && axes.nProfiles == 6)
+    }
   }
 
   test("velocity_from_shear output carries the reference's variable breadth") {
@@ -129,10 +155,11 @@ class AdcpPipelineSpec extends AnyFunSuite {
     // dataset must carry the Sh grids, ADCP attitude grids, EVERY numeric
     // glider column (DAC and dead-reckoning derivations included), the
     // referenced velocities and the per-profile datetime.
-    val (adcp, _) = shearOut
-    val glider = GliderStages.deriveGlider(gliderRaw)
-    val (ds, axes) = AdcpPipeline.velocityFromShear(adcp, glider, Fixture.opts, None, spark)
-    val cols = ds.columns.toSet
+    val (adcp, glider) = shearOut
+    val cols = CacheScope.using { s =>
+      AdcpPipeline.velocityFromShear(adcp, glider, Fixture.opts, None, spark,
+        scope = s)._1.columns.toSet
+    }
     val expected = Set(
       "xbin", "ybin",
       "Sh_E", "Sh_N", "Sh_U",                       // exploded ADCP bin grids
@@ -148,39 +175,39 @@ class AdcpPipelineSpec extends AnyFunSuite {
     // excluded navigation/QC plumbing must NOT be gridded
     val excluded = GridOutput.gliderExcludeFromGrid & cols
     assert(excluded.isEmpty, s"excluded columns leaked into the grid: $excluded")
-    axes.release()
   }
 
   test("verify_depth_bias histograms and calc_bias variances are well-formed") {
-    val (adcp, _) = shearOut
-    val glider = GliderStages.deriveGlider(gliderRaw)
-    val (ds, axes) = AdcpPipeline.velocityFromShear(adcp, glider, Fixture.opts, None, spark)
-    val out = ds.cache()
+    val (adcp, glider) = shearOut
+    CacheScope.using { s =>
+      val (ds, axes) = AdcpPipeline.velocityFromShear(adcp, glider, Fixture.opts,
+        None, spark, scope = s)
+      val out = s.persist(ds)
 
-    val hist = GridOutput.verifyDepthBias(out, axes, spark).cache()
-    assert(hist.count() > 0, "no histogram cells produced")
-    val vars = hist.select("var").distinct().collect().map(_.getString(0)).toSet
-    assert(vars.subsetOf(Set("ADCP_E", "ADCP_N", "MAG")) && vars.nonEmpty)
-    val dirs = hist.select("direction").distinct().collect().map(_.getString(0)).toSet
-    assert(dirs.subsetOf(Set("N", "S")) && dirs.nonEmpty)
-    // np.histogram(density=True) parity: per group, sum(density * width) == 1
-    val unit = hist.groupBy("var", "slab", "direction")
-      .agg(sum(col("density") * (1.0 / 99)).as("mass"))
-      .agg(max(abs(col("mass") - 1.0))).first().getDouble(0)
-    assert(unit < 1e-9, s"histogram mass deviates from 1 by $unit")
+      val hist = s.persist(GridOutput.verifyDepthBias(out, axes, spark))
+      assert(hist.count() > 0, "no histogram cells produced")
+      val vars = hist.select("var").distinct().collect().map(_.getString(0)).toSet
+      assert(vars.subsetOf(Set("ADCP_E", "ADCP_N", "MAG")) && vars.nonEmpty)
+      val dirs = hist.select("direction").distinct().collect().map(_.getString(0)).toSet
+      assert(dirs.subsetOf(Set("N", "S")) && dirs.nonEmpty)
+      // np.histogram(density=True) parity: per group, sum(density * width) == 1
+      val unit = hist.groupBy("var", "slab", "direction")
+        .agg(sum(col("density") * (1.0 / 99)).as("mass"))
+        .agg(max(abs(col("mass") - 1.0))).first().getDouble(0)
+      assert(unit < 1e-9, s"histogram mass deviates from 1 by $unit")
 
-    val moments = GridOutput.verifyDepthBiasMoments(out, axes, spark)
-      .where(col("n") > 1).cache()
-    assert(moments.count() > 0)
-    val seOk = moments
-      .where(abs(col("se") - col("std") / sqrt(col("n"))) > 1e-12).count()
-    assert(seOk == 0, "standard error inconsistent with std/sqrt(n)")
+      val moments = s.persist(GridOutput.verifyDepthBiasMoments(out, axes, spark)
+        .where(col("n") > 1))
+      assert(moments.count() > 0)
+      val seOk = moments
+        .where(abs(col("se") - col("std") / sqrt(col("n"))) > 1e-12).count()
+      assert(seOk == 0, "standard error inconsistent with std/sqrt(n)")
 
-    val cb = GridOutput.verifyCalcBias(out, axes)
-    assert(cb.count() > 0)
-    assert(cb.where(col("var_e") < 0 || col("var_n") < 0 || col("var_mag") < 0)
-      .count() == 0, "negative variance")
-    out.unpersist(); hist.unpersist(); moments.unpersist(); axes.release()
+      val cb = GridOutput.verifyCalcBias(out, axes)
+      assert(cb.count() > 0)
+      assert(cb.where(col("var_e") < 0 || col("var_n") < 0 || col("var_mag") < 0)
+        .count() == 0, "negative variance")
+    }
   }
 
   test("verifyEnu recovers closed-form regime histograms and nan-means") {
@@ -272,41 +299,43 @@ class AdcpPipelineSpec extends AnyFunSuite {
   }
 
   test("csv export of the gridded dataset round-trips") {
-    val (adcp, _) = shearOut
-    val (grid, _) = AdcpPipeline.gridShear(adcp,
-      GliderStages.deriveGlider(gliderRaw), Fixture.opts)
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv-").toString
-    GridOutput.exportCsv(grid, dir)
-    val back = spark.read.option("header", "true").csv(dir)
-    assert(back.count() == grid.count())
+    val (adcp, glider) = shearOut
+    CacheScope.using { s =>
+      val (grid, _) = AdcpPipeline.gridShear(adcp, glider, Fixture.opts, scope = s)
+      val dir = java.nio.file.Files.createTempDirectory("graft-csv-").toString
+      GridOutput.exportCsv(grid, dir)
+      val back = spark.read.option("header", "true").csv(dir)
+      assert(back.count() == grid.count())
+    }
   }
 
   test("per-variable csv export re-reads to the tall grid exactly") {
-    val (adcp, _) = shearOut
-    val (grid, axes) = AdcpPipeline.gridShear(adcp,
-      GliderStages.deriveGlider(gliderRaw), Fixture.opts)
-    val vars = Seq("Sh_E", "Pitch")
-    val dir = java.nio.file.Files.createTempDirectory("graft-csvv-").toString
-    GridOutput.exportCsvPerVariable(grid, axes, dir, vars, singleFile = true)
-    vars.foreach { v =>
-      val back = spark.read.option("header", "true").csv(s"$dir/$v")
-      val xCols = back.columns.filterNot(_ == "ybin").toSeq
-      // melt the matrix back to tall (xbin, ybin, value)
-      val tall = back.select(col("ybin").cast("long"),
-          posexplode(array(xCols.map(c => col(c).cast("double")): _*))
-            .as(Seq("xi", "v_csv")))
-        .withColumn("xbin",
-          element_at(typedLit(xCols.map(_.toLong)), col("xi") + 1))
-        .drop("xi")
-      val joined = grid.select(col("xbin"), col("ybin"), col(v).as("v_grid"))
-        .join(tall, Seq("xbin", "ybin"), "full")
-      // every grid cell present with the identical value; csv cells not in
-      // the sparse tall grid must be empty
-      val bad = joined.where(
-        (col("v_grid").isNotNull =!= col("v_csv").isNotNull) ||
-        (col("v_grid").isNotNull &&
-          abs(col("v_grid") - col("v_csv")) > 1e-12)).count()
-      assert(bad == 0, s"$v: $bad csv cells diverge from the tall grid")
+    val (adcp, glider) = shearOut
+    CacheScope.using { s =>
+      val (grid, axes) = AdcpPipeline.gridShear(adcp, glider, Fixture.opts, scope = s)
+      val vars = Seq("Sh_E", "Pitch")
+      val dir = java.nio.file.Files.createTempDirectory("graft-csvv-").toString
+      GridOutput.exportCsvPerVariable(grid, axes, dir, vars, singleFile = true)
+      vars.foreach { v =>
+        val back = spark.read.option("header", "true").csv(s"$dir/$v")
+        val xCols = back.columns.filterNot(_ == "ybin").toSeq
+        // melt the matrix back to tall (xbin, ybin, value)
+        val tall = back.select(col("ybin").cast("long"),
+            posexplode(array(xCols.map(c => col(c).cast("double")): _*))
+              .as(Seq("xi", "v_csv")))
+          .withColumn("xbin",
+            element_at(typedLit(xCols.map(_.toLong)), col("xi") + 1))
+          .drop("xi")
+        val joined = grid.select(col("xbin"), col("ybin"), col(v).as("v_grid"))
+          .join(tall, Seq("xbin", "ybin"), "full")
+        // every grid cell present with the identical value; csv cells not in
+        // the sparse tall grid must be empty
+        val bad = joined.where(
+          (col("v_grid").isNotNull =!= col("v_csv").isNotNull) ||
+          (col("v_grid").isNotNull &&
+            abs(col("v_grid") - col("v_csv")) > 1e-12)).count()
+        assert(bad == 0, s"$v: $bad csv cells diverge from the tall grid")
+    }
     }
   }
 
@@ -346,22 +375,24 @@ class AdcpPipelineSpec extends AnyFunSuite {
         .withColumn("time_ns", col("time_ns") + lit(shiftNs))
     val glider2 = tag(gliderRaw, 1, 0L).unionByName(tag(gliderRaw, 2, shift))
     val adcp2 = tag(adcpRaw, 1, 0L).unionByName(tag(adcpRaw, 2, shift))
-    val (adcp, _) = AdcpPipeline.shearFromAdcp(adcp2, glider2, Fixture.opts,
-      Fixture.cellSize, Fixture.blankingDistance, solveHeading = false,
-      missionCols = Seq("mission"))
-    val cells = adcp
-      .select(col("mission"),
-        posexplode(arrays_zip(col("bin_depth"), col("e"))).as(Seq("i", "c")))
-      .select(col("mission"), col("c.bin_depth").as("z"), col("c.e"))
-      .where(col("e").isNotNull)
-      .withColumn("err", abs(col("e") - (lit(0.10) + lit(0.002) * col("z"))))
-    val byMission = cells.groupBy("mission")
-      .agg(count(lit(1)).as("n"), max("err").as("maxerr"))
-      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    assert(byMission.keySet == Set(1, 2))
-    byMission.foreach { case (m, (n, err)) =>
-      assert(n > 10000, s"mission $m too few cells: $n")
-      assert(err < 1e-6, s"mission $m error $err")
+    CacheScope.using { s =>
+      val (adcp, _) = AdcpPipeline.shearFromAdcp(adcp2, glider2, Fixture.opts,
+        Fixture.cellSize, Fixture.blankingDistance, solveHeading = false,
+        missionCols = Seq("mission"), scope = s)
+      val cells = adcp
+        .select(col("mission"),
+          posexplode(arrays_zip(col("bin_depth"), col("e"))).as(Seq("i", "c")))
+        .select(col("mission"), col("c.bin_depth").as("z"), col("c.e"))
+        .where(col("e").isNotNull)
+        .withColumn("err", abs(col("e") - (lit(0.10) + lit(0.002) * col("z"))))
+      val byMission = cells.groupBy("mission")
+        .agg(count(lit(1)).as("n"), max("err").as("maxerr"))
+        .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+      assert(byMission.keySet == Set(1, 2))
+      byMission.foreach { case (m, (n, err)) =>
+        assert(n > 10000, s"mission $m too few cells: $n")
+        assert(err < 1e-6, s"mission $m error $err")
+    }
     }
   }
 
@@ -377,22 +408,23 @@ class AdcpPipelineSpec extends AnyFunSuite {
         .withColumn("time_ns", col("time_ns") + lit(shiftNs))
     val glider2 = tag(gliderRaw, 1, 0L).unionByName(tag(gliderRaw, 2, shift))
     val adcp2 = tag(adcpRaw, 1, 0L).unionByName(tag(adcpRaw, 2, shift))
-    val (sheared, _) = AdcpPipeline.shearFromAdcp(adcp2, glider2, Fixture.opts,
-      Fixture.cellSize, Fixture.blankingDistance, solveHeading = false,
-      missionCols = Seq("mission"))
-    val (ds, axes) = AdcpPipeline.velocityFromShear(
-      sheared, GliderStages.deriveGlider(glider2), Fixture.opts, None, spark,
-      missionCols = Seq("mission"))
-    assert(axes.nProfiles == 12) // 6 per mission
-    val byMission = ds
-      .groupBy("mission")
-      .agg(count(when(col("ADCP_E").isNotNull && !isnan(col("ADCP_E")), 1)).as("n"),
-        max(abs(col("ADCP_E"))).as("mx_e"), max(abs(col("ADCP_N"))).as("mx_n"))
-      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
-    assert(byMission.keySet == Set(1, 2))
-    byMission.foreach { case (m, (n, mxE, mxN)) =>
-      assert(n > 50, s"mission $m too few finite ADCP_E cells: $n")
-      assert(mxE < 2.0 && mxN < 2.0, s"mission $m referenced velocities exploded")
+    CacheScope.using { s =>
+      val (sheared, _) = AdcpPipeline.shearFromAdcp(adcp2, glider2, Fixture.opts,
+        Fixture.cellSize, Fixture.blankingDistance, solveHeading = false,
+        missionCols = Seq("mission"), scope = s)
+      val (ds, axes) = AdcpPipeline.velocityFromShear(
+        sheared, GliderStages.deriveGlider(glider2), Fixture.opts, None, spark,
+        missionCols = Seq("mission"), scope = s)
+      assert(axes.nProfiles == 12) // 6 per mission
+      val byMission = ds
+        .groupBy("mission")
+        .agg(count(when(col("ADCP_E").isNotNull && !isnan(col("ADCP_E")), 1)).as("n"),
+          max(abs(col("ADCP_E"))).as("mx_e"), max(abs(col("ADCP_N"))).as("mx_n"))
+        .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
+      assert(byMission.keySet == Set(1, 2))
+      byMission.foreach { case (m, (n, mxE, mxN)) =>
+        assert(n > 50, s"mission $m too few finite ADCP_E cells: $n")
+        assert(mxE < 2.0 && mxN < 2.0, s"mission $m referenced velocities exploded")
     }
     // per-mission equality with the single-mission run: same fixture, so
     // every (xbin, ybin) cell must agree across the two missions
@@ -407,16 +439,18 @@ class AdcpPipelineSpec extends AnyFunSuite {
     assert(nCmp > 50, s"too few comparable cells: $nCmp")
     val maxDiff = cmp.agg(max(abs(col("e1") - col("e2")))).first().getDouble(0)
     assert(maxDiff < 1e-9, s"missions diverged: $maxDiff")
-    axes.release()
+    }
   }
 
   test("grid_shear entry point grids the three shear components") {
     val (adcp, glider) = shearOut
-    val (grid, axes) = AdcpPipeline.gridShear(adcp, GliderStages.deriveGlider(gliderRaw), Fixture.opts)
-    val r = grid.agg(count(lit(1)), avg("sh_e")).first()
-    assert(r.getLong(0) > 100)
-    assert(math.abs(r.getDouble(1) - 0.002) < 2e-4)
-    assert(axes.nX == 5)
+    CacheScope.using { s =>
+      val (grid, axes) = AdcpPipeline.gridShear(adcp, glider, Fixture.opts, scope = s)
+      val r = grid.agg(count(lit(1)), avg("sh_e")).first()
+      assert(r.getLong(0) > 100)
+      assert(math.abs(r.getDouble(1) - 0.002) < 2e-4)
+      assert(axes.nX == 5)
+    }
   }
 
   test("netCDF converter output round-trips through shearFromAdcp") {
@@ -435,11 +469,13 @@ class AdcpPipelineSpec extends AnyFunSuite {
     val adcpNc = spark.read.parquet(s"$out/adcp.parquet")
     val btNc = spark.read.parquet(s"$out/bt.parquet")
     assert(adcpNc.count() == 1200 && btNc.count() == 200)
-    val (a, _) = AdcpPipeline.shearFromAdcp(adcpNc, gliderRaw, Fixture.opts,
-      Fixture.cellSize, Fixture.blankingDistance, solveHeading = false)
-    val withBt = GliderStages.bottomTrack(Fixture.opts)(a, btNc)
-    val r = withBt.agg(count(lit(1)),
-      count(col("sh_e")), count(col("bt_e"))).first()
+    val r = CacheScope.using { s =>
+      val (a, _) = AdcpPipeline.shearFromAdcp(adcpNc, gliderRaw, Fixture.opts,
+        Fixture.cellSize, Fixture.blankingDistance, solveHeading = false,
+        scope = s)
+      GliderStages.bottomTrack(Fixture.opts)(a, btNc).agg(count(lit(1)),
+        count(col("sh_e")), count(col("bt_e"))).first()
+    }
     assert(r.getLong(0) > 0, "no pings survived the pipeline")
     assert(r.getLong(1) > 0, "no shear cells from converted input")
     assert(r.getLong(2) > 0, "no bottom-track matches from converted input")

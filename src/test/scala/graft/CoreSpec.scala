@@ -109,7 +109,7 @@ class WindowsSpec extends AnyFunSuite {
     val df = Seq((1L, 1.0, Some(1.0)), (1L, 2.0, None), (1L, 3.0, None),
       (1L, 4.0, Some(4.0))).toDF("k", "t", "v")
     val got = df.select(col("t"), Windows.ffill(col("v"), w).as("f"),
-        Windows.bfill(col("v"), Seq(col("t")), Seq(col("k"))).as("b"))
+        WindowVelocity.bfill(col("v"), Seq(col("t")), Seq(col("k"))).as("b"))
       .orderBy("t").collect().map(r => (r.getDouble(1), r.getDouble(2)))
     assert(got.toSeq == Seq((1.0, 1.0), (1.0, 4.0), (1.0, 4.0), (4.0, 4.0)))
   }
