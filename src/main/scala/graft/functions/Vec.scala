@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Embedding-vector algebra as pure Column expressions over
   * `array<float|double>` columns. Folds are written as strict left-to-right
@@ -10,8 +11,11 @@ import org.apache.spark.sql.functions._
   */
 object Vec {
 
-  /** Cast an array<float> column to array<double> once, up front. */
-  def asDouble(a: Column): Column = transform(a, x => x.cast("double"))
+  /** Cast an array<float> column to array<double> once, up front: the same
+    * per-element widening as a `transform` lambda, but compiled, and
+    * dropped by the optimizer when the column already is array<double>.
+    */
+  def asDouble(a: Column): Column = a.cast(ArrayType(DoubleType))
 
   /** Sequential-fold dot product. */
   def dot(a: Column, b: Column): Column =

@@ -1,18 +1,31 @@
 package graft.pipeline
 
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Teos10
 import graft.core.InterpJoin
+import graft.plans.ArrayKernels.{affine, combine, gradient, mask, rotate}
 
 /** The reference's elementwise + regrid ADCP stages (SURVEY.md §2.6-2.7) as
   * lazily-composed `DataFrame => DataFrame` functions over the per-ping
   * wide form. Every stage is a narrow map (no shuffle) except `align`
   * (one interp-join sort and sweep) and the correlation aggregate in `regrid`.
+  * The per-bin math runs in the native kernels of
+  * [[graft.plans.ArrayKernels]]; each stage adds its columns in one
+  * projection.
   */
 object AdcpStages {
 
   private def d2r(x: Column): Column = radians(x)
+
+  /** Adds or replaces the columns in one projection, in the given order. */
+  private def withCols(df: DataFrame, cols: (String, Column)*): DataFrame =
+    df.withColumns(ListMap(cols: _*))
+
+  /** `p·a + q·b` per bin. */
+  private def lin(a: Column, b: Column, p: Double, q: Double): Column =
+    combine(a, b, lit(p), lit(q))
 
   /** Glider -> ADCP timeline alignment: linear interpolation of glider
     * lat/lon/profile/salinity/declination/soundspeed onto ping times
@@ -53,10 +66,10 @@ object AdcpStages {
     val t2 = theta(25.0, r * s, p)
     val t3 = theta(47.5, -p * s, r)
     val t4 = theta(25.0, -r * s, p)
-    Seq(("1", t1), ("2", t2), ("3", t3), ("4", t4)).foldLeft(adcp) {
-      case (df, (b, th)) =>
-        df.withColumn(s"d$b", transform(col("ranges"), z => col("depth") - dir * z * cos(th)))
-    }
+    // depth - dir*z*cos(th) == depth + (-dir*cos(th))*z exactly: dir is ±1
+    withCols(adcp, Seq(("1", t1), ("2", t2), ("3", t3), ("4", t4)).map {
+      case (b, th) => s"d$b" -> affine(col("ranges"), -dir * cos(th), col("depth"))
+    }: _*)
   }
 
   /** First-bin discard (notebook cell 48 / tests/test_adcp_processing.py:16
@@ -70,9 +83,8 @@ object AdcpStages {
         Schema.beams.flatMap(b => Seq(s"vel$b", s"corr$b", s"amp$b"))
       // the length is what is left, not Int.MaxValue: Spark's interpreted
       // slice adds it to the start and overflows to an empty array
-      arrayCols.foldLeft(adcp) { (df, c) =>
-        df.withColumn(c, slice(col(c), lit(n + 1), greatest(size(col(c)) - n, lit(0))))
-      }
+      withCols(adcp, arrayCols.map(c =>
+        c -> slice(col(c), lit(n + 1), greatest(size(col(c)) - n, lit(0)))): _*)
     }
 
   /** Soundspeed correction (process_adcp.py:464-475): V *= c_new/c_old,
@@ -82,11 +94,9 @@ object AdcpStages {
     if (adcp.columns.contains("no_sal_speed_of_sound")) adcp
     else {
       val ratio = col("glider_soundspeed") / col("no_sal_speed_of_sound")
-      Schema.beams.foldLeft(
-          adcp.withColumnRenamed("speed_of_sound", "no_sal_speed_of_sound")
-            .withColumn("speed_of_sound", col("glider_soundspeed"))) { (df, b) =>
-        df.withColumn(s"vel$b", ArrayOps.scale(col(s"vel$b"), ratio))
-      }
+      withCols(adcp.withColumnRenamed("speed_of_sound", "no_sal_speed_of_sound"),
+        ("speed_of_sound" -> col("glider_soundspeed")) +:
+          Schema.beams.map(b => s"vel$b" -> affine(col(s"vel$b"), ratio)): _*)
     }
 
   /** QC thresholds (remove_outliers, process_adcp.py:478-566): null cells
@@ -94,15 +104,9 @@ object AdcpStages {
     * reference's 0/1-NaN mask products as null-propagating conditionals.
     */
   def removeOutliers(opts: Options)(adcp: DataFrame): DataFrame =
-    Schema.beams.foldLeft(adcp) { (df, b) =>
-      val v = col(s"vel$b")
-      val masked = zip_with(v, zip_with(col(s"corr$b"), col(s"amp$b"), (c, a) => struct(c.as("c"), a.as("a"))),
-        (vel, ca) => when(
-          ca.getField("c") >= opts.correlationThreshold &&
-            ca.getField("a") <= opts.amplitudeThreshold &&
-            abs(vel) <= opts.velocityThreshold, vel))
-      df.withColumn(s"vel$b", masked)
-    }
+    withCols(adcp, Schema.beams.map(b => s"vel$b" ->
+      mask(col(s"vel$b"), col(s"corr$b"), col(s"amp$b"), opts.correlationThreshold,
+        opts.amplitudeThreshold, opts.velocityThreshold)): _*)
 
   /** Backscatter correction (process_adcp.py:787-873): beam range
     * stretch by beam angle, Francois-Garrison attenuation from interpolated
@@ -113,16 +117,14 @@ object AdcpStages {
     val bCos = math.cos(math.toRadians(25.0))
     val alpha = Teos10.francoisGarrison(opts.soundFreqKhz,
       col("salinity"), col("temperature"), opts.ph, col("depth"))
-    val withRanges = Seq("1" -> aCos, "2" -> bCos, "3" -> aCos, "4" -> bCos)
-      .foldLeft(adcp.withColumn("acoustic_attenuation", alpha)) {
-        case (df, (b, cosang)) =>
-          df.withColumn(s"beam_range$b", transform(col("ranges"), z => z / cosang))
-      }
-    Schema.beams.foldLeft(withRanges) { (df, b) =>
-      df.withColumn(s"amp_new$b",
-        zip_with(col(s"amp$b"), col(s"beam_range$b"),
-          (amp, rng) => amp + lit(2.0) * col("acoustic_attenuation") * rng))
-    }
+    val withRanges = withCols(adcp, ("acoustic_attenuation" -> alpha) +:
+      Seq("1" -> aCos, "2" -> bCos, "3" -> aCos, "4" -> bCos).map {
+        case (b, cosang) => s"beam_range$b" -> affine(col("ranges"), lit(1.0), d = cosang)
+      }: _*)
+    // amp + 2*alpha*range
+    withCols(withRanges, Schema.beams.map(b => s"amp_new$b" ->
+      combine(col(s"amp$b"), col(s"beam_range$b"), lit(1.0),
+        lit(2.0) * col("acoustic_attenuation"))): _*)
   }
 
   /** 4-beam XYZZ transform (quad_beam2xyzz, process_adcp.py:595-667): the
@@ -131,23 +133,30 @@ object AdcpStages {
   private val M1 = 0.6782; private val M2 = 1.1831
   private val M3 = 0.7400; private val M4 = 0.5518
 
-  def beamToXyzz(adcp: DataFrame): DataFrame =
-    adcp
-      .withColumn("x4", zip_with(col("vel1"), col("vel3"), (a, b) => lit(M1) * a - lit(M1) * b))
-      .withColumn("y4", zip_with(col("vel2"), col("vel4"), (a, b) => lit(-M2) * a + lit(M2) * b))
-      .withColumn("z4", zip_with(col("vel1"), col("vel3"), (a, b) => lit(M3) * a + lit(M3) * b))
-      .withColumn("zz4", zip_with(col("vel2"), col("vel4"), (a, b) => lit(M4) * a + lit(M4) * b))
+  def beamToXyzz(adcp: DataFrame): DataFrame = {
+    val (v1, v2, v3, v4) = (col("vel1"), col("vel2"), col("vel3"), col("vel4"))
+    withCols(adcp,
+      "x4" -> lin(v1, v3, M1, -M1),
+      "y4" -> lin(v2, v4, -M2, M2),
+      "z4" -> lin(v1, v3, M3, M3),
+      "zz4" -> lin(v2, v4, M4, M4))
+  }
 
   /** Inverse transform (quad_xyzz2beam, :638-655) in closed form:
     * V1 = X/(2*M1) + Z/(2*M3), V3 = -X/(2*M1) + Z/(2*M3),
     * V2 = -Y/(2*M2) + ZZ/(2*M4), V4 = Y/(2*M2) + ZZ/(2*M4).
     */
-  def xyzzToBeam(adcp: DataFrame): DataFrame =
-    adcp
-      .withColumn("vel1", zip_with(col("x4"), col("z4"), (x, z) => x / (2 * M1) + z / (2 * M3)))
-      .withColumn("vel3", zip_with(col("x4"), col("z4"), (x, z) => -x / (2 * M1) + z / (2 * M3)))
-      .withColumn("vel2", zip_with(col("y4"), col("zz4"), (y, zz) => -y / (2 * M2) + zz / (2 * M4)))
-      .withColumn("vel4", zip_with(col("y4"), col("zz4"), (y, zz) => y / (2 * M2) + zz / (2 * M4)))
+  def xyzzToBeam(adcp: DataFrame): DataFrame = {
+    // a/da + b/db, each term divided (not multiplied by an inverse) as
+    // written; -x/d == x/-d exactly
+    def sum(a: String, da: Double, b: String, db: Double) =
+      lin(affine(col(a), lit(1.0), d = da), affine(col(b), lit(1.0), d = db), 1.0, 1.0)
+    withCols(adcp,
+      "vel1" -> sum("x4", 2 * M1, "z4", 2 * M3),
+      "vel3" -> sum("x4", -2 * M1, "z4", 2 * M3),
+      "vel2" -> sum("y4", -2 * M2, "zz4", 2 * M4),
+      "vel4" -> sum("y4", 2 * M2, "zz4", 2 * M4))
+  }
 
   /** Shear correction (_shear_correction, process_adcp.py:682-768): mean
     * per-bin profile of rows within the speed band (|spd - L| < dL/2 for the
@@ -164,8 +173,10 @@ object AdcpStages {
     val nBins = band.select(size(col(varName))).first().getInt(0)
     // per-ping diff across bin FIRST, then nan-skipping mean over time
     // (xarray diff('bin').mean('time') — the order matters under NaN).
-    val diffArr = transform(sequence(lit(1), lit(nBins - 1)), i =>
-      element_at(col(varName), i + 1) - element_at(col(varName), i))
+    // A row shorter than nBins yields fewer diffs, which the mean skips
+    // as it skips nulls.
+    val diffArr = lin(slice(col(varName), 2, nBins - 1),
+      slice(col(varName), 1, nBins - 1), 1.0, -1.0)
     val binMeans = band
       .select(posexplode(diffArr).as(Seq("bin", "dv")))
       .groupBy("bin").agg(avg("dv").as("m"))
@@ -176,7 +187,7 @@ object AdcpStages {
     val refMean = if (finite.isEmpty) 0.0 else finite.sum / finite.size
     val ref = cum.map(_ - refMean)
     adcp.withColumn(varName,
-      zip_with(col(varName), array(ref.map(lit): _*), (v, c) => v - c))
+      lin(col(varName), typedLit(ref), 1.0, -1.0))
   }
 
   /** Per-ping regrid onto the fixed depth-offset ladder (regridADCPdata,
@@ -204,16 +215,12 @@ object AdcpStages {
     val offsets = (0 until math.ceil((maxDistance + cellSize) / (cellSize / 2)).toInt)
       .map(_ * cellSize / 2 * opts.direction)
     val targets = typedLit(offsets)
-    // native Catalyst expression (StaticInvoke, codegen-friendly) — the
-    // UDF form lives in ArrayOps.interpToTargets for API completeness
-    val withV = Schema.beams.foldLeft(adcp) { (df, b) =>
-      df.withColumn(s"v$b", graft.plans.NativeInterp.interpCol(adcp.sparkSession,
-        transform(col(s"d$b"), dd => col("depth") - dd),
-        col(s"vel$b"), targets))
-    }
-    withV
-      .withColumn("depth_offsets", targets)
-      .withColumn("bin_depth", transform(targets, o => col("depth") - o))
+    def belowPing(a: Column) = affine(a, lit(-1.0), col("depth")) // depth - a
+    withCols(adcp, Schema.beams.map(b => s"v$b" ->
+      graft.plans.NativeInterp.interpCol(adcp.sparkSession,
+        belowPing(col(s"d$b")), col(s"vel$b"), targets)) ++ Seq(
+      "depth_offsets" -> targets,
+      "bin_depth" -> belowPing(targets)): _*)
   }
 
   /** 3-beam XYZ solution (calcXYZfrom3beam, process_adcp.py:984-1130):
@@ -227,10 +234,10 @@ object AdcpStages {
     val aTf = 1.0 / (2 * sinD(tf)); val aTs = 1.0 / (2 * sinD(ts))
     val bTf = 1.0 / (4 * cosD(tf)); val bTs = 1.0 / (4 * cosD(ts))
 
+    val zsum = lin(col("v2"), col("v4"), 2 * bTs, 2 * bTs)
+    // (zsum - 2*bTf*good) / (2*bTf)
     def replacedBy(good: Column): Column =
-      zip_with(zip_with(col("v2"), col("v4"), (v2, v4) =>
-          lit(2 * bTs) * v2 + lit(2 * bTs) * v4), good,
-        (zsum, g) => (zsum - lit(2 * bTf) * g) / lit(2 * bTf))
+      affine(lin(zsum, good, 1.0, -2 * bTf), lit(1.0), d = 2 * bTf)
 
     val upcast = col("pitch") > 0.0
     // top-mounted: replace fore(V1) by aft on downcasts, aft(V3) by fore on
@@ -243,12 +250,10 @@ object AdcpStages {
         (when(upcast, replacedBy(col("v3"))).otherwise(col("v1")),
           when(!upcast, replacedBy(col("v1"))).otherwise(col("v3")))
 
-    adcp
-      .withColumn("v1n", v1New).withColumn("v3n", v3New)
-      .withColumn("x", zip_with(col("v1n"), col("v3n"), (a, b) => lit(aTf) * a - lit(aTf) * b))
-      .withColumn("y", zip_with(col("v2"), col("v4"), (a, b) => lit(-aTs) * a + lit(aTs) * b))
-      .withColumn("z", zip_with(col("v2"), col("v4"), (a, b) => lit(2 * bTs) * a + lit(2 * bTs) * b))
-      .drop("v1n", "v3n")
+    withCols(adcp,
+      "x" -> lin(v1New, v3New, aTf, -aTf),
+      "y" -> lin(col("v2"), col("v4"), -aTs, aTs),
+      "z" -> zsum)
   }
 
   /** XYZ -> ENU rotation + shear (calcENUfromXYZ, process_adcp.py:1133-1240):
@@ -271,14 +276,12 @@ object AdcpStages {
     val m21 = cos(pp) * sin(rr)
     val m22 = cos(pp) * cos(rr)
     def rot(c0: Column, c1: Column, c2: Column): Column =
-      zip_with(col("x"), zip_with(col("y"), col("z"), (y, z) => struct(y.as("y"), z.as("z"))),
-        (x, yz) => c0 * x + c1 * yz.getField("y") * dir + c2 * yz.getField("z") * dir)
-    adcp
-      .withColumn("e", rot(m00, m01, m02))
-      .withColumn("n", rot(m10, m11, m12))
-      .withColumn("u", rot(m20, m21, m22))
-      .withColumn("sh_e", ArrayOps.gradientUnit(col("e")))
-      .withColumn("sh_n", ArrayOps.gradientUnit(col("n")))
-      .withColumn("sh_u", ArrayOps.gradientUnit(col("u")))
+      rotate(col("x"), col("y"), col("z"), c0, c1, c2, dir)
+    withCols(
+      withCols(adcp,
+        "e" -> rot(m00, m01, m02),
+        "n" -> rot(m10, m11, m12),
+        "u" -> rot(m20, m21, m22)),
+      Seq("e", "n", "u").map(c => s"sh_$c" -> gradient(col(c))): _*)
   }
 }

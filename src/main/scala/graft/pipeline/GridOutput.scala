@@ -534,7 +534,7 @@ object GridOutput {
     val w = Window.partitionBy(missionCols.map(col): _*)
       .orderBy(col(timeUsCol))
     val g = adcp.where(col(pressureCol) > 10.0)
-      .withColumn("__u", ArrayOps.arrayMean(col(uCol)))
+      .withColumn("__u", graft.plans.ArrayKernels.mean(col(uCol)))
       .withColumn("__dp", graft.core.Windows.gradient(col(depthCol),
         col(timeUsCol).cast("double") / 1e6, w))
       .withColumn("__d", col("__dp") - col("__u"))

@@ -31,7 +31,9 @@ object Natives {
     native("graft_nfc", classOf[NativeNormalize.type],
       NativeNormalize.builder("nfc")),
     native("graft_strip_accents", classOf[NativeNormalize.type],
-      NativeNormalize.builder("stripAccents")))
+      NativeNormalize.builder("stripAccents"))) ++
+    ArrayKernels.kernels.map(k =>
+      native(k.name, classOf[ArrayKernels.type], k.builder))
 
   /** Registers every native the session's registry lacks. A second call
     * registers nothing, and a concurrent one re-registers the same

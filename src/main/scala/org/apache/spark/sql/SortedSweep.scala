@@ -89,6 +89,9 @@ case class SortedSweepExec(
     reads: Seq[Attribute], added: Seq[Attribute], sweep: SortedSweep.Sweep,
     child: SparkPlan) extends UnaryExecNode {
 
+  // the added columns come from the sweep, not from the child
+  override def producedAttributes: AttributeSet = AttributeSet(added)
+
   override def requiredChildDistribution: Seq[Distribution] =
     if (keys.isEmpty) AllTuples :: Nil else ClusteredDistribution(keys) :: Nil
 

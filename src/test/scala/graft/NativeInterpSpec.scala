@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.pipeline.ArrayOps
 import graft.plans.NativeInterp
 
 class NativeInterpSpec extends AnyFunSuite {
@@ -25,7 +24,7 @@ class NativeInterpSpec extends AnyFunSuite {
     val df = cases.toDF("xs", "ys").withColumn("t", typedlit(targets))
     val both = df.select(
       NativeInterp.interpCol(spark, col("xs"), col("ys"), col("t")).as("native"),
-      ArrayOps.interpToTargets(col("xs"), col("ys"), col("t")).as("udf"))
+      HofArrayOps.interpToTargets(col("xs"), col("ys"), col("t")).as("udf"))
     both.collect().foreach { r =>
       assert(r.getSeq[Any](0) == r.getSeq[Any](1),
         s"native=${r.getSeq[Any](0)} udf=${r.getSeq[Any](1)}")

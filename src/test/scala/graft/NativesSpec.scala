@@ -10,9 +10,11 @@ class NativesSpec extends AnyFunSuite {
   val spark = TestSpark.spark
 
   private val names = Seq("graft_interp", "graft_hash48", "graft_dot",
-    "graft_top_cells", "graft_nfc", "graft_strip_accents")
+    "graft_top_cells", "graft_nfc", "graft_strip_accents", "graft_affine",
+    "graft_combine", "graft_mask", "graft_rotate", "graft_gradient",
+    "graft_mean")
 
-  test("the native list holds the six functions") {
+  test("the native list holds the twelve functions") {
     assert(Natives.all.map(_._1.funcName).sorted == names.sorted)
   }
 
